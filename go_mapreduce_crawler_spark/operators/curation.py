@@ -1033,7 +1033,7 @@ def q_domain_mixture_mw(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     # words_all feeds the total, the unigram model, the unigram margins
     # AND the N scalar — four plan references, each re-running the
-    # corpus explode without a cache (same fix as _bm25_base)
+    # corpus explode without a cache
     words_all = (d.select(F.explode(F.split("text", " ")).alias("word"))
                  .cache())
     total = words_all.agg(F.count(F.lit(1)).alias("total"))

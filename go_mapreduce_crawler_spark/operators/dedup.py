@@ -90,9 +90,8 @@ def _enforce_exact_pair_bound(d: DataFrame, op: str,
     corpus.  limit(N+1).count() answers over/under without a full scan;
     callers pass the documents DF before any tokenization.  The bound
     is read at call time so deployments can retune the module constant.
-    A passing probe is cached per (corpus_key, bound) — the
-    similarity._GATE_PROBED pattern — so repeat calls on the same
-    fixture (family_overlap, bench best-of-3) pay it once.
+    A passing probe is cached per (corpus_key, bound), so repeat calls
+    on the same fixture (family_overlap, bench best-of-3) pay it once.
 
     IMMUTABILITY ASSUMPTION (r09 advice item 2): the cache key is the
     corpus PATH, so a fixture rewritten/grown in-process after a

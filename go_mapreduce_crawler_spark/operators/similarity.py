@@ -1,6 +1,12 @@
 """Similarity search over the ``embeddings`` table (array<float>, 64-dim).
 
-Two paths, per the north-star plan:
+The request-serving entry points — knn_bruteforce_cosine,
+ann_ivf_cosine, ann_lsh_cosine and the hybrid family's lexical and
+dense arms — are thin wrappers over ``retrieval_index``: the corpus
+side (norms, IVF cells, LSH sketches, BM25 postings) is built once per
+corpus version and held there, and each wrapper derives only its query
+set per request (the vec_id % 100 == 0 seeds, the seed documents' top
+terms) and calls the index's knn / ivf / lsh / bm25 search.
 
 * brute-force cosine top-k — exact baseline.  Query set x corpus join
   with the query side broadcast (queries are few), cosine via JVM-side
@@ -10,9 +16,14 @@ Two paths, per the north-star plan:
   all-pairs — that's what the LSH variant is for.
 
 * random-hyperplane LSH ANN — the scale path.  Sign-bit sketch against
-  H fixed hyperplanes (seeded, deterministic, broadcast as literals),
-  multi-probe over bands, cosine re-rank within buckets.  Shuffles only
-  (bucket, id) pairs; never quadratic.
+  H fixed hyperplanes (seeded, deterministic), multi-probe over bands,
+  cosine re-rank within buckets.  Shuffles only (bucket, id) pairs;
+  never quadratic.
+
+* IVF ANN — coarse quantization to frozen centroids, probe re-rank.
+
+A zero vector's cosine is NULL (never a divide-by-zero error) and ranks
+last; the oracles state the same contract.
 """
 
 from __future__ import annotations
@@ -26,19 +37,12 @@ from pyspark.sql import Window as W
 
 from ..functions.vectors import dot, l2_norm
 from ..sources.tables import load_table, spread
+from .retrieval_index import (DIM, IVF_CELLS, LSH_BANDS_ANN,
+                              N_PLANES, cell_scores_sql, cosine,
+                              first_rows, index_for, ivf_centroids,
+                              lsh_planes, salted_topk)
 
 TOP_K = 10
-DIM = 64
-N_PLANES = 48
-# 12 bands x 4 bits.  Per-bit agreement for a pair at angle theta is
-# 1 - theta/pi: ~0.63-0.67 for this corpus's true neighbors (cos
-# 0.3-0.5) vs 0.5 for random pairs.  Band-match then ~0.63^4 = 0.16 for
-# neighbors -> >=1-of-12 ~ 0.88 recall, vs 0.5^4 = 0.0625 for random ->
-# ~54% candidate volume (a ~2x cut).  Weakly-similar corpora like this
-# one are LSH's worst case — the neighbor/random gap per bit is small;
-# clustered real-world embeddings (neighbors at cos > 0.8) give the
-# same b/r a 50-100x cut instead.
-LSH_BANDS_ANN = 12
 
 # Every similarity search ships its query set whole — broadcast
 # (bruteforce, IVF), kernel closure (pandas), or bucket-local id sets
@@ -51,63 +55,18 @@ LSH_BANDS_ANN = 12
 KNN_MAX_QUERIES = 100_000
 
 
-# Corpus paths whose query set already passed the gate this session —
-# the probe is one tiny Spark job, but repeated invocations (bench
-# best-of-2, interactive reuse) shouldn't re-pay it.  A corpus that
-# grows IN PLACE under the same path within one session re-probes only
-# on restart; the gate still refuses every new path.
-_GATE_PROBED: set[str] = set()
-
-
-def _gate_query_set(qdf, op_name: str, corpus_key: str | None = None):
-    """Refuse oversized query sets (limit-probe, not a full count —
-    same pattern as dedup.EMBED_DEDUP_MAX_ROWS)."""
-    if corpus_key is not None and corpus_key in _GATE_PROBED:
-        return qdf
-    if qdf.limit(KNN_MAX_QUERIES + 1).count() > KNN_MAX_QUERIES:
+def _gate(spark, sf_dir, op_name: str):
+    """Refuse oversized query sets.  The seed count is probed once per
+    corpus version and held on its retrieval index (a corpus rewritten
+    in place gets a new probe); the bound is read on every call, so a
+    tightened KNN_MAX_QUERIES is never bypassed.  Returns the index."""
+    ix = index_for(spark, sf_dir)
+    if ix.seed_count() > KNN_MAX_QUERIES:
         raise ValueError(
             f"{op_name}: query set exceeds the {KNN_MAX_QUERIES}-row "
             f"broadcast/closure bound; batch the query set or use a "
             f"shuffle join on query ids at this scale.")
-    if corpus_key is not None:
-        _GATE_PROBED.add(corpus_key)
-    return qdf
-
-
-def _emb(spark, sf_dir):
-    """embeddings, spread to engine parallelism — the corpus side of the
-    scoring joins carries the per-row fold work (see dedup._docs).
-    Gated: no shuffle when the scan already yields enough splits."""
-    return spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
-
-
-def q_knn_bruteforce(spark, sf_dir):
-    """Exact cosine top-10 neighbors for each query vector.
-
-    Norms are folded ONCE per row on each side before the pair join, so
-    each of the |Q| x |corpus| pairs costs one dot-product fold instead
-    of three (dot + two norms) — 3x less per-pair work, and the norm
-    column is 8 bytes per row.  sqrt/division order matches cosine_sim
-    exactly, so scores are bit-identical to the naive form (and to the
-    DuckDB oracle).
-
-    Deterministic: rank on (rounded score desc, vec_id) — the rounding is
-    part of the operator contract so results are reproducible across
-    engines and partitionings.
-    """
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    q = F.broadcast(_gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "knn_bruteforce_cosine", sf_dir)
-        .select(F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_vec"),
-                F.col("nrm").alias("q_nrm")))
-    scored = (q.join(e, F.col("vec_id") != F.col("q_id"))
-               .withColumn("cos", F.round(
-                   dot("q_vec", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6)))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") <= TOP_K)
-                  .select("q_id", F.col("vec_id").alias("neighbor_id"), "cos", "rk"))
+    return ix
 
 
 def _dot_sql(vec_col: str, values) -> str:
@@ -124,111 +83,53 @@ def _dot_sql(vec_col: str, values) -> str:
             " (x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, x) -> acc + x)")
 
 
-def _ann_bucket_kernel(planes: np.ndarray, n_bands: int, r: int):
-    """Sign-bit LSH (vec_id, bucket) pairs as ONE Arrow-vectorized matmul.
+def _seeds(ix):
+    """The seed query set — every corpus vector with vec_id % 100 == 0 —
+    as (q_id, q_vec, q_nrm), read from the index per request."""
+    return (ix.vectors.vec.filter(F.col("vec_id") % 100 == 0)
+            .select(F.col("vec_id").alias("q_id"),
+                    F.col("embedding").alias("q_vec"),
+                    F.col("nrm").alias("q_nrm")))
 
-    Per batch: (n x DIM) @ (DIM x H) -> sign bits -> pack each band's r
-    bits into an int; key = band << 16 | bits; the band explode is a
-    numpy repeat inside the kernel.  Replaces a generated 48-fold SQL
-    expression that cost ~1.7s of driver-side construction + JVM parse
-    and ~0.6s of interpreted execution PER CALL at sf0.1 — the matmul
-    form is a tiny plan and microseconds of compute, and the planes ride
-    in the closure (shipped once per executor).  Bucketing is the
-    identical partition of vectors (same planes, same bands), so recall
-    characteristics are unchanged.
+
+def _emb(spark, sf_dir):
+    """embeddings, spread to engine parallelism — the corpus side of the
+    scoring joins carries the per-row fold work (see dedup._docs).
+    Gated: no shuffle when the scan already yields enough splits."""
+    return spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
+
+
+def q_knn_bruteforce(spark, sf_dir):
+    """Exact cosine top-10 neighbors for each query vector.
+
+    Norms are folded ONCE per row on each side before the pair join (the
+    corpus side's are held by the index), so each of the |Q| x |corpus|
+    pairs costs one dot-product fold instead of three (dot + two norms).
+    sqrt/division order matches cosine_sim exactly, so scores are
+    bit-identical to the naive form (and to the DuckDB oracle).
+
+    Deterministic: rank on (rounded score desc, vec_id) — the rounding is
+    part of the operator contract so results are reproducible across
+    engines and partitionings.
     """
-    import pandas as pd
-
-    weights = (1 << np.arange(r)[::-1]).astype(np.int64)
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            # Sequential per-dimension accumulation, NOT matmul: BLAS
-            # uses pairwise/blocked summation whose last-ulp result is
-            # implementation-defined, and ONE flipped sign on a
-            # near-zero dot would change a bucket.  The explicit loop
-            # is the same left-to-right IEEE order as the oracle's
-            # list_reduce fold, making the sketch — and therefore the
-            # whole operator — value-oracle-able.  Cost: 64 vectorized
-            # (rows x planes) FMAs per batch, still microseconds/row.
-            acc = np.zeros((m.shape[0], planes.shape[0]))
-            for d_ in range(m.shape[1]):
-                acc += m[:, d_:d_ + 1] * planes[None, :, d_]
-            bits = acc >= 0.0
-            keys = np.empty((bits.shape[0], n_bands), dtype=np.int64)
-            for b in range(n_bands):
-                keys[:, b] = (b << 16) | (
-                    bits[:, b * r:(b + 1) * r].astype(np.int64) @ weights)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_bands),
-                "bb": keys.ravel()})
-
-    return kernel
+    ix = _gate(spark, sf_dir, "knn_bruteforce_cosine")
+    return ix.knn(_seeds(ix), TOP_K)
 
 
 def q_ann_lsh(spark, sf_dir):
     """Approximate top-10 via sign-bit LSH buckets + cosine re-rank.
 
     Candidates = corpus vectors sharing >= 1 of the 12 4-bit bands with
-    the query's sketch; re-rank candidates exactly.  Approximate (driver
-    records rows-only); recall vs q_knn_bruteforce is pinned by
-    tests/test_extensions.py.
+    the query's sketch; re-rank candidates exactly.  The sketches are
+    held by the retrieval index (one Arrow-vectorized pass per corpus
+    version).  Approximate relative to true kNN, but deterministic, so
+    it carries a full value oracle; recall vs q_knn_bruteforce is pinned
+    by tests/test_extensions.py.
     """
-    # One materialization: e feeds the sketch path, the query broadcast,
-    # and the candidate join-back — uncached, each is its own job
-    # re-running the scan + spread shuffle + norm folds (measured ~1.5s
-    # of pure re-execution overhead at sf0.1).
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding")).cache()
-    rng = np.random.default_rng(7)
-    planes = rng.standard_normal((N_PLANES, DIM))
-    r = N_PLANES // LSH_BANDS_ANN
-    kernel = _ann_bucket_kernel(planes, LSH_BANDS_ANN, r)
-    # Sketches carry ONLY (vec_id, bucket).  Because the query set is
-    # bounded (the gate), its sketch is too (|Q| x bands rows of two
-    # longs) — so candidate generation is a map-side broadcast hash join
-    # of the corpus sketch stream against the query sketches: the corpus
-    # NEVER shuffles to find its candidates, and there is no per-bucket
-    # array (the earlier groupBy(bucket)+collect_set form materialized a
-    # hot bucket's whole membership in one aggregation buffer — the same
-    # celebrity-key hazard the pagerank fix removed).  Only the surviving
-    # (q_id, vec_id) pairs — two longs each — shuffle, for the dedup and
-    # the vector join-back.
-    # ONE sketch pass: the query set is a subset of the corpus, so its
-    # sketches are a filter over the corpus sketches — no second Python
-    # stage.  sk is (vec_id, bucket) longs, ~16 B/row x bands: caching
-    # it costs ~nothing and serves both the candidate stream and the
-    # query-sketch broadcast.
-    sk = (e.select("vec_id", "embedding")
-           .mapInPandas(kernel, schema="vec_id long, bb long")
-           .cache())
-    q_base = _gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "ann_lsh_cosine", sf_dir)
-    q_full = F.broadcast(
-        q_base.select(F.col("vec_id").alias("q_id"),
-                      F.col("embedding").alias("q_vec"),
-                      F.col("nrm").alias("q_nrm")))
-    q_sk = (sk.filter(F.col("vec_id") % 100 == 0)
-              .select(F.col("vec_id").alias("q_id"), "bb"))
-    cand_ids = (sk.join(F.broadcast(q_sk), "bb")
-                  .filter(F.col("vec_id") != F.col("q_id"))
-                  .select("q_id", "vec_id")
-                  .distinct())
-    # Norms folded once per row (see q_knn_bruteforce) — the re-rank
-    # costs one dot fold per candidate.
-    scored = (cand_ids.join(e.select("vec_id", "embedding", "nrm"), "vec_id")
-                      .join(q_full, "q_id")
-                      .withColumn("cos", F.round(
-                          dot("q_vec", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6)))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") <= TOP_K)
-                  .select("q_id", F.col("vec_id").alias("neighbor_id"), "cos", "rk"))
+    ix = _gate(spark, sf_dir, "ann_lsh_cosine")
+    return ix.lsh(_seeds(ix), TOP_K)
 
 
-IVF_CELLS = 16
 # 6-of-16 probes: this corpus's vectors are near-uniform (true neighbors
 # at cos 0.2-0.5), so cell affinity is a weak signal and wide probing is
 # the right operating point — still a ~2.7x candidate cut.  Clustered
@@ -240,62 +141,16 @@ def q_ann_ivf(spark, sf_dir):
     """Approximate top-10 via IVF coarse quantization + probe re-rank.
 
     The other scale path next to LSH (q_ann_lsh): corpus vectors are
-    assigned to their nearest of C coarse centroids (row-local — the
-    centroids are embedded as literals, so assignment is a projection
-    with zero shuffles); each query probes its P nearest cells and
-    re-ranks only those candidates exactly, cutting scored pairs by
-    ~C/P.  Centroids here are the C lowest vec_ids (deterministic
-    "training"); production would k-means a sample — the plan shape is
-    identical.  "Approximate" only relative to true kNN: the output
-    itself is deterministic and carries a full value oracle (recall vs
-    q_knn_bruteforce is pinned separately in tests).  The cell argmax ignores the row's own norm (a per-row
-    positive scale doesn't change the argmax), so assignment costs C
-    dot folds per row, once, at write time in a real pipeline.
+    assigned to their nearest of C coarse centroids (held by the
+    retrieval index); each query probes its P nearest cells and re-ranks
+    only those candidates exactly, cutting scored pairs by ~C/P.
+    Centroids are the C lowest vec_ids (deterministic "training").
+    "Approximate" only relative to true kNN: the output itself is
+    deterministic and carries a full value oracle (recall vs
+    q_knn_bruteforce is pinned separately in tests).
     """
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    cent_rows = (load_table(spark, sf_dir, "embeddings")
-                 .orderBy("vec_id").limit(IVF_CELLS)
-                 .select("embedding").collect())
-    cents = [[float(x) for x in r.embedding] for r in cent_rows]
-    # math.sqrt (correctly-rounded IEEE sqrt) over a left-to-right sum:
-    # bit-identical to DuckDB's sqrt(list_reduce(...)) — this is what
-    # lets the oracle recompute the centroid norms instead of receiving
-    # them as literals (`** 0.5` routes through pow, which carries no
-    # correct-rounding guarantee).
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-
-    # One generated SQL string (see _dot_sql): array<struct<cos,cell>>
-    # of centroid affinities, row-local.
-    cell_scores = "array(" + ",".join(
-        f"struct({_dot_sql('embedding', c)} / {repr(nc)}D AS cos, {i} AS cell)"
-        for i, (c, nc) in enumerate(zip(cents, cnorms))) + ")"
-    assigned = e.withColumn(
-        "cell", F.array_max(F.expr(cell_scores)).getField("cell"))
-    probes = F.expr(
-        f"transform(slice(reverse(array_sort({cell_scores})), 1, {IVF_PROBES}),"
-        " s -> s.cell)")
-    # explode_OUTER + null-filter and a NULL-SAFE join key (r12): the
-    # inner explode's inferred non-empty filter and the equi-join's
-    # inferred isnotnull(cell) each re-evaluated the full 16x64-literal
-    # cell_scores array in a Filter below the scan exchange (plan had
-    # 51 aggregate-fold copies; the serial pre-spread task burned ~4s
-    # CPU at sf0.1).  probe/cell are never null, so <=> == == and the
-    # post-generate filter reproduces the inner explode exactly.
-    q = (_gate_query_set(e.filter(F.col("vec_id") % 100 == 0), "ann_ivf_cosine", sf_dir)
-          .select(F.col("vec_id").alias("q_id"),
-                  F.col("embedding").alias("q_vec"),
-                  F.col("nrm").alias("q_nrm"),
-                  F.explode_outer(probes).alias("probe"))
-          .filter(F.col("probe").isNotNull()))
-    cand = assigned.join(F.broadcast(q),
-                         (F.col("cell").eqNullSafe(F.col("probe")))
-                         & (F.col("vec_id") != F.col("q_id")))
-    scored = cand.withColumn("cos", F.round(
-        dot("q_vec", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") <= TOP_K)
-                  .select("q_id", F.col("vec_id").alias("neighbor_id"), "cos", "rk"))
+    ix = _gate(spark, sf_dir, "ann_ivf_cosine")
+    return ix.ivf(_seeds(ix), TOP_K, IVF_PROBES)
 
 
 IVF_ADV_PROBES = (1, 2, 4, 6, 8)      # nprobe operating points swept
@@ -330,37 +185,15 @@ def q_ivf_probe_sweep(spark, sf_dir):
     chosen).
     """.format(ps=IVF_ADV_PROBES, k=TOP_K,
                floor=IVF_ADV_RECALL_FLOOR_PPM)
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    cent_rows = (load_table(spark, sf_dir, "embeddings")
-                 .orderBy("vec_id").limit(IVF_CELLS)
-                 .select("embedding").collect())
-    cents = [[float(x) for x in r.embedding] for r in cent_rows]
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-    cell_scores = "array(" + ",".join(
-        f"struct({_dot_sql('embedding', c)} / {repr(nc)}D AS cos,"
-        f" {i} AS cell)"
-        for i, (c, nc) in enumerate(zip(cents, cnorms))) + ")"
-    assigned = e.withColumn(
-        "cell", F.array_max(F.expr(cell_scores)).getField("cell"))
-    pmax = max(IVF_ADV_PROBES)
-    probes = F.expr(
-        f"transform(slice(reverse(array_sort({cell_scores})), 1,"
-        f" {pmax}), s -> s.cell)")
-    q = (_gate_query_set(e.filter(F.col("vec_id") % 100 == 0),
-                         "ivf_probe_sweep_advisor", sf_dir)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_vec"),
-                 F.col("nrm").alias("q_nrm"),
-                 F.posexplode_outer(probes).alias("pi", "probe"))
-         .filter(F.col("probe").isNotNull()))
-    # null-safe key + outer explode: see q_ann_ivf (r12) — stops the
-    # inferred filters re-evaluating cell_scores below the exchange
-    scored = (assigned.join(F.broadcast(q),
-                            (F.col("cell").eqNullSafe(F.col("probe")))
-                            & (F.col("vec_id") != F.col("q_id")))
-              .withColumn("cos", F.round(
-                  dot("q_vec", "embedding")
-                  / (F.col("q_nrm") * F.col("nrm")), 6))
+    ix = _gate(spark, sf_dir, "ivf_probe_sweep_advisor")
+    q = _seeds(ix).select(
+        "q_id", "q_vec", "q_nrm",
+        F.posexplode(ix.probes("q_vec", max(IVF_ADV_PROBES)))
+         .alias("pi", "probe"))
+    scored = (ix.vectors.vec
+              .join(F.broadcast(q), (F.col("cell") == F.col("probe"))
+                    & (F.col("vec_id") != F.col("q_id")))
+              .withColumn("cos", cosine())
               .select("q_id", "vec_id", (F.col("pi") + 1).alias("prk"),
                       "cos")
               .localCheckpoint(eager=False))   # scored once, 5 readers
@@ -431,9 +264,9 @@ def q_knn_pandas(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
+    _gate(spark, sf_dir, "knn_pandas_vectorized")
     e = load_table(spark, sf_dir, "embeddings")
-    q_rows = (_gate_query_set(e.filter(F.col("vec_id") % 100 == 0),
-                              "knn_pandas_vectorized", sf_dir)
+    q_rows = (e.filter(F.col("vec_id") % 100 == 0)
               .select("vec_id", "embedding").collect())   # gated query set
     q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
     Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
@@ -552,8 +385,9 @@ def q_ann_int8(spark, sf_dir):
                     lambda x, s: F.round(x.cast("double") * s, 0).cast("long"))
     eq = (e.crossJoin(F.broadcast(sc_arr))
            .select("vec_id", "embedding", "nrm", qz.alias("qv")))
-    q = F.broadcast(_gate_query_set(
-        eq.filter(F.col("vec_id") % 100 == 0), "ann_int8_rerank", sf_dir)
+    _gate(spark, sf_dir, "ann_int8_rerank")
+    q = F.broadcast(
+        eq.filter(F.col("vec_id") % 100 == 0)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("embedding").alias("q_vec"),
                 F.col("nrm").alias("q_nrm"),
@@ -630,8 +464,9 @@ def q_hard_negatives(spark, sf_dir):
     pairs, deterministic on (rounded cos desc, vec_id).
     """
     e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    q = F.broadcast(_gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "hard_negative_mining", sf_dir)
+    _gate(spark, sf_dir, "hard_negative_mining")
+    q = F.broadcast(
+        e.filter(F.col("vec_id") % 100 == 0)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("label").alias("q_label"),
                 F.col("embedding").alias("q_vec"),
@@ -1062,8 +897,8 @@ def q_ann_pq_adc(spark, sf_dir):
                      .agg(F.transform(
                          F.array_sort(F.collect_list(F.struct("m", "cid"))),
                          lambda p: p["cid"]).alias("code")))
-    q = _gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "ann_pq_adc", sf_dir)
+    _gate(spark, sf_dir, "ann_pq_adc")
+    q = e.filter(F.col("vec_id") % 100 == 0)
     qsub = _pq_sub(q.select(F.col("vec_id").alias("q_id"), "embedding"),
                    "q_id")
     dist = (qsub.join(F.broadcast(cent), "m")
@@ -1190,14 +1025,7 @@ def ivf_base_cell_expr(spark, sf_dir) -> str:
     identical index."""
     base = (load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") % IVF_DELTA_MOD != 0))
-    cent_rows = (base.orderBy("vec_id").limit(IVF_CELLS)
-                 .select("embedding").collect())
-    cents = [[float(x) for x in r.embedding] for r in cent_rows]
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-    return "array(" + ",".join(
-        f"struct({_dot_sql('embedding', c)} / {repr(nc)}D AS cos,"
-        f" {i} AS cell)"
-        for i, (c, nc) in enumerate(zip(cents, cnorms))) + ")"
+    return cell_scores_sql("embedding", *ivf_centroids(base))
 
 
 def ivf_cell_stats_of(cell_scores: str):
@@ -1286,27 +1114,13 @@ def q_knn_graph_ivf(spark, sf_dir):
     knn tie-break contract (rounded score desc, neighbor id) — full
     value oracle.
     """.format(k=KNN_GRAPH_K)
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    cent_rows = (load_table(spark, sf_dir, "embeddings")
-                 .orderBy("vec_id").limit(IVF_CELLS)
-                 .select("embedding").collect())
-    cents = [[float(x) for x in r.embedding] for r in cent_rows]
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-    cell_scores = "array(" + ",".join(
-        f"struct({_dot_sql('embedding', c)} / {repr(nc)}D AS cos,"
-        f" {i} AS cell)"
-        for i, (c, nc) in enumerate(zip(cents, cnorms))) + ")"
-    assigned = e.withColumn(
-        "cell", F.array_max(F.expr(cell_scores)).getField("cell"))
-    a = assigned.select("cell", F.col("vec_id").alias("q_id"),
-                        F.col("embedding").alias("q_vec"),
-                        F.col("nrm").alias("q_nrm"))
-    b = assigned.select("cell", "vec_id", "embedding", "nrm")
-    scored = (a.join(b, "cell")
+    vec = index_for(spark, sf_dir).vectors.vec
+    a = vec.select("cell", F.col("vec_id").alias("q_id"),
+                   F.col("embedding").alias("q_vec"),
+                   F.col("nrm").alias("q_nrm"))
+    scored = (a.join(vec, "cell")
               .filter(F.col("vec_id") != F.col("q_id"))
-              .withColumn("cos", F.round(
-                  dot("q_vec", "embedding")
-                  / (F.col("q_nrm") * F.col("nrm")), 6)))
+              .withColumn("cos", cosine()))
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(),
                                       F.col("vec_id"))
     return (scored.withColumn("rk", F.row_number().over(w))
@@ -1366,10 +1180,10 @@ def q_embedding_dim_budget(spark, sf_dir):
     value oracle.
     """
     e = _emb(spark, sf_dir)
-    q = F.broadcast(_gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "embedding_dim_budget",
-        sf_dir).select(F.col("vec_id").alias("q_id"),
-                       F.col("embedding").alias("q_vec")))
+    _gate(spark, sf_dir, "embedding_dim_budget")
+    q = F.broadcast(e.filter(F.col("vec_id") % 100 == 0)
+                    .select(F.col("vec_id").alias("q_id"),
+                            F.col("embedding").alias("q_vec")))
     pairs = q.join(e, F.col("vec_id") != F.col("q_id"))
     cols = ["q_id", "vec_id"]
     for d in DIM_BUDGETS:
@@ -1560,9 +1374,7 @@ def q_pipeline_rag_index(spark, sf_dir):
     # sketch-cache pattern; ~(16+8*RAG_DIMS) bytes/chunk, corpus-sized
     # metadata, never the text.
     vecs = _rag_chunk_vecs(spark, sf_dir).cache()
-    cent_rows = (vecs.orderBy("doc_id", "chunk_idx")
-                 .limit(RAG_CELLS).select("v").collect())
-    cents = [list(r.v) for r in cent_rows]
+    cents = first_rows(vecs, ["doc_id", "chunk_idx"], RAG_CELLS, "v")
 
     def cdot(c, col):
         return F.expr(" + ".join(
@@ -1590,7 +1402,7 @@ def q_pipeline_rag_index(spark, sf_dir):
     qs = (docv.filter(F.col("doc_id") % RAG_QMOD == 0)
           .select(F.col("doc_id").alias("q_doc"), "dv",
                   F.explode(probes).alias("probe")))
-    # (r12: the q_ann_ivf null-safe-key/outer-explode rewrite was
+    # (r12: a null-safe-key/outer-explode rewrite of this join was
     # A/B'd here and REGRESSED 4.6 -> 11.2s — both join inputs are
     # cached, so the inferred filters read the cache and the rewrite
     # only perturbed the join plan; kept as-is.)
@@ -1669,9 +1481,9 @@ def q_retrieval_mmr(spark, sf_dir):
     import pandas as pd
 
     e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    q = F.broadcast(_gate_query_set(
-        e.filter(F.col("vec_id") % 100 == 0), "retrieval_mmr_diversify",
-        sf_dir)
+    _gate(spark, sf_dir, "retrieval_mmr_diversify")
+    q = F.broadcast(
+        e.filter(F.col("vec_id") % 100 == 0)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("embedding").alias("q_vec"),
                 F.col("nrm").alias("q_nrm")))
@@ -1729,7 +1541,6 @@ def q_retrieval_mmr(spark, sf_dir):
 RRF_K = 60          # the standard reciprocal-rank-fusion constant
 HYB_TOPK = 10       # fused results per query (== TOP_K of both arms)
 HYB_QTERMS = 3      # lexical query terms taken from the seed document
-HYB_SALT = 64       # two-phase top-k fan-in (the BM25-retrieval pattern)
 
 
 def q_hybrid_retrieval_rrf(spark, sf_dir):
@@ -1762,112 +1573,49 @@ def q_hybrid_retrieval_rrf(spark, sf_dir):
     return _rrf_fuse(_lex_bm25_topk(spark, sf_dir), dense_rk)
 
 
-def _bm25_base(spark, sf_dir):
-    """The BM25 statistics relations (tf, dfr, dl, scal) plus the seed
-    queries' own top-terms relation (qterms) — shared by the hybrid
-    family's lexical arm and the PRF expansion round.
-
-    Every relation here is referenced several times by each consumer
-    (the PRF round's final plan held ~20 copies of the words-explode ->
-    tf-agg subtree: tf feeds dfr, dl, scal AND the scoring join, and
-    qterms re-reads all four), and Catalyst does not dedupe common
-    subtrees — each reference re-ran the corpus explode.  cache() each
-    relation once: tf is posting-list-sized (16 B + term per row), the
-    others are vocab-/doc-/1-row-sized, so the memory cost is noise
-    next to re-running the corpus scan per reference.  Results are
-    unchanged (caching only short-circuits recomputation)."""
-    from ..sources.tables import spread
-    from .text import _bm25_e6_expr, _docs, _lit_spark
-
-    # spread (r12): the single-split fixture scan ran the corpus words
-    # explode + tf partial agg in ONE task (guide §2.5); gated no-op
-    # on a real multi-split corpus
-    d = spread(_docs(spark, sf_dir).select("doc_id", "text"))
-    words = d.select("doc_id",
-                     F.explode(F.split("text", " ")).alias("word"))
-    tf = (words.groupBy("doc_id", "word")
-               .agg(F.count(F.lit(1)).alias("tf")).cache())
-    dfr = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df")).cache()
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).cache()
-    scal = (dl.agg(F.sum("dl").alias("total_words"),
-                   F.count(F.lit(1)).alias("n_docs")).cache())
-    # lexical query terms: the seed doc's own top-scoring BM25 terms
-    qown = (tf.filter(F.col("doc_id") % 100 == 0)
-              .join(dfr, "word").join(dl, "doc_id")
-              .crossJoin(F.broadcast(scal))
-              .selectExpr("doc_id AS q_doc", "word", "df",
-                          _bm25_e6_expr(_lit_spark) + " AS own_e6"))
-    wq = W.partitionBy("q_doc").orderBy(F.desc("own_e6"), F.asc("word"))
-    qterms = (qown.withColumn("trk", F.row_number().over(wq))
-                  .filter(F.col("trk") <= HYB_QTERMS)
-                  .select("q_doc", "word", "df").cache())
-    return tf, dfr, dl, scal, qterms
-
-
-def _bm25_salted_topk(terms, tf, dl, scal, k=HYB_TOPK,
-                      rank_col="lex_rk"):
-    """Score every posting of a (q_doc, word, df) term relation with
-    BM25 and return the per-query top-k by the two-phase salted top-k
-    (no global window) — text_bm25_retrieval's shape verbatim.
-    Returns (q_doc, doc_id, score_e6, <rank_col>)."""
-    from .text import _bm25_e6_expr, _lit_spark
-
-    cand = (tf.join(F.broadcast(terms), "word")
-              .filter(F.col("doc_id") != F.col("q_doc"))
-              .join(dl, "doc_id")
-              .crossJoin(F.broadcast(scal))
-              .selectExpr("q_doc", "doc_id",
-                          _bm25_e6_expr(_lit_spark) + " AS bm25_e6"))
-    lex = (cand.groupBy("q_doc", "doc_id")
-               .agg(F.sum("bm25_e6").alias("score_e6")))
-    return _salted_topk(lex, k, rank_col)
-
-
-def _salted_topk(scored, k, rank_col):
-    """Per-query top-k of a (q_doc, doc_id, score_e6) relation without
-    a global window: local top-k per (q_doc, xxhash salt) bucket, then
-    one HYB_SALT*k-row fold per query.  Ties (score desc, doc_id asc).
-    No task ever holds more than one bucket's rows — the retrieval
-    family's bounded-memory ranking primitive."""
-    key = F.struct((-F.col("score_e6")).alias("ns"),
-                   F.col("doc_id").alias("doc_id"))
-    p1 = (scored.groupBy("q_doc",
-                         F.pmod(F.xxhash64("doc_id"),
-                                F.lit(HYB_SALT)).alias("salt"))
-                .agg(F.slice(F.array_sort(F.collect_list(key)), 1,
-                             k).alias("part")))
-    p2 = (p1.groupBy("q_doc")
-            .agg(F.slice(F.array_sort(F.flatten(F.collect_list("part"))),
-                         1, k).alias("top")))
-    return (p2.select("q_doc", F.posexplode("top").alias("i", "t"))
-              .select("q_doc", F.col("t.doc_id").alias("doc_id"),
-                      (-F.col("t.ns")).alias("score_e6"),
-                      (F.col("i") + 1).alias(rank_col)))
+def _seed_terms(ix):
+    """The hybrid family's lexical query set, derived per request: each
+    seed document's (doc_id % 100 == 0) own top-HYB_QTERMS BM25 terms,
+    ties (score desc, word) — (q_doc, word).  Reads the index's
+    postings, whose per-posting BM25 score is the seed's own term
+    score."""
+    wq = W.partitionBy("q_doc").orderBy(F.desc("bm25_e6"), F.asc("word"))
+    return (ix.text.tf.filter(F.col("doc_id") % 100 == 0)
+            .select(F.col("doc_id").alias("q_doc"), "word", "bm25_e6")
+            .withColumn("trk", F.row_number().over(wq))
+            .filter(F.col("trk") <= HYB_QTERMS)
+            .select("q_doc", "word"))
 
 
 def _lex_bm25_topk(spark, sf_dir):
     """The hybrid family's shared LEXICAL arm: per seed doc, top-k
     BM25 candidates over the seed's own top salient terms —
-    text_bm25_retrieval's scoring and two-phase salted top-k verbatim.
-    Returns (q_doc, doc_id, lex_rk)."""
-    tf, dfr, dl, scal, qterms = _bm25_base(spark, sf_dir)
-    return _bm25_salted_topk(qterms, tf, dl, scal).select(
-        "q_doc", "doc_id", "lex_rk")
+    text_bm25_retrieval's scoring and two-phase salted top-k (the
+    index's bm25 search).  Returns (q_doc, doc_id, lex_rk)."""
+    ix = index_for(spark, sf_dir)
+    return (ix.bm25(_seed_terms(ix), HYB_TOPK, exclude_self=True)
+            .select("q_doc", "doc_id", F.col("rk").alias("lex_rk")))
 
 
 def _rrf_fuse(lex_rk, dense_rk):
     """Reciprocal-rank fusion of the two ≤HYB_TOPK·|Q|-row arm
-    relations — integer arithmetic, metadata-sized at any corpus."""
-    fused = (lex_rk.join(dense_rk, ["q_doc", "doc_id"], "full_outer")
-             .withColumn("rrf_e9", F.expr(
-                 f"COALESCE(1000000000 DIV ({RRF_K} + lex_rk), 0)"
-                 f" + COALESCE(1000000000 DIV ({RRF_K} + dense_rk), 0)")))
-    wf = W.partitionBy("q_doc").orderBy(F.desc("rrf_e9"),
-                                        F.asc("doc_id"))
-    return (fused.withColumn("rk", F.row_number().over(wf))
-                 .filter(F.col("rk") <= HYB_TOPK)
-                 .select("q_doc", "doc_id", "lex_rk", "dense_rk",
-                         "rrf_e9", "rk"))
+    relations — integer arithmetic, metadata-sized at any corpus.  The
+    arms meet in ONE (q_doc, doc_id) aggregation over their union (a
+    full outer join would shuffle each arm separately)."""
+    return (lex_rk.selectExpr("q_doc", "doc_id", "lex_rk",
+                              "CAST(NULL AS INT) AS dense_rk")
+            .unionByName(dense_rk.selectExpr(
+                "q_doc", "doc_id", "CAST(NULL AS INT) AS lex_rk", "dense_rk"))
+            .groupBy("q_doc", "doc_id")
+            .agg(F.max("lex_rk").alias("lex_rk"),
+                 F.max("dense_rk").alias("dense_rk"))
+            .selectExpr("*",
+                        f"COALESCE(1000000000 DIV ({RRF_K} + lex_rk), 0)"
+                        f" + COALESCE(1000000000 DIV ({RRF_K} + dense_rk), 0)"
+                        " AS rrf_e9")
+            .selectExpr("*", "row_number() OVER (PARTITION BY q_doc"
+                        " ORDER BY rrf_e9 DESC, doc_id) AS rk")
+            .filter(f"rk <= {HYB_TOPK}"))
 
 
 PRF_EXP_TERMS = 3     # expansion terms mined from the feedback docs
@@ -1894,29 +1642,22 @@ def q_retrieval_prf_expansion(spark, sf_dir):
     document's round-1 rank (NULL = surfaced only by expansion, the
     recall the technique exists to buy).
     """.format(k=HYB_TOPK, e=PRF_EXP_TERMS, t=HYB_QTERMS)
-    from .text import _bm25_e6_expr, _lit_spark
-
-    tf, dfr, dl, scal, qterms = _bm25_base(spark, sf_dir)
-    r1 = _bm25_salted_topk(qterms, tf, dl, scal)
+    ix = index_for(spark, sf_dir)
+    qterms = _seed_terms(ix)
+    r1 = ix.bm25(qterms, HYB_TOPK, exclude_self=True)
     fb = r1.select("q_doc", "doc_id")
-    fbterms = (tf.join(F.broadcast(fb), "doc_id")
-                 .join(dfr, "word").join(dl, "doc_id")
-                 .crossJoin(F.broadcast(scal))
-                 .selectExpr("q_doc", "word", "df",
-                             _bm25_e6_expr(_lit_spark) + " AS w_e6")
+    # a feedback posting's BM25 weight is the index's per-posting score
+    fbterms = (ix.text.tf.join(F.broadcast(fb), "doc_id")
                  .groupBy("q_doc", "word")
-                 .agg(F.max("df").alias("df"),
-                      F.sum("w_e6").alias("fb_e6"))
-                 .join(qterms.select("q_doc", "word"),
-                       ["q_doc", "word"], "left_anti"))
+                 .agg(F.sum("bm25_e6").alias("fb_e6"))
+                 .join(qterms, ["q_doc", "word"], "left_anti"))
     we = W.partitionBy("q_doc").orderBy(F.desc("fb_e6"), F.asc("word"))
     exp = (fbterms.withColumn("erk", F.row_number().over(we))
                   .filter(F.col("erk") <= PRF_EXP_TERMS)
-                  .select("q_doc", "word", "df"))
-    q2 = qterms.unionAll(exp)
-    r2 = _bm25_salted_topk(q2, tf, dl, scal, rank_col="rk")
+                  .select("q_doc", "word"))
+    r2 = ix.bm25(qterms.unionAll(exp), HYB_TOPK, exclude_self=True)
     return (r2.join(r1.select("q_doc", "doc_id",
-                              F.col("lex_rk").alias("r1_rk")),
+                              F.col("rk").alias("r1_rk")),
                     ["q_doc", "doc_id"], "left")
               .select("q_doc", "doc_id", "score_e6", "rk", "r1_rk"))
 
@@ -2006,24 +1747,24 @@ def q_retrieval_qld_dirichlet(spark, sf_dir):
     """.format(t=HYB_QTERMS, k=HYB_TOPK)
     from .text import _lit_spark
 
-    tf, dfr, dl, scal, qterms = _bm25_base(spark, sf_dir)
-    cfq = (tf.join(qterms.select("word").distinct(), "word")
-             .groupBy("word").agg(F.sum("tf").alias("cf")))
+    ix = index_for(spark, sf_dir)
+    t, qterms = ix.text, _seed_terms(ix)
+    cfq = t.df.join(qterms.select("word").distinct(), "word")
     qlen = qterms.groupBy("q_doc").agg(F.count(F.lit(1)).alias("qlen"))
     gain, pen = _qld_gain_pen(_lit_spark)
-    cand = (tf.join(F.broadcast(qterms.select("q_doc", "word")), "word")
+    cand = (t.tf.select("doc_id", "word", "tf")
+              .join(F.broadcast(qterms), "word")
               .filter(F.col("doc_id") != F.col("q_doc"))
-              .join(F.broadcast(cfq), "word")
-              .crossJoin(F.broadcast(scal))
+              .join(F.broadcast(cfq.select("word", "cf")), "word")
+              .select("q_doc", "doc_id", "tf", "cf", *t.scalars())
               .selectExpr("q_doc", "doc_id", gain + " AS gain_e6"))
     m = (cand.groupBy("q_doc", "doc_id")
              .agg(F.sum("gain_e6").alias("match_e6")))
-    scored = (m.join(dl, "doc_id")
+    scored = (m.join(t.dl, "doc_id")
                .join(F.broadcast(qlen), "q_doc")
                .selectExpr("q_doc", "doc_id",
                            f"match_e6 - qlen * {pen} AS score_e6"))
-    return (_salted_topk(scored, HYB_TOPK, "rk")
-            .select("q_doc", "doc_id", "score_e6", "rk"))
+    return salted_topk(scored, HYB_TOPK)
 
 
 def q_hybrid_qld_bm25_rrf(spark, sf_dir):
@@ -2039,11 +1780,9 @@ def q_hybrid_qld_bm25_rrf(spark, sf_dir):
 
     Output: (q_doc, doc_id, lex_rk, qld_rk, rrf_e9, rk).
     """
-    tf, dfr, dl, scal, qterms = _bm25_base(spark, sf_dir)
-    lex = _bm25_salted_topk(qterms, tf, dl, scal)
     qld = (q_retrieval_qld_dirichlet(spark, sf_dir)
            .select("q_doc", "doc_id", F.col("rk").alias("dense_rk")))
-    return (_rrf_fuse(lex.select("q_doc", "doc_id", "lex_rk"), qld)
+    return (_rrf_fuse(_lex_bm25_topk(spark, sf_dir), qld)
             .select("q_doc", "doc_id", "lex_rk",
                     F.col("dense_rk").alias("qld_rk"), "rrf_e9", "rk"))
 
@@ -2090,6 +1829,9 @@ _DOT = ("list_reduce(list_transform(list_zip({a}, {b}), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, x) -> acc + x)")
 _SQN = ("list_reduce(list_transform({a}, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), "
         "(acc, x) -> acc + x)")
+# A zero vector's norm is 0 and DuckDB's double division by zero is
+# NULL, so its cosine is NULL here as on the Spark side (try_divide);
+# the retrieval oracles rank it last with an explicit NULLS LAST.
 _COS = (_DOT + " / (sqrt(" + _SQN.replace("{a}", "{a}") + ") * sqrt("
         + _SQN.replace("{a}", "{b}") + "))")
 
@@ -2139,7 +1881,7 @@ ORACLE = {
         ranked AS (
             SELECT q_id, neighbor_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY cos DESC, neighbor_id) AS rk
+                                      ORDER BY cos DESC NULLS LAST, neighbor_id) AS rk
             FROM scored)
         SELECT q_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 10
     """,
@@ -2260,7 +2002,7 @@ def _hybrid_rrf_oracle(dense: str = "exact") -> str:
         SELECT q_doc, doc_id, dense_rk FROM (
             SELECT q_doc, doc_id,
                    ROW_NUMBER() OVER (PARTITION BY q_doc
-                                      ORDER BY cos DESC, doc_id)
+                                      ORDER BY cos DESC NULLS LAST, doc_id)
                        AS dense_rk
             FROM dscored)
         WHERE dense_rk <= {HYB_TOPK}),
@@ -2515,7 +2257,7 @@ def _ivf_probe_sweep_oracle() -> str:
         SELECT q_id, vec_id FROM (
             SELECT q_id, vec_id,
                    ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY cos DESC, vec_id) AS rk
+                                      ORDER BY cos DESC NULLS LAST, vec_id) AS rk
             FROM cscored WHERE prk <= {p})
         WHERE rk <= {TOP_K}),
     stat{p} AS (
@@ -2721,11 +2463,9 @@ def _ann_lsh_oracle_sql() -> str:
     band buckets), candidate set, and exact re-rank.  Literal doubles
     go through CAST('repr' AS DOUBLE) (string parse is correctly
     rounded — the same doubles numpy holds in the kernel closure)."""
-    rng = np.random.default_rng(7)
-    planes = rng.standard_normal((N_PLANES, DIM))
     r = N_PLANES // LSH_BANDS_ANN
     dots = []
-    for i, p in enumerate(planes):
+    for i, p in enumerate(lsh_planes()):
         arr = "[" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)"
                              for x in p) + "]"
         dots.append(
@@ -2760,7 +2500,7 @@ def _ann_lsh_oracle_sql() -> str:
         ranked AS (
             SELECT q_id, neighbor_id, cos,
                    ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY cos DESC, neighbor_id) AS rk
+                                      ORDER BY cos DESC NULLS LAST, neighbor_id) AS rk
             FROM scored)
         SELECT q_id, neighbor_id, cos, rk FROM ranked WHERE rk <= {TOP_K}
     """
@@ -2896,7 +2636,7 @@ ORACLE["knn_graph_ivf"] = f"""
     fin AS (
         SELECT q_id, neighbor_id, cos,
                ROW_NUMBER() OVER (PARTITION BY q_id
-                                  ORDER BY cos DESC, neighbor_id) AS rk
+                                  ORDER BY cos DESC NULLS LAST, neighbor_id) AS rk
         FROM scored)
     SELECT q_id, neighbor_id, cos, rk FROM fin WHERE rk <= {KNN_GRAPH_K}
 """
@@ -2985,7 +2725,7 @@ ORACLE["ann_ivf_cosine"] = f"""
     final AS (
         SELECT q_id, neighbor_id, cos,
                ROW_NUMBER() OVER (PARTITION BY q_id
-                                  ORDER BY cos DESC, neighbor_id) AS rk
+                                  ORDER BY cos DESC NULLS LAST, neighbor_id) AS rk
         FROM scored)
     SELECT q_id, neighbor_id, cos, rk FROM final WHERE rk <= {TOP_K}
 """

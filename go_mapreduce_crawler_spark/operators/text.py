@@ -4,6 +4,13 @@ All hot paths are JVM built-ins (split/regexp/array functions) — no
 Python UDFs, so these run at whole-stage-codegen speed and scale linearly
 with document count (narrow transformations, zero shuffles except the
 final stats aggregations).
+
+The BM25 statistics (postings with tf, df, dl and each posting's BM25
+score; per-word df; per-document length; the corpus scalars) are built
+in one place, the retrieval index (``retrieval_index``), once per corpus
+version: q_text_bm25 ranks its postings per document, and
+q_text_bm25_retrieval derives its query terms per request and calls the
+index's bm25 search.
 """
 
 from __future__ import annotations
@@ -1006,36 +1013,24 @@ def q_text_bm25(spark, sf_dir):
     scorer next to q_text_tfidf (adds document-length normalization and
     the saturating tf, the Okapi form search engines actually rank by).
 
-    Same two-shuffle shape as tfidf: (doc, word) tf counts (cached —
-    df, dl, and the final score all derive from it, so the corpus
-    explodes ONCE), word-keyed df agg, doc-keyed dl agg, and the two
-    corpus scalars broadcast as a one-row crossJoin (never a driver
-    collect).  Scoring is the shared fixed-order expression of
-    _bm25_e6_expr; ties break (score desc, word) for a total order.
+    The (doc, word) postings with their tf, df, dl and BM25 score are
+    the retrieval index's BM25 relation (built once per corpus version,
+    see retrieval_index); this query only ranks them per document.
+    Scoring is the shared fixed-order expression of _bm25_e6_expr;
+    ties break (score desc, word) for a total order.
     """
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    tf = (words.groupBy("doc_id", "word")
-               .agg(F.count(F.lit(1)).alias("tf")).cache())
-    df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    scal = dl.agg(F.sum("dl").alias("total_words"),
-                  F.count(F.lit(1)).alias("n_docs"))
-    scored = (tf.join(df, "word").join(dl, "doc_id")
-                .crossJoin(F.broadcast(scal))
-                .selectExpr("doc_id", "word", "tf", "df", "dl",
-                            _bm25_e6_expr(_lit_spark) + " AS bm25_e6"))
+    from .retrieval_index import index_for
+
     w = Window.partitionBy("doc_id").orderBy(F.desc("bm25_e6"), F.asc("word"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") <= BM25_TOP)
-                  .select("doc_id", "word", "tf", "df", "dl",
-                          "bm25_e6", "rk"))
+    return (index_for(spark, sf_dir).text.tf
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= BM25_TOP)
+            .select("doc_id", "word", "tf", "df", "dl", "bm25_e6", "rk"))
 
 
 BM25R_QUERIES = 5    # retrieval queries derived from the corpus
 BM25R_QLEN = 3       # terms per query
 BM25R_TOPK = 10      # ranked documents returned per query
-BM25R_SALT = 64      # two-phase top-k fan-in
 
 
 def q_text_bm25_retrieval(spark, sf_dir):
@@ -1048,69 +1043,39 @@ def q_text_bm25_retrieval(spark, sf_dir):
     (df desc, word) order), so the operator is self-contained and
     scale-invariant; swapping in user queries is a one-relation change.
 
-    Scale: term scoring is the per-(term, doc) integer expression of
-    _bm25_e6_expr with the {nq}x{ql}-row query relation BROADCAST onto
-    the tf relation (posting-list sized, never corpus-quadratic); the
-    per-query document ranking is a TWO-PHASE SALTED top-k (local
-    top-{k} per (query, hash-salt) bucket, then a {s}x{k}-row final
-    fold per query) — no global window and no single task ever holds
-    more than one bucket's rows, so a query matching every document
-    (these high-df queries do) still ranks in bounded memory.  The
-    only global sort is the query-derivation TakeOrdered over the
-    {nq}x{ql}-row term head.  Ties break (score desc, doc_id).
+    Scale: the per-posting BM25 scores are the retrieval index's
+    (built once per corpus version); a request collects its
+    {nq}x{ql} query terms (a TakeOrdered over the vocabulary), then the
+    index's bm25 search BROADCASTs them onto the postings (posting-list
+    sized, never corpus-quadratic) and ranks with a TWO-PHASE SALTED
+    top-k (local top-{k} per (query, hash-salt) bucket, then a
+    SALTx{k}-row final fold per query) — no global window and no single
+    task ever holds more than one bucket's rows, so a query matching
+    every document (these high-df queries do) still ranks in bounded
+    memory.  Ties break (score desc, doc_id).
 
     Output: (query_id, query_terms, doc_id, score_e6, rk).
-    """.format(k=BM25R_TOPK, nq=BM25R_QUERIES, ql=BM25R_QLEN,
-               s=BM25R_SALT)
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id",
-                     F.explode(F.split("text", " ")).alias("word"))
-    # tf feeds dfr, dl, scal AND the scoring join — four references,
-    # and Catalyst re-runs the corpus explode per reference (the
-    # q_text_bm25 cache rationale, which this query predated).
-    tf = (words.groupBy("doc_id", "word")
-               .agg(F.count(F.lit(1)).alias("tf")).cache())
-    dfr = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    scal = dl.agg(F.sum("dl").alias("total_words"),
-                  F.count(F.lit(1)).alias("n_docs"))
-    nterms = BM25R_QUERIES * BM25R_QLEN
-    head = dfr.orderBy(F.desc("df"), "word").limit(nterms)
-    qt = (head.withColumn(
-              "trk", F.row_number().over(
-                  Window.orderBy(F.desc("df"), F.asc("word"))))
-              .withColumn("query_id",
-                          ((F.col("trk") - 1) / BM25R_QLEN)
-                          .cast("int")))
-    qnames = (qt.groupBy("query_id")
-                .agg(F.array_join(F.transform(
-                    F.array_sort(F.collect_list(F.struct("trk", "word"))),
-                    lambda s: s["word"]), " ").alias("query_terms")))
-    scored = (tf.join(F.broadcast(qt.select("word", "query_id", "df")),
-                      "word")
-                .join(dl, "doc_id")
-                .crossJoin(F.broadcast(scal))
-                .selectExpr("query_id", "doc_id",
-                            _bm25_e6_expr(_lit_spark) + " AS bm25_e6"))
-    qs = (scored.groupBy("query_id", "doc_id")
-                .agg(F.sum("bm25_e6").alias("score_e6")))
-    key = F.struct((-F.col("score_e6")).alias("ns"),
-                   F.col("doc_id").alias("doc_id"),
-                   F.col("score_e6").alias("score_e6"))
-    p1 = (qs.groupBy("query_id",
-                     F.pmod(F.xxhash64("doc_id"),
-                            F.lit(BM25R_SALT)).alias("salt"))
-            .agg(F.slice(F.array_sort(F.collect_list(key)), 1,
-                         BM25R_TOPK).alias("part")))
-    p2 = (p1.groupBy("query_id")
-            .agg(F.slice(F.array_sort(F.flatten(F.collect_list("part"))),
-                         1, BM25R_TOPK).alias("top")))
-    return (p2.select("query_id", F.posexplode("top").alias("i", "t"))
-              .join(F.broadcast(qnames), "query_id")
-              .select("query_id", "query_terms",
-                      F.col("t.doc_id").alias("doc_id"),
-                      F.col("t.score_e6").alias("score_e6"),
-                      (F.col("i") + 1).alias("rk")))
+    """.format(k=BM25R_TOPK, nq=BM25R_QUERIES, ql=BM25R_QLEN)
+    import pandas as pd
+
+    from .retrieval_index import index_for
+
+    ix = index_for(spark, sf_dir)
+    head = [r.word for r in ix.text.df.orderBy(F.desc("df"), "word")
+            .limit(BM25R_QUERIES * BM25R_QLEN).select("word").collect()]
+    # pandas in, so Spark plans a small local relation (no Python RDD)
+    terms = spark.createDataFrame(
+        pd.DataFrame({"q_doc": [i // BM25R_QLEN for i in range(len(head))],
+                      "word": head}), "q_doc int, word string")
+    # query_id -> its terms as a literal array lookup (the trailing
+    # NULL types the array when the corpus has no words)
+    names = F.array(*[F.lit(" ".join(head[i:i + BM25R_QLEN]))
+                      for i in range(0, len(head), BM25R_QLEN)],
+                    F.lit(None).cast("string"))
+    return (ix.bm25(terms, BM25R_TOPK)
+              .select(F.col("q_doc").alias("query_id"),
+                      names[F.col("q_doc")].alias("query_terms"),
+                      "doc_id", "score_e6", "rk"))
 
 
 TR_V = 500       # TextRank vocabulary cap (top corpus words)

@@ -353,11 +353,12 @@ def test_similarity_gates_oversized_query_set(spark, sf_small, monkeypatch):
     """Every similarity entry point ships its query set whole (broadcast
     or kernel closure); above KNN_MAX_QUERIES each must refuse instead of
     silently broadcasting a corpus-sized query set at scale."""
+    from go_mapreduce_crawler_spark.operators import retrieval_index
     from go_mapreduce_crawler_spark.operators import similarity as sim
 
     monkeypatch.setattr(sim, "KNN_MAX_QUERIES", 1)
     # a previously-probed corpus path must not bypass the (tightened) gate
-    monkeypatch.setattr(sim, "_GATE_PROBED", set())
+    retrieval_index.clear()
     for fn in (sim.q_knn_bruteforce, sim.q_ann_lsh, sim.q_ann_ivf,
                sim.q_knn_pandas):
         with pytest.raises(ValueError, match="query set exceeds"):

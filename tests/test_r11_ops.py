@@ -14,6 +14,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from go_mapreduce_crawler_spark.operators import similarity
+from go_mapreduce_crawler_spark.operators.retrieval_index import index_for
 from go_mapreduce_crawler_spark.operators.similarity import (HYB_QTERMS,
                                                              HYB_TOPK,
                                                              QLD_MU,
@@ -60,7 +61,7 @@ def test_qld_scores_match_python_reference(spark, sf_small):
     quantization, (score desc, doc_id) ties)."""
     tf, dl, cf, total = _corpus_stats(spark, sf_small)
     qterms = defaultdict(list)
-    tfq, _, _, _, qt = similarity._bm25_base(spark, sf_small)
+    qt = similarity._seed_terms(index_for(spark, sf_small))
     for r in qt.collect():
         qterms[r.q_doc].append(r.word)
 
@@ -102,9 +103,9 @@ def test_qld_bm25_rank_relationship_pinned(spark, sf_small):
     a natural positive-idf workload flips the sign, not the
     magnitude.  This anti-correlation is also why fusing them (the
     hybrid row) is informative rather than redundant."""
-    tfr, dfr, dlr, scal, qt = similarity._bm25_base(spark, sf_small)
-    lex = similarity._bm25_salted_topk(
-        qt, tfr, dlr, scal, k=10 ** 9, rank_col="lex_rk")
+    ix = index_for(spark, sf_small)
+    qt = similarity._seed_terms(ix)
+    lex = ix.bm25(qt, 10 ** 9, exclude_self=True)
     bm25 = {(r.q_doc, r.doc_id): r.score_e6 for r in lex.collect()}
 
     # full-candidate QLD scores: rebuild without the top-k cut
@@ -160,8 +161,7 @@ def test_hybrid_qld_bm25_rrf_arithmetic(spark, sf_small):
     every both-arm doc must outrank any single-arm doc with weaker
     combined evidence."""
     lexr = {}
-    tfr, dfr, dlr, scal, qt = similarity._bm25_base(spark, sf_small)
-    for r in similarity._bm25_salted_topk(qt, tfr, dlr, scal).collect():
+    for r in similarity._lex_bm25_topk(spark, sf_small).collect():
         lexr[(r.q_doc, r.doc_id)] = r.lex_rk
     qldr = {(r.q_doc, r.doc_id): r.rk
             for r in similarity.q_retrieval_qld_dirichlet(

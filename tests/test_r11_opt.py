@@ -2,8 +2,9 @@
 
 Each test pins an internals change whose DEFECT MODE is silent value
 divergence, not a crash: the generated-SQL BPE rewrite (literal
-escaping), the pyarrow meta sidecar (Spark-read compatibility + None),
-and the cached _bm25_base relations (cache must not change values).
+escaping) and the pyarrow meta sidecar (Spark-read compatibility +
+None).  (The BM25 relations' values are pinned in
+tests/test_retrieval_index.py.)
 """
 
 from __future__ import annotations
@@ -87,28 +88,3 @@ def test_meta_sidecar_overwrite_idempotent(spark, tmp_path):
     _write_meta(state, 7, 10)
     _write_meta(state, 7, 99)
     assert _read_meta(state, 7) == 99
-
-
-def test_bm25_base_cache_values_unchanged(spark, sf_small):
-    """The cached _bm25_base relations must carry the same values as a
-    fresh uncached computation of the same algebra (cache() may only
-    short-circuit recomputation, never change results)."""
-    from go_mapreduce_crawler_spark.operators.similarity import _bm25_base
-    from go_mapreduce_crawler_spark.operators.text import _docs
-
-    tf, dfr, dl, scal, qterms = _bm25_base(spark, sf_small)
-
-    d = _docs(spark, sf_small)
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    tf2 = (words.groupBy("doc_id", "word")
-                .agg(F.count(F.lit(1)).alias("tf")))
-    assert tf.exceptAll(tf2).count() == 0
-    assert tf2.exceptAll(tf).count() == 0
-    srow = scal.collect()[0]
-    srow2 = (tf2.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-             .agg(F.sum("dl").alias("total_words"),
-                  F.count(F.lit(1)).alias("n_docs")).collect()[0])
-    assert (srow.total_words, srow.n_docs) == \
-        (srow2.total_words, srow2.n_docs)
-    for rel in (tf, dfr, dl, scal, qterms):
-        rel.unpersist()
