@@ -139,14 +139,17 @@ class Crawler:
         its whole error-injection matrix runs through).
 
         Listing runs the level-synchronous BFS with the seam's
-        ``read_dir`` (readdir failures recorded, subtree skipped, crawl
-        continues); reads+decodes run in Arrow-batched tasks with the
-        filesystem object shipped in the closure — one task per
-        ``file_workers`` slice, the Spark analogue of the reference
-        handing the FileSystem to each worker goroutine.  A file whose
-        ``open`` raises or whose JSON doesn't decode to the declared
-        field types yields a ``_is_corrupt`` row (Go json.Decode fails
-        the whole file -> zero value, crawler.go:189-199).
+        ``read_dir`` (``list_files_bfs``: narrow levels on the driver, the
+        rest in at most one job; readdir failures recorded, subtree
+        skipped, crawl continues); reads+decodes run in Arrow-batched
+        tasks with the filesystem object shipped in the closure — the
+        path relation is built already split into ``file_workers``
+        partitions (no shuffle), one task per slice, the Spark analogue
+        of the reference handing the FileSystem to each worker
+        goroutine.  A file whose ``open`` raises or whose JSON doesn't
+        decode to the declared field types yields a ``_is_corrupt`` row
+        (Go json.Decode fails the whole file -> zero value,
+        crawler.go:189-199).
 
         Use the Spark-native ``read_records`` for any storage Spark has a
         connector for — this seam is for custom/virtual filesystems and
@@ -203,12 +206,11 @@ class Crawler:
                 yield _pd.DataFrame(
                     rows, columns=[n for n, _ in fields] + ["_is_corrupt", "_file"])
 
-        paths = self.spark.createDataFrame(
-            [(p,) for p in files], T.StructType(
-                [T.StructField("_file", T.StringType(), False)]))
         n_parts = max(1, min(self.config.file_workers, len(files)))
-        return (paths.repartition(n_parts).mapInPandas(kernel, out_schema),
-                dir_errors)
+        paths = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize([(p,) for p in files], n_parts),
+            T.StructType([T.StructField("_file", T.StringType(), False)]))
+        return paths.mapInPandas(kernel, out_schema), dir_errors
 
     def collect(
         self,

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.crawl import bfs_levels
+
 
 class Pool:
     """Stateless operator namespace (the reference Pool is zero-sized —
@@ -47,23 +49,22 @@ class Pool:
         max_levels: int = 10_000,
     ) -> list[Any]:
         """Level-synchronous BFS from ``start``; ``searcher`` maps a parent
-        to its children.  Each level fans out over ``workers`` partitions
-        with a barrier between levels (reference wg.Wait, pool.go:182).
-        Returns every element reached, including ``start``.
+        to its children.  Returns every element reached, including
+        ``start``, level by level in the reference's order (pool.go:182
+        ``wg.Wait()`` between levels): ``start`` plus up to ``max_levels``
+        levels of children, the last of which is not searched.
+
+        Narrow levels (at most Spark's
+        ``parallelPartitionDiscovery.threshold`` elements) are searched on
+        the driver; the first wider level and everything below it run as
+        one job over ``workers`` partitions (``sources.crawl.bfs_levels``),
+        so ``searcher`` must be picklable.
         """
-        sc = self.spark.sparkContext
-        seen: list[Any] = [start]
-        frontier = [start]
-        for _ in range(max_levels):
-            if not frontier:
-                break
-            n = max(1, min(workers, len(frontier)))
-            children = (sc.parallelize(frontier, n)
-                        .flatMap(searcher)
-                        .collect())
-            frontier = children
-            seen.extend(children)
-        return seen
+        levels = bfs_levels([start], lambda x: list(searcher(x)),
+                            lambda kids: kids, spark=self.spark,
+                            workers=workers, max_levels=max_levels)
+        return [start] + [c for level in levels for _, kids in level
+                          for c in kids]
 
     # ---- Transform (pool.go:225-243) --------------------------------
     def transform(

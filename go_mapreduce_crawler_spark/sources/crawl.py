@@ -16,20 +16,24 @@ Spark-first realization:
 
 * ``list_files_bfs`` — the explicit parity implementation of the
   level-synchronous algorithm, kept for (a) custom filesystems Spark has no
-  connector for and (b) demonstrating the operator itself.  Each BFS level
-  is an RDD of directory paths fanned out over ``workers`` partitions; each
-  task lists its directories (the Searcher), partitions entries into
-  files/dirs, and the dirs feed the next level.  The per-level barrier
-  matches the reference's ``wg.Wait()`` (pool.go:182).  Scale note: at
-  cluster scale the level fan-out is bounded by directory count, exactly
-  like the reference's worker pool; file paths never pass through the
-  driver except as the per-level frontier (dirs only, not files), which is
-  the same driver-side frontier Spark's own parallel listing keeps.
+  connector for and (b) demonstrating the operator itself.
+
+* ``bfs_levels`` — the one BFS expansion behind ``list_files_bfs``,
+  ``Pool.list`` and the ``crawl`` data source's listing.  It follows the
+  policy Spark's own ``InMemoryFileIndex`` uses: a level whose frontier is
+  at most ``spark.sql.sources.parallelPartitionDiscovery.threshold`` wide
+  is expanded on the driver; the first wider frontier goes out as ONE job
+  in which each task expands its seed nodes' whole subtrees, and the
+  driver joins level k of every seed in frontier order.  That reproduces
+  the exact level order of the reference's per-level loop (pool.go:182
+  ``wg.Wait()``) with at most one Spark job per listing instead of one per
+  level.  Only the frontier (directories) and the per-seed results pass
+  through the driver, as in Spark's own parallel listing.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,6 +58,93 @@ def _default_searcher(path: str) -> tuple[list[str], list[str]]:
     return LocalFileSystem().read_dir(path)
 
 
+def _discovery_threshold(spark: SparkSession) -> int:
+    return int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+
+
+def bfs_levels(
+    start: Iterable[Any],
+    search: Callable[[Any], Any],
+    children: Callable[[Any], Iterable[Any]],
+    spark: SparkSession | None = None,
+    workers: int = 32,
+    max_levels: int | None = None,
+) -> list[list[tuple[Any, Any]]]:
+    """Level-synchronous BFS from ``start``: the levels in order, each a
+    list of ``(node, search(node))`` pairs; ``children(result)`` gives a
+    node's next-level nodes.  At most ``max_levels`` levels are searched.
+
+    With ``spark`` given, a frontier wider than Spark's discovery
+    threshold is expanded in one job of ``min(workers, len(frontier))``
+    tasks, each running this same loop without a session over its seeds'
+    subtrees (``search``/``children`` must then be picklable).  Without
+    ``spark`` every level is expanded where the call runs.
+    """
+    threshold = None if spark is None else _discovery_threshold(spark)
+    levels: list[list[tuple[Any, Any]]] = []
+    frontier = list(start)
+    while frontier and (max_levels is None or len(levels) < max_levels):
+        if threshold is not None and len(frontier) > threshold:
+            rest = None if max_levels is None else max_levels - len(levels)
+
+            def subtrees(seeds: Iterable[Any]) -> Iterable[list]:
+                for seed in seeds:
+                    yield bfs_levels([seed], search, children, max_levels=rest)
+
+            n = max(1, min(workers, len(frontier)))
+            trees = (spark.sparkContext.parallelize(frontier, n)
+                     .mapPartitions(subtrees).collect())
+            depth = max(len(t) for t in trees)
+            levels.extend([pair for t in trees if k < len(t) for pair in t[k]]
+                          for k in range(depth))
+            break
+        level = [(node, search(node)) for node in frontier]
+        levels.append(level)
+        frontier = [c for _, result in level for c in children(result)]
+    return levels
+
+
+def walk_tree(
+    read_dir: Callable[[str], tuple[list[str], list[str]]],
+    root: str,
+    spark: SparkSession | None = None,
+    workers: int = 32,
+    on_error: str = "record",
+    descend: Callable[[str], bool] | None = None,
+) -> tuple[list[str], list[tuple[str, str]]]:
+    """Directory-tree walk over ``bfs_levels``: ``(files, errors)``, both
+    sorted.  ``read_dir(dir) -> (dirs, files)`` is the Searcher
+    (crawler.go:120-154).
+
+    ``on_error="record"``: a raising ``read_dir`` (the reference's
+    readdir-error / readdir-panic kinds, crawler_test.go:417-427) records
+    ``(dir_path, message)`` and skips that subtree; the walk continues,
+    on the driver and inside a listing task alike.  ``"raise"`` lets the
+    error fail the walk.  ``descend(dir) -> bool`` prunes subtrees before
+    they are read (filter pushdown), the root included.
+    """
+    record = on_error == "record"
+
+    def search(d: str) -> tuple[list[str], list[str], tuple[str, str] | None]:
+        try:
+            dirs, files = read_dir(d)
+        except Exception as ex:
+            if not record:
+                raise
+            return [], [], (d, f"{d}: {ex}")
+        if descend is not None:
+            dirs = [s for s in dirs if descend(s)]
+        return dirs, files, None
+
+    start = [root] if descend is None or descend(root) else []
+    levels = bfs_levels(start, search, lambda r: r[0], spark=spark,
+                        workers=workers)
+    results = [r for level in levels for _, r in level]
+    return (sorted(f for r in results for f in r[1]),
+            sorted(r[2] for r in results if r[2]))
+
+
 def list_files_bfs(
     spark: SparkSession,
     root: str,
@@ -61,49 +152,18 @@ def list_files_bfs(
     searcher: Callable[[str], tuple[list[str], list[str]]] | None = None,
     on_error: str = "raise",
 ) -> list[str] | tuple[list[str], list[tuple[str, str]]]:
-    """Level-synchronous BFS listing (reference pool.go:168-196 semantics).
+    """Level-synchronous BFS listing (reference pool.go:168-196 semantics)
+    through ``walk_tree``: narrow levels on the driver, the rest in at
+    most one job.
 
-    Returns the full list of file paths.  Only directory paths (the
-    frontier) transit the driver between levels; file paths are collected
-    at the end — callers that need true no-driver-materialization use
-    ``list_files`` instead.
+    Returns the sorted list of file paths.  Callers that need true
+    no-driver-materialization use ``list_files`` instead.
 
-    ``on_error="record"``: a raising searcher (the reference's
-    readdir-error / readdir-panic kinds, crawler_test.go:417-427) records
-    ``(dir_path, message)`` instead of failing the job — that directory's
-    subtree is unreachable, everything else continues — and the return
-    becomes ``(files, errors)``.
+    ``on_error="record"``: a raising searcher records ``(dir_path,
+    message)`` instead of failing the listing — that directory's subtree
+    is unreachable, everything else continues — and the return becomes
+    ``(files, errors)``.
     """
-    searcher = searcher or _default_searcher
-    sc = spark.sparkContext
-    frontier = [root]
-    all_files: list[str] = []
-    errors: list[tuple[str, str]] = []
-    record = on_error == "record"
-
-    def search_partition(
-        paths: Iterable[str],
-    ) -> Iterator[tuple[list[str], list[str], tuple[str, str] | None]]:
-        for p in paths:
-            if record:
-                try:
-                    dirs, files = searcher(p)
-                except Exception as ex:  # readdir-error/panic -> recorded
-                    yield [], [], (p, f"{p}: {ex}")
-                    continue
-                yield dirs, files, None
-            else:
-                dirs, files = searcher(p)
-                yield dirs, files, None
-
-    while frontier:
-        n_parts = max(1, min(workers, len(frontier)))
-        level = (sc.parallelize(frontier, n_parts)
-                 .mapPartitions(search_partition)
-                 .collect())
-        frontier = [d for dirs, _, _ in level for d in dirs]
-        all_files.extend(f for _, files, _ in level for f in files)
-        errors.extend(pair for _, _, pair in level if pair)
-    if record:
-        return sorted(all_files), sorted(errors)
-    return sorted(all_files)
+    files, errors = walk_tree(searcher or _default_searcher, root,
+                              spark=spark, workers=workers, on_error=on_error)
+    return (files, errors) if on_error == "record" else files

@@ -46,6 +46,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     StringEndsWith, StringStartsWith,
                                     WriterCommitMessage)
 
+from .crawl import walk_tree
+
 DEFAULT_FS = "go_mapreduce_crawler_spark.sources.pyfs:LocalFileSystem"
 SCHEMA = "path string, content binary, error string"
 
@@ -53,30 +55,6 @@ SCHEMA = "path string, content binary, error string"
 def _load_fs(spec: str):
     mod, _, cls = spec.partition(":")
     return getattr(import_module(mod), cls)()
-
-
-def _local_bfs(fs, root, descend=None):
-    """Driver-side BFS through the FS seam — the ONE listing loop both
-    the batch reader and the stream reader use.  Returns ``(files,
-    errors)`` with errors as ``(dir_path, message)`` pairs (readdir
-    failures skip the subtree, the walk continues — the reference's
-    readdir-error contract).  ``descend(dir) -> bool`` prunes subtrees
-    (filter pushdown)."""
-    files: list[str] = []
-    errors: list[tuple[str, str]] = []
-    frontier = [root] if descend is None or descend(root) else []
-    while frontier:
-        nxt: list[str] = []
-        for d in frontier:
-            try:
-                dirs, fls = fs.read_dir(d)
-            except Exception as ex:
-                errors.append((d, f"{d}: {ex}"))
-                continue
-            nxt.extend(s for s in dirs if descend is None or descend(s))
-            files.extend(fls)
-        frontier = nxt
-    return sorted(files), sorted(errors)
 
 
 class CrawlDataSource(DataSource):
@@ -136,15 +114,17 @@ class CrawlReader(DataSourceReader):
         return all(p.startswith(dd) or dd.startswith(p) for p in self.prefixes)
 
     def partitions(self):
-        """Driver-side listing through the FS seam (BFS; only the dir
-        frontier is held, like the reference's List).  Files are chunked
+        """Driver-side listing through the FS seam (``walk_tree`` with no
+        session: the planner cannot start a job, so every BFS level is
+        read here; only the dir frontier is held, like the reference's
+        List).  Files are chunked
         into input partitions; readdir errors become one-row error
         partitions so the error contract covers the listing too.  NOTE:
         consumed path filters bind error rows as well (SQL semantics —
         a readdir-error row whose dir path fails the filter is dropped);
         query without path filters for full error visibility."""
-        files, errors = _local_bfs(self._fs(), self.root,
-                                   descend=self._could_contain)
+        files, errors = walk_tree(self._fs().read_dir, self.root,
+                                  descend=self._could_contain)
         files = [f for f in files if self._match(f)]
         errors = [e for e in errors if self._match(e[0])]
         parts = [InputPartition(("files", files[i:i + self.chunk]))
@@ -239,7 +219,7 @@ class CrawlStreamReader(SimpleDataSourceStreamReader):
         return {"seen": []}
 
     def _list(self):
-        return _local_bfs(self._fs(), self.root)
+        return walk_tree(self._fs().read_dir, self.root)
 
     def _rows(self, paths):
         fs = self._fs()

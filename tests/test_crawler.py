@@ -447,3 +447,152 @@ def test_special_char_filenames_not_miscounted(spark, tmp_path):
     assert res.n_files == 2
     assert res.n_corrupt == 0
     assert res.error is None
+
+
+# ---- BFS expansion: driver levels up to the discovery threshold, then one job ----
+
+def _ref_pool_list(start, searcher, max_levels=10_000):
+    """The reference's per-level loop (pool.go:173-195), no Spark."""
+    seen, frontier = [start], [start]
+    for _ in range(max_levels):
+        if not frontier:
+            break
+        frontier = [c for x in frontier for c in searcher(x)]
+        seen.extend(frontier)
+    return seen
+
+
+def _ref_walk(root, read_dir):
+    """Per-level directory walk with readdir errors recorded."""
+    files, errors, frontier = [], [], [root]
+    while frontier:
+        nxt = []
+        for d in frontier:
+            try:
+                dirs, fls = read_dir(d)
+            except Exception as ex:
+                errors.append((d, f"{d}: {ex}"))
+                continue
+            nxt.extend(dirs)
+            files.extend(fls)
+        frontier = nxt
+    return sorted(files), sorted(errors)
+
+
+def _children_searcher():
+    """Pool.list searcher over a tree: a dir's children, sorted.  Built
+    in function scope so it pickles by value (see ``_faulty_fs``)."""
+    def children(path):
+        if not os.path.isdir(path):
+            return []
+        return sorted(os.path.join(path, e) for e in os.listdir(path))
+    return children
+
+
+_sorted_children = _children_searcher()
+
+
+@pytest.fixture(scope="module")
+def wide_tree(tmp_path_factory):
+    """40 top-level dirs (wider than the default discovery threshold of
+    32) x 3 levels, one JSON file in every dir."""
+    root = str(tmp_path_factory.mktemp("wide") / "tree")
+    for d in range(40):
+        for sub in ("", "/a", "/b", "/a/x"):
+            _write(f"{root}/d{d}{sub}/f.json", {"data": 1})
+    _write(f"{root}/top.json", {"data": 1})
+    return root
+
+
+def _jobs_in(spark, fn):
+    import uuid
+
+    from go_mapreduce_crawler_spark.cancel import job_group
+
+    with job_group(spark, f"bfs-{uuid.uuid4().hex}") as gid:
+        fn()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_discovery_threshold_is_spark_default(spark):
+    """The tests below rely on the wide tree crossing the threshold."""
+    from go_mapreduce_crawler_spark.sources.crawl import _discovery_threshold
+    assert _discovery_threshold(spark) == 32
+
+
+@pytest.mark.parametrize("tree", ["golden_tree", "wide_tree"])
+def test_pool_list_matches_per_level_loop(spark, tree, request):
+    """Exact order, on a driver-only tree and on one that takes the
+    one-job path."""
+    root = request.getfixturevalue(tree)
+    out = Pool(spark).list(root, _sorted_children, workers=4)
+    assert out == _ref_pool_list(root, _sorted_children)
+
+
+@pytest.mark.parametrize("tree", ["golden_tree", "wide_tree"])
+def test_list_files_bfs_matches_per_level_loop(spark, tree, request):
+    from go_mapreduce_crawler_spark.sources.pyfs import LocalFileSystem
+
+    root = request.getfixturevalue(tree)
+    read_dir = LocalFileSystem().read_dir
+    want_files, _ = _ref_walk(root, read_dir)
+    assert list_files_bfs(spark, root, workers=4) == want_files
+    assert list_files_bfs(spark, root, workers=4,
+                          on_error="record") == (want_files, [])
+
+
+def test_pool_list_numeric_levels_exact_order(spark):
+    """Integer nodes: 40 children at level 1 (job path), order kept
+    across seeds and partitions."""
+    def searcher(x):
+        if x == 0:
+            return list(range(1, 41))
+        return [x * 100 + i for i in range(3)] if x < 10_000 else []
+
+    out = Pool(spark).list(0, searcher, workers=3)
+    assert out == _ref_pool_list(0, searcher)
+    assert len(out) == 1 + 40 + 120 + 360
+
+
+@pytest.mark.parametrize("max_levels", [1, 2, 3])
+def test_pool_list_max_levels_on_job_path(spark, wide_tree, max_levels):
+    """start plus up to max_levels levels of children; the last level is
+    not searched, whether the cut falls on the driver or in the job."""
+    out = Pool(spark).list(wide_tree, _sorted_children, workers=4,
+                           max_levels=max_levels)
+    assert out == _ref_pool_list(wide_tree, _sorted_children, max_levels)
+
+
+def test_bfs_listing_runs_at_most_one_job(spark, golden_tree, wide_tree):
+    """Guard: one job per Pool.list / list_files_bfs call at most, and
+    none while every level stays under the threshold."""
+    pool = Pool(spark)
+    assert _jobs_in(spark, lambda: pool.list(golden_tree, _sorted_children)) == 0
+    assert _jobs_in(spark, lambda: list_files_bfs(spark, golden_tree)) == 0
+    assert _jobs_in(spark, lambda: pool.list(wide_tree, _sorted_children,
+                                             workers=4)) == 1
+    assert _jobs_in(spark, lambda: list_files_bfs(spark, wide_tree,
+                                                  workers=4)) == 1
+
+
+def test_readdir_faults_in_listing_job_match_driver_path(spark, wide_tree):
+    """readdir-error / readdir-panic inside a listing task: the failing
+    subtree is recorded and skipped, the task does not fail, and the
+    result equals the driver-only walk and the per-level loop."""
+    from go_mapreduce_crawler_spark.sources.crawl import walk_tree
+
+    fs = _faulty_fs(dir_fail=("/d3", "/d17/a"), dir_panic=("/d25", "/d39/b"))
+    got = list_files_bfs(spark, wide_tree, workers=4, searcher=fs.read_dir,
+                         on_error="record")
+    assert got == walk_tree(fs.read_dir, wide_tree)
+    assert got == _ref_walk(wide_tree, fs.read_dir)
+    files, errors = got
+    assert [d.rsplit("/", 2)[-2:] for d, _ in errors] == [
+        ["d17", "a"], ["tree", "d25"], ["tree", "d3"], ["d39", "b"]]
+    assert len(files) == 1 + 40 * 4 - 4 - 2 - 4 - 1
+
+    res = Crawler(spark, CrawlConfig(search_workers=4, file_workers=4)).collect(
+        wide_tree, SCHEMA, filesystem=fs)
+    assert res.value == {"data_sum": len(files)}
+    assert res.n_dir_errors == 4
+    assert res.error is not None and "readdir" in res.error
