@@ -52,9 +52,9 @@ def revenue() -> Column:
 # timezone — a query built on them silently returns different buckets on
 # a non-UTC driver (verified: min epoch-day shifts 19723 -> 19722 under
 # America/New_York).  These helpers derive every calendar index from
-# unix_micros() integer arithmetic, which is invariant; the DuckDB twins
-# are the *_SQL strings (epoch_us on the NTZ column yields the same
-# integer).  All assume ts >= epoch (test data is 2024+; DIV truncation
+# unix_micros() integer arithmetic, which is invariant; the DuckDB
+# oracles compute the same integers from epoch_us on the NTZ column.
+# All assume ts >= epoch (test data is 2024+; DIV truncation
 # vs floor division only diverges for negative micros).
 
 def ts_day(col: str = "ts") -> Column:
@@ -76,15 +76,3 @@ def ts_day_str(col: str = "ts") -> Column:
         F.expr(f"CAST(unix_micros({col}) DIV 86400000000 AS INT)")
     ).cast("string")
 
-
-def duck_ts_day(col: str = "ts") -> str:
-    return f"CAST(epoch_us({col}) // 86400000000 AS INT)"
-
-
-def duck_ts_hour(col: str = "ts") -> str:
-    return f"CAST((epoch_us({col}) // 3600000000) % 24 AS INT)"
-
-
-def duck_ts_day_str(col: str = "ts") -> str:
-    return (f"CAST(DATE '1970-01-01' + CAST(epoch_us({col}) // "
-            f"86400000000 AS INT) AS VARCHAR)")

@@ -32,8 +32,12 @@ replay fixture write is test plumbing, not the operator.
 from __future__ import annotations
 
 import atexit
+import glob
+import itertools
+import os
 import shutil
 import tempfile
+import time
 
 from pyspark.sql import functions as F
 
@@ -85,21 +89,50 @@ def _fresh_state(name: str) -> tuple[str, str]:
     return f"{root}/state", f"{root}/ckpt"
 
 
+def _file_stream(spark, in_dir: str, schema):
+    """The fixture files under ``in_dir`` as a stream of one file per
+    micro-batch."""
+    return (spark.readStream.option("maxFilesPerTrigger", "1")
+            .schema(schema).parquet(in_dir))
+
+
+def _split_stream(spark, sf_dir: str, kind: str, df, name: str):
+    """``df`` split into REPLAY_SPLITS parquet files (the fixture
+    cached as ``kind``) and streamed one file per micro-batch, plus
+    fresh state; returns (streaming_df, state_dir, ckpt_dir)."""
+
+    def write(in_dir, _root):
+        df.repartition(REPLAY_SPLITS).write.mode(
+            "overwrite").parquet(in_dir)
+
+    in_dir = _fixture_dir(sf_dir, kind, write)
+    return (_file_stream(spark, in_dir, df.schema), *_fresh_state(name))
+
+
+def _write_ranges(df, key, lo: int, hi: int, in_dir: str,
+                  root: str) -> None:
+    """Write ``df`` as REPLAY_SPLITS files covering ascending ``key``
+    ranges of [lo, hi), one file per range in ascending mod-time
+    order, so the file source's oldest-first replay delivers rows in
+    ``key`` order across micro-batches."""
+    os.makedirs(in_dir)
+    for i in range(REPLAY_SPLITS):
+        a = lo + (hi - lo) * i // REPLAY_SPLITS
+        b = lo + (hi - lo) * (i + 1) // REPLAY_SPLITS
+        stage = f"{root}/stage{i}"
+        (df.filter((key >= a) & (key < b))
+           .coalesce(1).write.mode("overwrite").parquet(stage))
+        part = glob.glob(f"{stage}/part-*.parquet")[0]
+        shutil.copyfile(part, f"{in_dir}/{i:02d}.parquet")
+        time.sleep(0.05)   # strictly increasing mod-times
+
+
 def _replay(spark, sf_dir: str, name: str):
     """Events as a REPLAY_SPLITS-file parquet fixture (cached) plus
     fresh (state_dir, ckpt_dir); returns (batch_df, streaming_df,
     state_dir, ckpt_dir)."""
     batch = load_table(spark, sf_dir, "events")
-
-    def write(in_dir, _root):
-        batch.repartition(REPLAY_SPLITS).write.mode(
-            "overwrite").parquet(in_dir)
-
-    in_dir = _fixture_dir(sf_dir, "events4", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(batch.schema).parquet(in_dir))
-    state, ckpt = _fresh_state(name)
-    return batch, stream, state, ckpt
+    return (batch, *_split_stream(spark, sf_dir, "events4", batch, name))
 
 
 def _await_drained(q, name: str) -> None:
@@ -207,28 +240,11 @@ def _replay_ordered_docs(spark, sf_dir: str, name: str):
     docs = load_table(spark, sf_dir, "documents")
 
     def write(in_dir, root):
-        import glob as _glob
-        import os
-        import shutil as _sh
-        import time
-
-        os.makedirs(in_dir)
         mx = docs.agg(F.max("doc_id")).collect()[0][0]
-        for i in range(REPLAY_SPLITS):
-            lo = (mx + 1) * i // REPLAY_SPLITS
-            hi = (mx + 1) * (i + 1) // REPLAY_SPLITS
-            stage = f"{root}/stage{i}"
-            (docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-                 .coalesce(1).write.mode("overwrite").parquet(stage))
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            _sh.copyfile(part, f"{in_dir}/{i:02d}.parquet")
-            time.sleep(0.05)   # strictly increasing mod-times
+        _write_ranges(docs, F.col("doc_id"), 0, mx + 1, in_dir, root)
 
     in_dir = _fixture_dir(sf_dir, "docs_ordered", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(docs.schema).parquet(in_dir))
-    state, ckpt = _fresh_state(name)
-    return stream, state, ckpt
+    return (_file_stream(spark, in_dir, docs.schema), *_fresh_state(name))
 
 
 def q_stream_windowed_span_dedup_replay(spark, sf_dir):
@@ -272,15 +288,8 @@ def q_stream_gdpr_forget_replay(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer")
     requests = (cust.filter(F.col("c_custkey") % _FORGET == 0)
                 .select(F.col("c_custkey").alias("fk")))
-
-    def write(in_dir, _root):
-        requests.repartition(REPLAY_SPLITS).write.mode(
-            "overwrite").parquet(in_dir)
-
-    in_dir = _fixture_dir(sf_dir, "gdpr_requests", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(requests.schema).parquet(in_dir))
-    state, ckpt = _fresh_state("gdpr")
+    stream, state, ckpt = _split_stream(spark, sf_dir, "gdpr_requests",
+                                        requests, "gdpr")
     orders = load_table(spark, sf_dir, "orders")
     q = stream_gdpr_forget(stream, orders, state, ckpt)
     _await_drained(q, "gdpr_forget")
@@ -307,15 +316,8 @@ def q_stream_ivf_index_replay(spark, sf_dir):
     from .similarity import ivf_base_cell_expr, ivf_cell_stats_of
 
     vecs = load_table(spark, sf_dir, "embeddings")
-
-    def write(in_dir, _root):
-        vecs.repartition(REPLAY_SPLITS).write.mode(
-            "overwrite").parquet(in_dir)
-
-    in_dir = _fixture_dir(sf_dir, "embeddings4", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(vecs.schema).parquet(in_dir))
-    state, ckpt = _fresh_state("ivf")
+    stream, state, ckpt = _split_stream(spark, sf_dir, "embeddings4",
+                                        vecs, "ivf")
     index_of = ivf_cell_stats_of(ivf_base_cell_expr(spark, sf_dir))
     q = stream_ivf_index(stream, index_of, state, ckpt)
     _await_drained(q, "ivf_index")
@@ -341,7 +343,17 @@ def q_stream_inverted_index_replay(spark, sf_dir):
     return inverted_index_finalize(read_mv_state(spark, state))
 
 
-_MEM_SINK_SEQ = [0]
+_MEM_SINK_SEQ = itertools.count(1)
+
+
+def _drain_to_memory(df, label: str, mode: str):
+    """Run the streaming ``df`` to completion into a fresh memory-sink
+    table (availableNow) and return that table."""
+    name = f"sgraft_{label}_replay_{next(_MEM_SINK_SEQ)}"
+    q = (df.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    _await_drained(q, label)
+    return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 def _replay_ordered_events(spark, sf_dir: str, name: str):
@@ -354,29 +366,13 @@ def _replay_ordered_events(spark, sf_dir: str, name: str):
     ev = load_table(spark, sf_dir, "events")
 
     def write(in_dir, root):
-        import glob as _glob
-        import os
-        import shutil as _sh
-        import time
-
-        os.makedirs(in_dir)
         us = F.unix_micros("ts")
         lo_hi = ev.agg(F.min(us).alias("lo"), F.max(us).alias("hi")) \
                   .collect()[0]
-        lo, hi = lo_hi.lo, lo_hi.hi + 1
-        for i in range(REPLAY_SPLITS):
-            a = lo + (hi - lo) * i // REPLAY_SPLITS
-            b = lo + (hi - lo) * (i + 1) // REPLAY_SPLITS
-            stage = f"{root}/stage{i}"
-            (ev.filter((us >= a) & (us < b))
-               .coalesce(1).write.mode("overwrite").parquet(stage))
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            _sh.copyfile(part, f"{in_dir}/{i:02d}.parquet")
-            time.sleep(0.05)   # strictly increasing mod-times
+        _write_ranges(ev, us, lo_hi.lo, lo_hi.hi + 1, in_dir, root)
 
     in_dir = _fixture_dir(sf_dir, "events_ordered", write)
-    return (spark.readStream.option("maxFilesPerTrigger", "1")
-            .schema(ev.schema).parquet(in_dir))
+    return _file_stream(spark, in_dir, ev.schema)
 
 
 def q_stream_sessionize_replay(spark, sf_dir):
@@ -393,13 +389,8 @@ def q_stream_sessionize_replay(spark, sf_dir):
     stream = _replay_ordered_events(spark, sf_dir, "sess")
     from ..streaming.sessions import stream_sessionize
 
-    _MEM_SINK_SEQ[0] += 1
-    name = f"sgraft_sessions_replay_{_MEM_SINK_SEQ[0]}"
-    q = (stream_sessionize(stream).writeStream.format("memory")
-         .queryName(name).outputMode("complete")
-         .trigger(availableNow=True).start())
-    _await_drained(q, "sessionize")
-    return spark.sql(f"SELECT * FROM {name}")
+    return _drain_to_memory(stream_sessionize(stream), "sessionize",
+                            "complete")
 
 
 def q_stream_anomaly_scoring_replay(spark, sf_dir):
@@ -416,13 +407,9 @@ def q_stream_anomaly_scoring_replay(spark, sf_dir):
 
     batch, stream, _, _ = _replay(spark, sf_dir, "anom")
     cell_means, var_t = seasonal_baseline(batch)
-    _MEM_SINK_SEQ[0] += 1
-    name = f"sgraft_anom_replay_{_MEM_SINK_SEQ[0]}"
-    q = (stream_anomaly_scoring(stream, cell_means, var_t)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    _await_drained(q, "anomaly_scoring")
-    return spark.sql(f"SELECT * FROM {name}")
+    return _drain_to_memory(stream_anomaly_scoring(stream, cell_means,
+                                                   var_t),
+                            "anomaly_scoring", "append")
 
 
 def q_stream_trending_topk_replay(spark, sf_dir):
@@ -442,13 +429,8 @@ def q_stream_trending_topk_replay(spark, sf_dir):
     # of any engine-version lateness policy — same insurance as the
     # session replay.
     stream = _replay_ordered_events(spark, sf_dir, "trend")
-    _MEM_SINK_SEQ[0] += 1
-    name = f"sgraft_trend_replay_{_MEM_SINK_SEQ[0]}"
-    q = (stream_trending_counts(stream).writeStream.format("memory")
-         .queryName(name).outputMode("complete")
-         .trigger(availableNow=True).start())
-    _await_drained(q, "trending_counts")
-    return trending_topk_finalize(spark.sql(f"SELECT * FROM {name}"))
+    return trending_topk_finalize(_drain_to_memory(
+        stream_trending_counts(stream), "trending_counts", "complete"))
 
 
 def q_stream_decontam_bloom_replay(spark, sf_dir):
@@ -481,17 +463,9 @@ def _bloom_stream(spark, sf_dir):
     from .text import EVAL_MOD
 
     docs = load_table(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("doc_id") % EVAL_MOD == 0)
-
-    def write(in_dir, _root):
-        ev.repartition(REPLAY_SPLITS).write.mode(
-            "overwrite").parquet(in_dir)
-
-    in_dir = _fixture_dir(sf_dir, "docs_eval4", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(docs.schema).parquet(in_dir))
-    state, ckpt = _fresh_state("bloom")
-    return stream, state, ckpt
+    return _split_stream(spark, sf_dir, "docs_eval4",
+                         docs.filter(F.col("doc_id") % EVAL_MOD == 0),
+                         "bloom")
 
 
 def _bloom_finalize(spark, sf_dir, state):
@@ -526,17 +500,8 @@ def _cdc_stream(spark, sf_dir):
     for the restart-recovery test."""
     from .maintenance import cdc_changelog
 
-    log = cdc_changelog(spark, sf_dir)
-
-    def write(in_dir, _root):
-        log.repartition(REPLAY_SPLITS).write.mode(
-            "overwrite").parquet(in_dir)
-
-    in_dir = _fixture_dir(sf_dir, "cdc_log4", write)
-    stream = (spark.readStream.option("maxFilesPerTrigger", "1")
-              .schema(log.schema).parquet(in_dir))
-    state, ckpt = _fresh_state("cdc")
-    return stream, state, ckpt
+    return _split_stream(spark, sf_dir, "cdc_log4",
+                         cdc_changelog(spark, sf_dir), "cdc")
 
 
 def _cdc_finalize(spark, sf_dir, state):
@@ -592,8 +557,6 @@ def q_stream_stream_join_replay(spark, sf_dir):
     out = joined.select(
         "p_id", "v_id", "user_id",
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("gap_us"))
-    _MEM_SINK_SEQ[0] += 1
-    name = f"sgraft_ssjoin_replay_{_MEM_SINK_SEQ[0]}"
     # Skip the trailing NO-DATA micro-batch (r12, guide §1/§7 measured:
     # recentProgress showed a 5th batch with rows_in=0 whose only work
     # is state eviction — 0.9-2s of 32 state-store commits).  For an
@@ -610,12 +573,9 @@ def q_stream_stream_join_replay(spark, sf_dir):
     prev = spark.conf.get(key, "true")
     spark.conf.set(key, "false")
     try:
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        _await_drained(q, "stream_stream_join")
+        return _drain_to_memory(out, "stream_stream_join", "append")
     finally:
         spark.conf.set(key, prev)
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def q_stream_psi_drift_replay(spark, sf_dir):

@@ -13,10 +13,43 @@ and unbounded.
 streaming's version of dedup.q_dedup_exact: state holds one entry per
 key seen inside the watermark horizon, so memory is bounded by key
 arrival rate x watermark, not stream length.
+
+The eleven ``stream_*`` kernels that take ``state_dir`` and
+``checkpoint`` keep their state as a TABLE carried across micro-batches
+by one versioned-snapshot protocol, ``_snapshot_stream`` — the
+reference's monoid fold (a neutral element plus an associative combine,
+crawler.go:31, 41-43) applied once per micro-batch.  Each micro-batch:
+
+1. lists the committed versions under ``state_dir`` (``_state_versions``
+   is the first call of every micro-batch);
+2. takes the newest version below its batch id as the predecessor
+   (None on the first batch);
+3. combines the batch partial with the predecessor — the kernel's own
+   algebra — and writes the result as ``state_v<batch_id>``;
+4. deletes every version older than the predecessor.
+
+The query runs under an ``availableNow`` trigger with its checkpoint.
+A retried micro-batch (a crash between the state write and the
+checkpoint commit) keeps its batch id, so it merges from the same
+predecessor and overwrites its own version, including a torn one:
+the state is exactly-once with no sink transaction.  That is why the
+predecessor itself is kept until the next batch commits.
+
+Most kernels combine with ``_keyed_merge``: a full-outer join of the
+predecessor and the partial on the key columns, a NULL key matching a
+NULL key as the batch twin's ``groupBy`` groups them, each value
+column folded with its own zero and combine (sum, ``bit_or``, postings
+concat).  The two windowed dedup kernels share ``_window_step``, which
+keeps an append-only verdict log next to a postings snapshot pruned to
+the trailing window.  State is bounded by key cardinality or window
+size, never by stream length.
 """
 
 from __future__ import annotations
 
+import operator
+import shutil
+from functools import reduce
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
@@ -234,16 +267,12 @@ def stream_mv_refresh(events: DataFrame, state_dir: str, checkpoint: str):
     MERGE — the streaming face of maintenance.q_mv_incremental_refresh
     and the third state pattern next to applyInPandasWithState (store
     keyed state) and windowed aggregates (store windows): here the STATE
-    IS A TABLE, merged monoid-style once per micro-batch.
+    IS A TABLE, merged monoid-style once per micro-batch (the
+    versioned-snapshot protocol, module docstring).
 
     Per batch: partial-aggregate the batch (count + exact INTEGER-CENTS
-    sum per event_type — map-side combine applies within the batch),
-    read the previous snapshot, full-outer monoid merge, and write
-    snapshot ``state_v<batchId>``.  Versioned snapshots make retries
-    IDEMPOTENT (a replayed batch overwrites its own version and merges
-    from the same predecessor), which is exactly-once for the view
-    without any sink transaction support.  Old versions are pruned
-    after commit.
+    sum per event_type — map-side combine applies within the batch)
+    and full-outer merge it into the previous snapshot.
 
     Arithmetic is engine-portable BY CONSTRUCTION: each value is
     quantized to integer cents via ``FLOOR(value * 100 + 0.5)`` —
@@ -260,46 +289,25 @@ def stream_mv_refresh(events: DataFrame, state_dir: str, checkpoint: str):
     """
     spark = events.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         partial = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.expr(
                 "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)")).alias("s"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("event_type").alias("k"),
-                            F.col("n").alias("n1"), F.col("s").alias("s1"))
-            d = partial.select(F.col("event_type").alias("k"),
-                               F.col("n").alias("n2"), F.col("s").alias("s2"))
-            z = F.lit(0).cast("bigint")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("event_type"),
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0))).alias("n"),
-                              (F.coalesce("s1", z) + F.coalesce("s2", z))
-                              .cast("bigint").alias("s")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial, ["event_type"], {
+            "n": (F.lit(0), operator.add),
+            "s": (F.lit(0).cast("bigint"),
+                  lambda a, b: (a + b).cast("bigint"))})
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(events, state_dir, checkpoint, step)
 
 
 def stream_cell_counts(cells: DataFrame, state_dir: str,
                        checkpoint: str):
     """foreachBatch-maintained CELL-COUNT state over an arbitrary
     2-part key (``k1``, ``k2``) — the pure count monoid (commutative,
-    associative; the versioned-snapshot protocol of stream_mv_refresh
-    makes batch retries idempotent, so the maintained counts are
-    exactly-once).  Used by the streaming PSI monitor
+    associative, so the maintained counts are exactly-once under the
+    versioned-snapshot protocol).  Used by the streaming PSI monitor
     (streaming_replay.q_stream_psi_drift_replay): cells = (event_type,
     bucket) and the finalized state is the current-window histogram.
 
@@ -309,30 +317,13 @@ def stream_cell_counts(cells: DataFrame, state_dir: str,
     """
     spark = cells.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         partial = batch_df.groupBy("k1", "k2").agg(
             F.count(F.lit(1)).alias("n"))
-        prevs = [v for v in _state_versions(state_dir) if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select("k1", "k2", F.col("n").alias("n1"))
-            d = partial.select("k1", "k2", F.col("n").alias("n2"))
-            merged = (p.join(d, ["k1", "k2"], "full_outer")
-                      .select("k1", "k2",
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0))).alias("n")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial, ["k1", "k2"],
+                            {"n": (F.lit(0), operator.add)})
 
-    return (cells.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(cells, state_dir, checkpoint, step)
 
 
 def read_mv_state(spark, state_dir: str) -> DataFrame:
@@ -357,37 +348,26 @@ def stream_gdpr_forget(requests: DataFrame, orders: DataFrame,
     Exactly-once for free: deletion by key is commutative AND
     idempotent (removing a key twice == once), so the finalized view
     is independent of micro-batch boundaries and retries — the
-    versioned-snapshot protocol (stream_mv_refresh) just makes the
-    file writes atomic per batch.  Batch 0 seeds the view from the
-    orders table (one partial+final agg); every later batch's work is
-    |view| x |batch keys| — the view never re-derives from raw orders.
+    versioned snapshots just make the file writes atomic per batch.
+    The first batch seeds the view from the orders table (one
+    partial+final agg); every later batch's work is |view| x |batch
+    keys| — the view never re-derives from raw orders.
     """
     spark = requests.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
+    def step(batch_df: DataFrame, batch_id: int, prev):
+        if prev is not None:
+            view = spark.read.parquet(f"{state_dir}/state_v{prev}")
         else:
-            prev = orders.groupBy("o_custkey").agg(
+            view = orders.groupBy("o_custkey").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
                  .alias("s"))
         keys = batch_df.select("fk").distinct()
-        merged = prev.join(keys, prev["o_custkey"] == keys["fk"],
-                           "left_anti")
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return view.join(keys, view["o_custkey"] == keys["fk"],
+                         "left_anti")
 
-    return (requests.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(requests, state_dir, checkpoint, step)
 
 
 def stream_ivf_index(vecs: DataFrame, index_of, state_dir: str,
@@ -396,53 +376,24 @@ def stream_ivf_index(vecs: DataFrame, index_of, state_dir: str,
     each micro-batch is assigned to the FROZEN base-trained centroids
     (``index_of`` = similarity.ivf_cell_stats_of(cell_expr) — a
     row-local argmax, zero shuffles before the per-cell partial agg)
-    and the per-cell (n, checksum-lane) MONOID state merges under the
-    versioned-snapshot protocol — ANN serving keeps pace with vector
-    ingest without ever re-assigning the corpus (the batch twin is
+    and the per-cell (n, checksum-lane) MONOID state merges into the
+    snapshot — ANN serving keeps pace with vector ingest without ever
+    re-assigning the corpus (the batch twin is
     similarity.q_ivf_index_delta).
     """
     from ..sources.tables import spread
 
     spark = vecs.sparkSession
+    add = (F.lit(0).cast("long"), operator.add)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         # spread: the 1-file micro-batch's 16-centroid dot-fold
         # assignment ran in one task (guide §2.5; span-merge lesson)
         partial = index_of(spread(batch_df))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("cell").alias("k"),
-                            F.col("n").alias("n1"),
-                            F.col("l1").alias("a1"),
-                            F.col("l2").alias("a2"))
-            d = partial.select(F.col("cell").alias("k"),
-                               F.col("n").alias("n2"),
-                               F.col("l1").alias("b1"),
-                               F.col("l2").alias("b2"))
-            z = F.lit(0).cast("long")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("cell"),
-                              (F.coalesce("n1", z)
-                               + F.coalesce("n2", z)).alias("n"),
-                              (F.coalesce("a1", z)
-                               + F.coalesce("b1", z)).alias("l1"),
-                              (F.coalesce("a2", z)
-                               + F.coalesce("b2", z)).alias("l2")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial, ["cell"],
+                            {"n": add, "l1": add, "l2": add})
 
-    return (vecs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(vecs, state_dir, checkpoint, step)
 
 
 def stream_bloom_build(docs: DataFrame, bloom_of, state_dir: str,
@@ -464,37 +415,14 @@ def stream_bloom_build(docs: DataFrame, bloom_of, state_dir: str,
 
     spark = docs.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         # spread: the 1-file micro-batch's gram+md5-probe pass ran in
         # one task (guide §2.5; span-merge lesson)
         partial = bloom_of(spread(batch_df.select("doc_id", "text")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("slot").alias("k"),
-                            F.col("word").alias("w1"))
-            d = partial.select(F.col("slot").alias("k"),
-                               F.col("word").alias("w2"))
-            z = F.lit(0).cast("long")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("slot"),
-                              F.coalesce("w1", z)
-                              .bitwiseOR(F.coalesce("w2", z))
-                              .alias("word")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial, ["slot"], {
+            "word": (F.lit(0).cast("long"), lambda a, b: a.bitwiseOR(b))})
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(docs, state_dir, checkpoint, step)
 
 
 def stream_cdc_merge(changes: DataFrame, state_dir: str,
@@ -514,29 +442,17 @@ def stream_cdc_merge(changes: DataFrame, state_dir: str,
     """
     spark = changes.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         partial = (batch_df.groupBy("k")
                    .agg(F.max(F.struct("seq", "op", "price", "status"))
                          .alias("w")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            merged = (prev.select("k", "w").unionByName(partial)
-                      .groupBy("k").agg(F.max("w").alias("w")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        if prev is None:
+            return partial
+        return (spark.read.parquet(f"{state_dir}/state_v{prev}")
+                .select("k", "w").unionByName(partial)
+                .groupBy("k").agg(F.max("w").alias("w")))
 
-    return (changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(changes, state_dir, checkpoint, step)
 
 
 def stream_inverted_index(docs: DataFrame, state_dir: str,
@@ -546,8 +462,8 @@ def stream_inverted_index(docs: DataFrame, state_dir: str,
     search stack keeps BOTH indexes fresh as documents arrive): each
     micro-batch is indexed (term 3-gram -> sorted (doc_id, tf)
     postings, exactly maintenance.q_inverted_index_delta's algebra)
-    and merged into the versioned snapshot by a term-keyed full-outer
-    array concat+sort — doc batches are disjoint, so merged == rebuilt
+    and merged into the snapshot by a term-keyed full-outer array
+    concat+sort — doc batches are disjoint, so merged == rebuilt
     bit-for-bit and the batch twin's direct-index oracle is an
     exactly-once value proof.
 
@@ -569,42 +485,26 @@ def stream_inverted_index(docs: DataFrame, state_dir: str,
         # null-filter keeps the inferred non-empty filter from
         # re-evaluating the zip_with gram chain below the exchange
         # (the span-merge lesson); grams are never null, so rows are
-        # identical to the inner explode.
+        # identical to the inner explode.  The coalesce changes no
+        # value; it declares ``t`` non-nullable, so the snapshot merge
+        # joins on plain = and reuses the per-term aggregation's
+        # partitioning (_keyed_merge).
         g = (spread(batch.select("doc_id", "text"))
              .select("doc_id", F.explode_outer(
                  _token_ngrams(F.split("text", " "), 3)).alias("t"))
-             .filter(F.col("t").isNotNull()))
+             .filter(F.col("t").isNotNull())
+             .select("doc_id", F.coalesce("t", F.lit("")).alias("t")))
         return (g.groupBy("t", "doc_id")
                  .agg(F.count(F.lit(1)).alias("tf"))
                  .groupBy("t")
                  .agg(F.array_sort(F.collect_list(
                      F.struct("doc_id", "tf"))).alias("post")))
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
+    def step(batch_df: DataFrame, batch_id: int, prev):
+        return _keyed_merge(spark, state_dir, prev, index(batch_df), ["t"], {
+            "post": (empty, lambda a, b: F.array_sort(F.concat(a, b)))})
 
-        partial = index(batch_df)
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            merged = (prev.withColumnRenamed("post", "pa")
-                      .join(partial.withColumnRenamed("post", "pb"),
-                            "t", "full_outer")
-                      .select("t", F.array_sort(F.concat(
-                          F.coalesce("pa", empty),
-                          F.coalesce("pb", empty))).alias("post")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
-
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(docs, state_dir, checkpoint, step)
 
 
 def inverted_index_finalize(index: DataFrame) -> DataFrame:
@@ -660,7 +560,7 @@ def stream_decayed_engagement(events: DataFrame, ref_day: int,
     the stream_mv_refresh state pattern (the score is a pure monoid:
     each event's term cents x w(age) is independent of every other
     event once the reference day is FIXED, so per-batch partials merge
-    by DECIMAL addition, exactly-once via versioned snapshots).
+    by DECIMAL addition).
 
     ``ref_day`` is the static deployment contract (the batch operator
     derives it in-plan from the corpus max; a live scorer pins it at
@@ -678,9 +578,7 @@ def stream_decayed_engagement(events: DataFrame, ref_day: int,
     spark = events.sparkSession
     wdf = spark.createDataFrame(list(_DECAY_W), "age_d int, w_e12 long")
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         terms = (batch_df
                  .select("user_id", ts_day().alias("day"),
                          (F.col("value").cast("decimal(12,2)") * 100)
@@ -693,34 +591,12 @@ def stream_decayed_engagement(events: DataFrame, ref_day: int,
             F.sum(F.col("cents").cast("decimal(38,0)")
                   * F.coalesce("w_e12", F.lit(0))).alias("s"),
             F.count(F.lit(1)).alias("n_events"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("user_id").alias("k"),
-                            F.col("s").alias("s1"),
-                            F.col("n_events").alias("n1"))
-            d = partial.select(F.col("user_id").alias("k"),
-                               F.col("s").alias("s2"),
-                               F.col("n_events").alias("n2"))
-            z = F.lit(0).cast("decimal(38,0)")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("user_id"),
-                              (F.coalesce("s1", z) + F.coalesce("s2", z))
-                              .cast("decimal(38,0)").alias("s"),
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0)))
-                              .alias("n_events")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial, ["user_id"], {
+            "s": (F.lit(0).cast("decimal(38,0)"),
+                  lambda a, b: (a + b).cast("decimal(38,0)")),
+            "n_events": (F.lit(0), operator.add)})
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(events, state_dir, checkpoint, step)
 
 
 def decayed_engagement_finalize(state_df: DataFrame) -> DataFrame:
@@ -745,15 +621,13 @@ def stream_quantile_sketch(events: DataFrame, state_dir: str,
 
     Scale: per-batch work is bounded by |types| x ~700 bins regardless
     of batch size (map-side combine absorbs rows); the merge join is
-    sketch-sized.  Versioned snapshots keep retries exactly-once.
+    sketch-sized.
     """
     from ..operators.scale import _QSK_BIN
 
     spark = events.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev):
         cents = (F.col("value").cast("decimal(12,2)") * 100).cast("long")
         partial = (batch_df
                    .select("event_type", cents.alias("c"))
@@ -761,28 +635,11 @@ def stream_quantile_sketch(events: DataFrame, state_dir: str,
                                _QSK_BIN.format(div="DIV") + " AS b")
                    .groupBy("event_type", "b")
                    .agg(F.count(F.lit(1)).alias("cnt")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select("event_type", "b", F.col("cnt").alias("c1"))
-            d = partial.select("event_type", "b",
-                               F.col("cnt").alias("c2"))
-            merged = (p.join(d, ["event_type", "b"], "full_outer")
-                      .select("event_type", "b",
-                              (F.coalesce("c1", F.lit(0))
-                               + F.coalesce("c2", F.lit(0)))
-                              .alias("cnt")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _keyed_merge(spark, state_dir, prev, partial,
+                            ["event_type", "b"],
+                            {"cnt": (F.lit(0), operator.add)})
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _snapshot_stream(events, state_dir, checkpoint, step)
 
 
 def quantile_sketch_finalize(state_df: DataFrame) -> DataFrame:
@@ -823,6 +680,59 @@ def _state_versions(fs_dir: str) -> list[int]:
         except ValueError:
             pass
     return sorted(out)
+
+
+def _snapshot_stream(stream: DataFrame, state_dir: str, checkpoint: str,
+                     step):
+    """Start the availableNow foreachBatch query that keeps
+    ``state_dir`` under the versioned-snapshot protocol (module
+    docstring).  ``step(batch_df, batch_id, prev)`` gets the
+    predecessor version (None on the first batch) and returns the new
+    snapshot, which is written as ``state_v<batch_id>`` — or returns
+    None when it wrote that directory's parts itself (the windowed
+    kernels' postings and meta)."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        prevs = [v for v in _state_versions(state_dir) if v < batch_id]
+        snap = step(batch_df, batch_id, prevs[-1] if prevs else None)
+        if snap is not None:
+            snap.write.mode("overwrite").parquet(
+                f"{state_dir}/state_v{batch_id}")
+        for v in prevs[:-1]:
+            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+
+    return (stream.writeStream.foreachBatch(run)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True).start())
+
+
+def _keyed_merge(spark, state_dir: str, prev, partial: DataFrame,
+                 keys: list[str], fold: dict) -> DataFrame:
+    """``partial`` merged into snapshot version ``prev`` (``partial``
+    itself when ``prev`` is None): a full-outer join on ``keys`` and,
+    for each ``fold[c] = (zero, combine)``, the value column
+    ``combine(coalesce(prev.c, zero), coalesce(partial.c, zero))``.
+
+    A key the partial's schema lets be NULL matches null-safely: under
+    ``=`` a NULL key never meets its predecessor row, so the state
+    would gain one NULL row per micro-batch where the batch twin's
+    ``groupBy`` keeps one.  A key the partial cannot hold NULL in
+    (so neither can the state folded from partials) matches on plain
+    ``=`` — the same rows, and the join keeps the partial's hash
+    partitioning on the key instead of shuffling it again."""
+    if prev is None:
+        return partial
+    p = spark.read.parquet(f"{state_dir}/state_v{prev}").alias("p")
+    d = partial.alias("d")
+    nullable = {f.name: f.nullable for f in partial.schema.fields}
+    on = reduce(operator.and_, [
+        F.col(f"p.{k}").eqNullSafe(F.col(f"d.{k}")) if nullable[k]
+        else F.col(f"p.{k}") == F.col(f"d.{k}") for k in keys])
+    return p.join(d, on, "full_outer").select(
+        *[F.coalesce(f"p.{k}", f"d.{k}").alias(k) for k in keys],
+        *[combine(F.coalesce(f"p.{c}", zero),
+                  F.coalesce(f"d.{c}", zero)).alias(c)
+          for c, (zero, combine) in fold.items()])
 
 
 def _write_meta(state_dir: str, batch_id: int, mx) -> None:
@@ -900,6 +810,41 @@ def _parquet_col_max(directory: str, col: str):
     return mx
 
 
+def _window_step(spark, state_dir: str, batch_id: int, prev,
+                 schema: str, history, verdicts, batch_df: DataFrame):
+    """The trailing-window step both windowed dedup kernels share.
+
+    Loads the predecessor's postings and running max (empty and None on
+    the first batch); ``history(postings)`` adds the batch's own
+    postings, ``verdicts(hist)`` judges the batch against them and is
+    written as ``verdicts_b<batch_id>``.  The running max then advances
+    to the batch max and is written as ``meta``, and the postings
+    pruned to doc_id > max_seen - SPAN_WIN_DOCS are written as
+    ``postings`` — both under ``state_v<batch_id>``.  ``batch_df``
+    supplies the batch max when the verdict footers carry no stats."""
+    if prev is None:
+        post0, prev_mx = spark.createDataFrame([], schema), None
+    else:
+        post0 = spark.read.parquet(f"{state_dir}/state_v{prev}/postings")
+        prev_mx = _read_meta(state_dir, prev)
+    hist = history(post0)
+    verdicts(hist).write.mode("overwrite").parquet(
+        f"{state_dir}/verdicts_b{batch_id}")
+    # batch max from the verdict footers just written (one row per
+    # batch doc) — replaces a whole-batch aggregation job; falls back
+    # to the Spark agg only if footer stats are absent
+    bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}", "doc_id")
+    if bmx is None:
+        bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
+    mx = max((x for x in (prev_mx, bmx) if x is not None), default=None)
+    _write_meta(state_dir, batch_id, mx)
+    kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
+            if mx is not None else hist)
+    kept.write.mode("overwrite").parquet(
+        f"{state_dir}/state_v{batch_id}/postings")
+    hist.unpersist()   # a no-op unless history() cached it
+
+
 def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
                                checkpoint: str):
     """Streaming WINDOWED SPAN DEDUP (r07 verdict item 6) — the
@@ -912,17 +857,16 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     Semantics are a pure function of the data, independent of
     micro-batch boundaries: a gram position in doc d is a duplicate
     iff SOME document d' with d - W <= d' < d contains the same gram
-    (strictly-earlier doc_id, trailing window W).  The foreachBatch
-    state is two relations: ``verdicts_b<batch>`` — a LITERALLY
+    (strictly-earlier doc_id, trailing window W).  The state is two
+    relations (``_window_step``): ``verdicts_b<batch>`` — a LITERALLY
     append-only per-doc report (each doc's verdict is finalized in
     the batch that delivers it and written ONCE to that batch's own
     directory — never rewritten, so total verdict I/O is linear in
-    stream length, and a retried batch idempotently overwrites only
-    its own directory) — and the versioned ``state_v<batch>``
-    snapshot holding ``postings`` (the DISTINCT (doc_id, gm) relation
-    PRUNED to doc_id > max_seen - W, the bounded trailing window) and
-    ``meta`` (the running max doc_id, so pruning never re-reads the
-    verdict log).
+    stream length) — and the ``state_v<batch>`` snapshot holding
+    ``postings`` (the DISTINCT (doc_id, gm) relation PRUNED to
+    doc_id > max_seen - W, the bounded trailing window) and ``meta``
+    (the running max doc_id, so pruning never re-reads the verdict
+    log).
 
     Ordering contract: the file replay must deliver documents in
     doc_id order across batches (the replay fixture writes one
@@ -944,9 +888,7 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
 
     spark = docs.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
         # A maxFilesPerTrigger=1 micro-batch is ONE scan partition, so
         # the interpreted md5 gram explode ran in a single task (guide
         # §2.5 input skew: measured 2 x ~1.3s one-task jobs per batch —
@@ -984,55 +926,31 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
         occ.count()
         base = g.select("doc_id",
                         F.size("grams").cast("long").alias("n_grams"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            post0 = spark.read.parquet(
-                f"{state_dir}/state_v{prevs[-1]}/postings")
-            prev_mx = _read_meta(state_dir, prevs[-1])
-        else:
-            post0 = spark.createDataFrame([], "doc_id long, gm string")
-            prev_mx = None
-        # hist feeds BOTH the duplicate probe (this job) and the pruned
-        # postings write (the next job) — cache it so the batch's
-        # distinct shuffle runs once per batch, not once per consumer
-        hist = post0.unionByName(occ.distinct()).cache()
-        o, h = occ.alias("o"), hist.alias("h")
-        dup = (o.join(h, (F.col("o.gm") == F.col("h.gm"))
-                      & (F.col("h.doc_id") < F.col("o.doc_id"))
-                      & (F.col("h.doc_id")
-                         >= F.col("o.doc_id") - SPAN_WIN_DOCS),
-                      "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_dup_grams")))
-        verd_new = (base.join(dup, "doc_id", "left")
+
+        def verdicts(hist):
+            o, h = occ.alias("o"), hist.alias("h")
+            dup = (o.join(h, (F.col("o.gm") == F.col("h.gm"))
+                          & (F.col("h.doc_id") < F.col("o.doc_id"))
+                          & (F.col("h.doc_id")
+                             >= F.col("o.doc_id") - SPAN_WIN_DOCS),
+                          "left_semi")
+                    .groupBy("doc_id")
+                    .agg(F.count(F.lit(1)).alias("n_dup_grams")))
+            return (base.join(dup, "doc_id", "left")
                         .select("doc_id", "n_grams",
                                 F.coalesce("n_dup_grams", F.lit(0))
                                  .cast("long").alias("n_dup_grams")))
-        verd_new.write.mode("overwrite").parquet(
-            f"{state_dir}/verdicts_b{batch_id}")
-        # batch max from the verdict footers just written (one row per
-        # batch doc) — replaces a whole-batch aggregation job; falls
-        # back to the Spark agg only if footer stats are absent
-        bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}",
-                               "doc_id")
-        if bmx is None:
-            bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-        mx = max(x for x in (prev_mx, bmx) if x is not None) \
-            if (prev_mx is not None or bmx is not None) else None
-        _write_meta(state_dir, batch_id, mx)
-        kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
-                if mx is not None else hist)
-        kept.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}/postings")
-        occ.unpersist()
-        hist.unpersist()
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+        # hist feeds BOTH the duplicate probe (the verdict job) and the
+        # pruned postings write (the next job) — cached so the batch's
+        # distinct shuffle runs once per batch, not once per consumer
+        _window_step(spark, state_dir, batch_id, prev,
+                     "doc_id long, gm string",
+                     lambda post0: post0.unionByName(occ.distinct()).cache(),
+                     verdicts, batch_df)
+        occ.unpersist()
+
+    return _snapshot_stream(docs, state_dir, checkpoint, step)
 
 
 def _read_verdict_log(spark, state_dir: str) -> DataFrame:
@@ -1067,16 +985,12 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
     (dedup_minhash_lsh) offline, exactly the two-tier split the batch
     family documents.
 
-    Same state layout as the span form: per-batch append-only
-    ``verdicts_b<batch>`` directories (one batch-sized write each —
-    verdict I/O linear in stream length; retries overwrite only their
-    own directory) plus the versioned ``state_v<batch>`` snapshot
-    holding the (doc, band, bucket) postings pruned to
-    doc_id > max_seen - W and the running-max ``meta`` row (safe
-    under the ordered-replay / ingest-watermark contract).
-    Signatures come from _band_buckets_of — bit-identical to the
-    batch family's Carter-Wegman construction, so the batch-twin
-    oracle is a full value proof.
+    Same state layout as the span form (``_window_step``), with the
+    (doc, band, bucket) relation as the postings (safe under the
+    ordered-replay / ingest-watermark contract).  Signatures come from
+    _band_buckets_of — bit-identical to the batch family's
+    Carter-Wegman construction, so the batch-twin oracle is a full
+    value proof.
 
     Scale: per batch one signature pass over the batch (md5 once per
     shingle — see _band_buckets_of), one semi-join of the batch's 8N
@@ -1089,9 +1003,7 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
 
     spark = docs.sparkSession
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
         # batch-scoped cache: the signature build feeds the probe,
         # the history union, AND the postings write — one md5 pass
         # per batch instead of three; EAGER fill (count) so the
@@ -1102,27 +1014,18 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
         bands = _band_buckets_of(
             spread(batch_df.select("doc_id", "text"))).cache()
         bands.count()
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            post0 = spark.read.parquet(
-                f"{state_dir}/state_v{prevs[-1]}/postings")
-            prev_mx = _read_meta(state_dir, prevs[-1])
-        else:
-            post0 = spark.createDataFrame(
-                [], "doc_id long, band int, bucket string")
-            prev_mx = None
-        hist = post0.unionByName(bands)
-        o, h = bands.alias("o"), hist.alias("h")
-        hits = (o.join(h, (F.col("o.band") == F.col("h.band"))
-                       & (F.col("o.bucket") == F.col("h.bucket"))
-                       & (F.col("h.doc_id") < F.col("o.doc_id"))
-                       & (F.col("h.doc_id")
-                          >= F.col("o.doc_id") - SPAN_WIN_DOCS),
-                       "left_semi")
-                 .groupBy("doc_id")
-                 .agg(F.countDistinct("band").alias("n_hit_bands")))
-        verd_new = (batch_df.select("doc_id")
+
+        def verdicts(hist):
+            o, h = bands.alias("o"), hist.alias("h")
+            hits = (o.join(h, (F.col("o.band") == F.col("h.band"))
+                           & (F.col("o.bucket") == F.col("h.bucket"))
+                           & (F.col("h.doc_id") < F.col("o.doc_id"))
+                           & (F.col("h.doc_id")
+                              >= F.col("o.doc_id") - SPAN_WIN_DOCS),
+                           "left_semi")
+                     .groupBy("doc_id")
+                     .agg(F.countDistinct("band").alias("n_hit_bands")))
+            return (batch_df.select("doc_id")
                     .join(hits, "doc_id", "left")
                     .select("doc_id",
                             F.when(F.col("n_hit_bands").isNotNull(),
@@ -1130,27 +1033,14 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
                              .cast("int").alias("is_near_dup_candidate"),
                             F.coalesce("n_hit_bands", F.lit(0))
                              .cast("long").alias("n_hit_bands")))
-        verd_new.write.mode("overwrite").parquet(
-            f"{state_dir}/verdicts_b{batch_id}")
-        # batch max from the verdict footers (see the span merge)
-        bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}",
-                               "doc_id")
-        if bmx is None:
-            bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-        mx = max(x for x in (prev_mx, bmx) if x is not None) \
-            if (prev_mx is not None or bmx is not None) else None
-        _write_meta(state_dir, batch_id, mx)
-        kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
-                if mx is not None else hist)
-        kept.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}/postings")
-        bands.unpersist()
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+        _window_step(spark, state_dir, batch_id, prev,
+                     "doc_id long, band int, bucket string",
+                     lambda post0: post0.unionByName(bands),
+                     verdicts, batch_df)
+        bands.unpersist()
+
+    return _snapshot_stream(docs, state_dir, checkpoint, step)
 
 
 def windowed_minhash_dedup_finalize(spark, state_dir: str) -> DataFrame:

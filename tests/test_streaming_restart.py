@@ -12,9 +12,10 @@ directories, and finalize to the EXACT state of an uninterrupted run
 — the monoid/idempotence claims the replay rows' docstrings make,
 exercised through a real kill instead of a clean drain.
 
-The kill hooks ``stateful._state_versions`` — every merge kernel's
-first statement — so one injector covers the whole family; the
-reference run uses a different state_dir and is untouched.
+The kill hooks ``stateful._state_versions`` — the first call of every
+micro-batch (stateful._snapshot_stream) — so one injector covers the
+whole family; the reference run uses a different state_dir and is
+untouched.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import pytest
 from go_mapreduce_crawler_spark.operators import streaming_replay as sr
 from go_mapreduce_crawler_spark.streaming import stateful as st
 
-CASES = ["span", "cdc", "bloom"]
+CASES = ["span", "cdc", "bloom", "minhash", "invidx"]
 
 
 def _setup(name, spark, sf):
@@ -40,6 +41,20 @@ def _setup(name, spark, sf):
             spark, sf, f"rr_{name}")
         return (lambda: st.stream_windowed_span_dedup(stream, state, ckpt),
                 lambda: st.windowed_span_dedup_finalize(spark, state),
+                state)
+    if name == "minhash":
+        stream, state, ckpt = sr._replay_ordered_docs(
+            spark, sf, f"rr_{name}")
+        return (lambda: st.stream_windowed_minhash_dedup(stream, state,
+                                                         ckpt),
+                lambda: st.windowed_minhash_dedup_finalize(spark, state),
+                state)
+    if name == "invidx":
+        stream, state, ckpt = sr._replay_ordered_docs(
+            spark, sf, f"rr_{name}")
+        return (lambda: st.stream_inverted_index(stream, state, ckpt),
+                lambda: st.inverted_index_finalize(
+                    st.read_mv_state(spark, state)),
                 state)
     if name == "cdc":
         stream, state, ckpt = sr._cdc_stream(spark, sf)

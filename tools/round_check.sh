@@ -5,19 +5,30 @@
 set -e
 cd "$(dirname "$0")/.."
 
-echo "== 1/4 full pytest suite =="
+echo "== 1/6 full pytest suite =="
 python -m pytest tests/ -q
 
-echo "== 2/4 oracle mirror at sf0.01 (the driver's correctness gate) =="
+echo "== 2/6 perfbench unit tests =="
+python -m pytest perfbench/tests -q
+
+echo "== 3/6 perfbench smoke: corpus_incremental, seed 1 (checks every output) =="
+# run.py exits 1 on any failed output check; no pipe, so set -e sees it
+SMOKE_OUT=$(mktemp)
+python3 perfbench/run.py --workload corpus_incremental --seed 1 --seconds 10 \
+    >"$SMOKE_OUT" 2>/dev/null || { tail -1 "$SMOKE_OUT"; exit 1; }
+tail -1 "$SMOKE_OUT"
+rm -f "$SMOKE_OUT"
+
+echo "== 4/6 oracle mirror at sf0.01 (the correctness gate) =="
 SPARK_GRAFT_TEST_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle.py -q
 
-echo "== 3/4 driver-hash dtype audit =="
+echo "== 5/6 oracle-hash dtype audit =="
 python tools/audit_oracle_dtypes.py /root/testdata/sf0.001 2>/dev/null | tail -3
 
-echo "== 3.5/4 physical-plan anti-pattern sweep =="
+echo "== 5.5/6 physical-plan anti-pattern sweep =="
 timeout 600 python tools/plan_audit.py 2>/dev/null | head -5
 
-echo "== 4/4 bench (sf0.1, one JSON line) + 2x-per-query regression guard =="
+echo "== 6/6 bench (sf0.1, one JSON line) + 2x-per-query regression guard =="
 BENCH_OUT=$(mktemp)
 timeout 900 python3 bench.py 2>/dev/null | tail -1 | tee "$BENCH_OUT"
 # One retry on guard failure: sub-second queries can catch a 1-2s
