@@ -28,4 +28,6 @@ def l2_norm(a: Column | str) -> Column:
 
 
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """NULL when either vector is all zeros (try_divide, so ANSI mode
+    does not raise) — the contract of retrieval_index.cosine()."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))

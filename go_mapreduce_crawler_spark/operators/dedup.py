@@ -1258,9 +1258,9 @@ def _substring_report(spark, sf_dir, checkpoint_rounds: bool = True):
     round (2^rounds leaf scans).  LAZY checkpoints (eager=False)
     materialize inside the query's own first job, so the rounds
     pipeline instead of running as serialized eager jobs — measured
-    9.3s vs 19.7s cold at the 50k-doc Zipf probe (tools/
-    scale_probe_r08.py fixture) for identical results.  Per-round
-    materialization of the position relation is the standard
+    9.3s vs 19.7s cold at the 50k-doc Zipf probe
+    (tools/scale_probe_r08.py@7c5a3ab fixture) for identical results.
+    Per-round materialization of the position relation is the standard
     external-memory suffix-array trade; each round is still
     shuffle-linear in N."""
     from pyspark.sql import Window as W
@@ -1372,11 +1372,14 @@ def q_dedup_substring_len_profile(spark, sf_dir):
         starts = (cur.join(base, "doc_id")
                      .filter(F.col("pos") + L <= F.col("n_tokens")))
         # dup is consumed by BOTH the flagged semi-join and the class
-        # count — uncached, each reference re-ran the level's 1M-row
-        # starts aggregation (r12; class relation is dup-class-sized,
-        # metadata next to the position relation)
+        # count — unmaterialized, each reference re-ran the level's
+        # 1M-row starts aggregation (class relation is dup-class-sized,
+        # metadata next to the position relation).  Cut lazily like
+        # cur: a .cache() here would outlive the query, one
+        # CacheManager entry per level
         dup = (starts.groupBy("r").agg(F.count(F.lit(1)).alias("n"))
-                     .filter(F.col("n") >= 2).cache())
+                     .filter(F.col("n") >= 2)
+                     .localCheckpoint(eager=False))
         flagged = starts.join(dup, "r", "left_semi")
         a = flagged.agg(
             F.count(F.lit(1)).alias("n_dup_positions"),

@@ -1260,6 +1260,36 @@ def test_substring_len_profile_matches_python_literal_grams(spark):
         assert got[b][0] <= got[a][0]
 
 
+def test_substring_len_profile_leaves_no_cache_entries(spark):
+    """Each doubling level's dup relation is cut with a lazy local
+    checkpoint, not .cache(): collecting the query leaves the
+    CacheManager as empty as it found it."""
+    from go_mapreduce_crawler_spark.operators.dedup import (
+        q_dedup_substring_len_profile)
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    rows = q_dedup_substring_len_profile(
+        spark, "/root/testdata/sf0.001").collect()
+    assert rows
+    assert cache.isEmpty()
+
+
+def test_cosine_sim_zero_vector_is_null(spark):
+    """functions.vectors.cosine_sim: a zero vector has no direction, so
+    its cosine is NULL instead of DIVIDE_BY_ZERO under ANSI; a non-zero
+    pair keeps its value."""
+    from go_mapreduce_crawler_spark.functions import cosine_sim
+
+    df = spark.createDataFrame(
+        [([0.0, 0.0], [1.0, 2.0]), ([3.0, 4.0], [4.0, 3.0])],
+        "a array<double>, b array<double>")
+    got = [r.c for r in df.select(cosine_sim("a", "b").alias("c")).collect()]
+    assert got[0] is None
+    assert got[1] == 24.0 / (5.0 * 5.0)
+
+
 def test_textrank_keywords_matches_python_reference(spark):
     """q_text_textrank_keywords vs a pure-Python weighted-PageRank
     replica (same co-occurrence graph, same floor(c*1e15)

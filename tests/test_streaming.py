@@ -806,6 +806,34 @@ def test_replay_await_raises_on_timeout_and_stream_error():
     assert not ok.stopped
 
 
+def test_fixture_dir_first_write_is_single_flight(monkeypatch):
+    """Concurrent first callers of _fixture_dir for one (sf, kind): the
+    writer runs exactly once and every caller gets the same dir (no
+    fixture written twice and leaked)."""
+    import threading
+    import time
+
+    from go_mapreduce_crawler_spark.operators import streaming_replay
+
+    monkeypatch.setattr(streaming_replay, "_FIXTURE_DIRS", {})
+    calls = []
+
+    def slow_writer(in_dir, root):
+        calls.append(in_dir)
+        time.sleep(0.2)
+
+    got = []
+    threads = [threading.Thread(target=lambda: got.append(
+        streaming_replay._fixture_dir("sf", "race", slow_writer)))
+        for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert len(calls) == 1
+    assert got == calls * 4
+
+
 def test_mv_refresh_self_audit_raises_with_version_ledger(spark, tmp_path):
     """_audit_mv_view (r08 verdict item 1b): a finalized MV whose
     SUM(n) disagrees with the replayed fixture's row count must raise

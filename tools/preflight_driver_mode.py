@@ -4,8 +4,8 @@ Mimics the grading driver: a FRESH VANILLA SparkSession (none of the
 repo's session configs), every ``queries()`` entry in dict order, the
 DuckDB oracle run side-by-side at sf0.01, and the same order-insensitive
 (count, schema, value-hash) compare the driver records.  Writes one JSON
-log (tools/preflight_r{N}.json) that SURVEY §8 cites as the round's
-evidence.
+log, tools/preflight_{tag}.json — a local log, not committed
+(.gitignore); CHANGES.md takes the evidence.
 
 Run:  python tools/preflight_driver_mode.py [sf_dir] [round_tag]
 Exit: non-zero if any oracle query mismatches or errors.

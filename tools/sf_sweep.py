@@ -8,7 +8,8 @@ COLLECT_CAP rows (a result too big to collect records ``too_big`` — an
 output-cardinality bug, not a harness limit).
 
 Run:  python tools/sf_sweep.py [sf_dir] [round_tag] [name_filter]
-Log:  tools/sf_sweep_{tag}.json
+Log:  tools/sf_sweep_{tag}.json — a local log, not committed
+      (.gitignore); CHANGES.md takes the evidence.
 """
 
 from __future__ import annotations
