@@ -1260,7 +1260,7 @@ def test_substring_len_profile_matches_python_literal_grams(spark):
         assert got[b][0] <= got[a][0]
 
 
-def test_substring_len_profile_leaves_no_cache_entries(spark):
+def test_substring_len_profile_leaves_no_cache_entries(spark, sf_small):
     """Each doubling level's dup relation is cut with a lazy local
     checkpoint, not .cache(): collecting the query leaves the
     CacheManager as empty as it found it."""
@@ -1270,8 +1270,7 @@ def test_substring_len_profile_leaves_no_cache_entries(spark):
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty()
-    rows = q_dedup_substring_len_profile(
-        spark, "/root/testdata/sf0.001").collect()
+    rows = q_dedup_substring_len_profile(spark, sf_small).collect()
     assert rows
     assert cache.isEmpty()
 

@@ -6,8 +6,8 @@ removed file is pinned to a commit as ``<path>@<sha>`` (print it with
 ``git show <sha>:<path>``).  A bare citation is a promise that the file
 is in the tree, and this test keeps that promise.  Spark-free.
 
-History records (CHANGES.md, ROADMAP.md, VERDICT.md, OPTIMIZATION_r*.md,
-ISSUE.md) describe past trees and are not checked.
+History records (CHANGES.md, ROADMAP.md, VERDICT.md, OPTIMIZATION_r*.md)
+describe past trees and are not checked.
 """
 
 from __future__ import annotations
