@@ -325,10 +325,85 @@ def q_dedup_containment(spark, sf_dir):
             .select("inner_doc", "outer_doc", "containment"))
 
 
+def _shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles array<string>) — distinct word 3-grams per doc
+    of any documents-shaped DataFrame: the one shingle builder of the
+    MinHash and SimHash families, batch and streaming.
+
+    NULL-text contract: a document with NULL text has no shingles, so
+    no signature and no band keys — it can never be a near-duplicate
+    (without the filter, array(NULL) hashes to an all-NULL signature
+    whose band keys collide across every NULL doc).
+
+    Built with sliced zip_with, NOT element_at indexing: higher-order
+    lambdas are interpreted (no codegen), and an `element_at(split(text),
+    i)` inside a transform re-evaluates the split per element — measured
+    10x slower.  Slices reference the split result three times total.
+    """
+    w = F.split(F.col("text"), " ")
+    n = F.size(w)
+    pair = F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
+                      lambda a, b: F.concat_ws(" ", a, b))
+    tri = F.zip_with(pair, F.slice(w, 3, n - 2),
+                     lambda ab, c_: F.concat_ws(" ", ab, c_))
+    sh = F.when(n >= SHINGLE_N, tri).otherwise(F.array(F.col("text")))
+    return (docs.filter(F.col("text").isNotNull())
+                .select("doc_id", F.array_distinct(sh).alias("shingles")))
+
+
+def _signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, h0..h31) Carter-Wegman signatures (MINHASH_K of them)
+    of a _shingles relation, ROW-LOCALLY: no explode, no shuffle, no
+    cache.
+
+    Each shingle STRING is hashed exactly once (md5, first 8 hex chars
+    -> 32-bit int, the `hs` array); the minhashes then rehash that
+    value with (a*h + b) mod (2^31 - 1) — integer work instead of one
+    string traversal per shingle per minhash, with a*h < 2^63 so the
+    arithmetic is overflow-free in BOTH engines, and the md5 basis
+    makes the family engine-portable (full DuckDB oracles).
+    CollapseProject keeps `hs` a projection of its own: it never
+    inlines a non-cheap expression its consumer references more than
+    once, so the array_min folds read one hash array
+    (tests/test_plans.py pins one md5 transform per plan).  Generated
+    SQL (one parse), not Column algebra — a py4j round-trip per node
+    cost 0.8s of driver-side construction for the transform/fold
+    trees."""
+    hs = sh.selectExpr(
+        "doc_id",
+        "transform(shingles, s ->"
+        " cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)) AS hs")
+    return hs.selectExpr("doc_id", *[
+        f"array_min(transform(hs, h -> ({a}L * h + {b}L) % {MH_P}L)) AS h{k}"
+        for k, (a, b) in enumerate(MH_AB)])
+
+
+def _band_keys(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) LSH keys of a _shingles relation:
+    LSH_BANDS bands of MINHASH_K / LSH_BANDS signature rows, bucket =
+    md5 of the band's minhashes.  Row-local like the signature, so
+    the batch operators, the ingest screen and the streaming kernel
+    agree bit-for-bit."""
+    r = MINHASH_K // LSH_BANDS
+    return (_signatures(sh).selectExpr(
+                "doc_id",
+                "explode(array(" + ",".join(
+                    f"struct({b} AS band, md5(concat_ws(',',"
+                    + ",".join(f"h{b * r + j}" for j in range(r))
+                    + ")) AS bucket)"
+                    for b in range(LSH_BANDS)) + ")) AS bb")
+            .select("doc_id", "bb.band", "bb.bucket"))
+
+
 def _bucket_pairs(bands: DataFrame) -> DataFrame:
-    """(doc_id, bb) -> distinct candidate pairs (doc_a < doc_b) per
-    bucket, generated array-locally after one groupBy shuffle."""
-    return (bands.groupBy("bb")
+    """(doc_id, band, bucket) -> distinct candidate pairs
+    (doc_a < doc_b): one groupBy shuffle on (band, bucket) — signature
+    bytes, not documents — to a sorted doc list per bucket, pairs
+    generated array-locally.  A pathological hot bucket (thousands of
+    near-identical docs) would emit k^2 pairs in one task — at that
+    point the docs are duplicates by construction and exact dedup
+    should have removed them first (pipeline ordering note)."""
+    return (bands.groupBy("band", "bucket")
             .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
             .filter(F.size("ids") >= 2)
             .select(F.explode(F.expr(
@@ -340,173 +415,54 @@ def _bucket_pairs(bands: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _shingles(spark, sf_dir) -> DataFrame:
-    """(doc_id, shingles array<string>) — distinct word 3-grams per doc.
+def _jaccard_verify(cand: DataFrame, sh: DataFrame,
+                    a: str, b: str) -> DataFrame:
+    """(a, b, jaccard) for the candidate id pairs whose true shingle
+    Jaccard is >= JACCARD_T, rounded to 6 dp for the hash gate.
 
-    Built with sliced zip_with, NOT element_at indexing: higher-order
-    lambdas are interpreted (no codegen), and an `element_at(split(text),
-    i)` inside a transform re-evaluates the split per element — measured
-    10x slower.  Slices reference the split result three times total.
-    """
-    d = _docs(spark, sf_dir)
-    w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    pair = F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
-                      lambda a, b: F.concat_ws(" ", a, b))
-    tri = F.zip_with(pair, F.slice(w, 3, n - 2),
-                     lambda ab, c_: F.concat_ws(" ", ab, c_))
-    sh = F.when(n >= SHINGLE_N, tri).otherwise(F.array(F.col("text")))
-    return d.select("doc_id", F.array_distinct(sh).alias("shingles"))
-
-
-def _sig_agg_of(docs_df: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{k}) Carter-Wegman signatures for an ARBITRARY
-    documents-shaped DataFrame, with the md5 shingle hash computed
-    EXACTLY ONCE per shingle: the hash array is exploded (the
-    Generate's input projection evaluates the transform once per row)
-    and the {k} minima are one partial+final aggregation.  This is
-    the cache-free alternative to _minhash_sig's barrier: HOFs are
-    interpreted (no codegen subexpression elimination), so the
-    transform/array_min form recomputes the md5 transform {k}x unless
-    a cache blocks projection collapse — wrong for streaming batches
-    (leaked cache per micro-batch) and for one-shot consumers like
-    the banding advisor (two corpus-sized relations pinned for no
-    reuse).  The agg costs one doc-keyed shuffle of (doc, h) rows,
-    absorbed map-side.  Same shingle construction and hash family as
-    the batch operators, so candidacy agrees bit-for-bit."""
-    w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    pair = F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
-                      lambda a, b: F.concat_ws(" ", a, b))
-    tri = F.zip_with(pair, F.slice(w, 3, n - 2),
-                     lambda ab, c_: F.concat_ws(" ", ab, c_))
-    sh = F.when(n >= SHINGLE_N, tri).otherwise(F.array(F.col("text")))
-    # explode_OUTER + null-filter (r12): plain explode's inferred
-    # non-empty filter re-evaluates the collapsed shingle+md5
-    # transform in a Filter below the Generate — a duplicate hash
-    # pass per row (and, in the streaming merges, one that sinks
-    # below the spread exchange into the serial scan task).  h is
-    # never null (conv of md5), so rows match the inner explode.
-    hs_rows = (docs_df
-               .select("doc_id", F.array_distinct(sh).alias("shingles"))
-               .select("doc_id", F.explode_outer(F.expr(
-                   "transform(shingles, s -> cast(conv(substring("
-                   "md5(s), 1, 8), 16, 10) as bigint))")).alias("h"))
-               .filter(F.col("h").isNotNull()))
-    return hs_rows.groupBy("doc_id").agg(*[
-        F.min(F.expr(f"({a}L * h + {b}L) % {MH_P}L")).alias(f"h{k}")
-        for k, (a, b) in enumerate(MH_AB)])
+    shuffle_hash hints: without them Catalyst's size estimate can pick
+    the SHINGLE relation as the broadcast side of the verify join
+    (measured: driver OOM at the 10x replica scale on a default-heap
+    driver) — the one relation that must never broadcast; the hints
+    keep the verify a shuffled hash join with the id-pair side as
+    build, so shingle arrays shuffle once on doc_id and nothing
+    collects on the driver."""
+    va = sh.select(F.col("doc_id").alias(a), F.col("shingles").alias("sh_a"))
+    vb = sh.select(F.col("doc_id").alias(b), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (cand.hint("shuffle_hash").join(va, a)
+            .hint("shuffle_hash").join(vb, b)
+            .withColumn("jaccard", F.round(
+                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6))
+            .filter(F.col("jaccard") >= JACCARD_T)
+            .select(a, b, "jaccard"))
 
 
-_sig_agg_of.__doc__ = _sig_agg_of.__doc__.replace("{k}", str(MINHASH_K))
-
-
-def _band_buckets_of(docs_df: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH band-bucket keys for an ARBITRARY
-    documents-shaped DataFrame — the per-batch form of _minhash_bands
-    for the streaming family, built on _sig_agg_of (md5 once per
-    shingle, no cache).  Same band keys as the batch operators, so
-    streaming and batch candidacy agree bit-for-bit."""
-    sig = _sig_agg_of(docs_df)
-    r = MINHASH_K // LSH_BANDS
-    return (sig.selectExpr(
-                "doc_id",
-                "explode(array(" + ",".join(
-                    f"struct({b} AS band, md5(concat_ws(',',"
-                    + ",".join(f"h{b * r + j}" for j in range(r))
-                    + ")) AS bucket)"
-                    for b in range(LSH_BANDS)) + ")) AS bb")
-               .select("doc_id", "bb.band", "bb.bucket"))
-
-
-def _minhash_sig(spark, sf_dir):
-    """(shingles, k={k} Carter-Wegman signature) relations — the shared
-    front of _minhash_bands and the banding advisor.  See
-    _minhash_bands for the hashing rationale."""
-    sh = _shingles(spark, sf_dir).cache()
-    hs = sh.selectExpr(
-        "doc_id",
-        "transform(shingles, s ->"
-        " cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)) AS hs"
-    ).cache()
-    sig = hs.selectExpr("doc_id", *[
-        f"array_min(transform(hs, h -> ({a}L * h + {b}L) % {MH_P}L)) AS h{k}"
-        for k, (a, b) in enumerate(MH_AB)])
-    return sh, sig
-
-
-_minhash_sig.__doc__ = _minhash_sig.__doc__.replace("{k}", str(MINHASH_K))
-
-
-def _minhash_bands(spark, sf_dir):
-    """Shared (shingles, band-bucket) pipeline for the minhash family.
-
-    Signature + bands as generated SQL (one parse), not Column algebra
-    (a py4j round-trip per node — 0.8s of driver-side construction for
-    the 32 transform/fold trees; see similarity._dot_sql).
-
-    Each shingle STRING is hashed exactly once (md5, first 8 hex chars
-    -> 32-bit int); the k=32 minhash family then rehashes that value
-    with a Carter-Wegman universal hash, (a*h + b) mod (2^31 - 1) —
-    integer work instead of 32 string traversals per shingle, with
-    a*h < 2^63 so the arithmetic is overflow-free in BOTH engines.
-    This basis (vs the earlier xxhash64 + murmur3) makes the whole
-    operator engine-portable: the driver value-hashes it against a
-    full DuckDB oracle.  The cache() is a required optimizer barrier:
-    without it Catalyst collapses the projections and inlines the md5
-    transform into all 32 min-folds, recomputing the string hashing
-    32x (the similarity.py `bits` lesson).
-    """
-    sh, sig = _minhash_sig(spark, sf_dir)
-    r = MINHASH_K // LSH_BANDS
-    bands = sig.selectExpr(
-        "doc_id",
-        "explode(array(" + ",".join(
-            f"struct({b} AS band, md5(concat_ws(',',"
-            + ",".join(f"h{b * r + j}" for j in range(r)) + ")) AS bucket)"
-            for b in range(LSH_BANDS)) + ")) AS bb")
-    return sh, bands
+def _doc_shingles(spark, sf_dir) -> DataFrame:
+    """The corpus's _shingles, cut with a lazy local checkpoint: the
+    batch MinHash operators read them twice (signature, verify), and
+    the cut computes them once per query without a session-wide
+    .cache() entry that would outlive it."""
+    return _shingles(_docs(spark, sf_dir)).localCheckpoint(eager=False)
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash-LSH near-dup pairs, verified with true shingle Jaccard.
 
-    Pipeline (all JVM expressions): shingle -> per-seed minhash signature
-    (k=32 via xxhash64(shingle, seed)) -> 8 bands of 4 -> candidates =
-    docs sharing any band bucket -> verify true Jaccard >= 0.5 on the
-    shingle sets.  Output ⊆ exact shingle-Jaccard pairs, recall governed
-    by (b, r).
+    Pipeline (all JVM expressions): shingle -> k=32 Carter-Wegman
+    minhashes over one md5 hash per shingle -> 8 bands of 4 ->
+    candidates = docs sharing any band bucket -> verify true Jaccard
+    >= 0.5 on the shingle sets.  Output ⊆ exact shingle-Jaccard pairs,
+    recall governed by (b, r).
 
-    Scale shape: the signature is computed ROW-LOCALLY
-    (array_min over transform of the shingle array — no explode, no
-    shuffle, whole-stage codegen), so the only shuffles are the band
-    bucket join on (band, bucket) — signature bytes, not documents —
-    and the candidate-verify join on doc_id.
+    Scale shape: the signature is computed ROW-LOCALLY (_signatures —
+    no explode, no shuffle), so the only shuffles are the bucket
+    groupBy on (band, bucket) — signature bytes, not documents — and
+    the candidate-verify joins on doc_id.
     """
-    sh, bands = _minhash_bands(spark, sf_dir)
-    # Bucket-group instead of self-join: signatures are computed ONCE,
-    # one shuffle groups (band, bucket) -> sorted doc list, pairs are
-    # generated array-locally.  A pathological hot bucket (thousands of
-    # near-identical docs) would emit k^2 pairs in one task — at that
-    # point the docs are duplicates by construction and exact dedup
-    # should have removed them first (pipeline ordering note).
-    cand = _bucket_pairs(bands)
-    va = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    vb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    # shuffle_hash hint: without it Catalyst's size estimate can pick
-    # the SHINGLE relation as the broadcast side of the verify join
-    # (measured: driver OOM at the 10x replica scale on a default-heap
-    # driver) — the one relation that must never broadcast; the hint
-    # keeps the verify a shuffled hash join with the id-pair side as
-    # build, so shingle arrays shuffle once on doc_id and nothing
-    # collects on the driver.  Same fix at every cand-verify site.
-    return (cand.hint("shuffle_hash").join(va, "doc_a")
-            .hint("shuffle_hash").join(vb, "doc_b")
-            .withColumn("jaccard", F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6))
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .select("doc_a", "doc_b", "jaccard"))
+    sh = _doc_shingles(spark, sf_dir)
+    return _jaccard_verify(_bucket_pairs(_band_keys(sh)), sh,
+                           "doc_a", "doc_b")
 
 
 # The fingerprint is computed ROW-LOCALLY in one aggregate expression —
@@ -546,15 +502,16 @@ def q_dedup_simhash(spark, sf_dir):
     Hamming-0 pairs); shingles restore discriminative power — the same
     choice production simhash (e.g. Google's) makes.
     """
-    fps = (_shingles(spark, sf_dir)
+    fps = (_shingles(_docs(spark, sf_dir))
            .select("doc_id", F.expr(SIMHASH_FP_EXPR).alias("fp"))
            .cache())
     bands = fps.select(
         "doc_id",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
-                     F.shiftright("fp", b * 15).bitwiseAND(F.lit(0x7FFF)).alias("chunk"))
-            for b in range(4)])).alias("bb"))
+                     F.shiftright("fp", b * 15).bitwiseAND(F.lit(0x7FFF))
+                      .alias("bucket"))
+            for b in range(4)])).alias("bb")).select("doc_id", "bb.*")
     fa = fps.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fp_a"))
     fb = fps.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
     return (_bucket_pairs(bands)
@@ -675,15 +632,18 @@ def _min_label_labels(pairs: DataFrame) -> DataFrame:
 
     Returns the full (node, lbl) labelling — every node that appears in
     any pair, labelled with its component's minimum node id."""
-    # Cache the pair source BEFORE mirroring: the union references the
+    # Cut the pair source BEFORE mirroring: the union references the
     # (potentially expensive — LSH) pair subplan twice, and exchange
     # reuse across the two branches is not guaranteed (measured at the
     # 10x replica scale: the pipeline ran twice, tripling the query's
-    # shuffle volume).  One cache fill, both branches read it.
-    pairs = pairs.cache()
+    # shuffle volume).  One fill, both branches read it.  Lazy local
+    # checkpoints, not .cache(): the MinHash pair plan holds a
+    # per-query checkpoint, so a cache entry over it would never be
+    # hit again and every call would add one.
+    pairs = pairs.localCheckpoint(eager=False)
     edges = (pairs.union(pairs.select(F.col("doc_b").alias("doc_a"),
                                       F.col("doc_a").alias("doc_b")))
-             .distinct().cache())
+             .distinct().localCheckpoint(eager=False))
     # localCheckpoint (not cache) per iteration: caching truncates
     # COMPUTATION but the logical plan still grows linearly, and
     # re-analysis of the accumulated lineage dominated the loop
@@ -843,38 +803,23 @@ def q_dedup_incremental_lsh(spark, sf_dir):
     inverted_index_delta_refresh; here both sides are derived from the
     same table so the oracle can rebuild them).
 
-    Scale shape: batch signatures are row-local (_band_buckets_of);
-    the probe is an equi-join on (band, bucket) between the
-    BATCH-sized bucket relation and the base index — signature bytes,
-    never text; the verify join ships shingle arrays for candidate
-    docs only (shuffle_hash-hinted at every cand-verify site — the
-    shingle relation must never broadcast).  Candidates batch-vs-base
-    agree bit-for-bit with the full-corpus banding (same bucket keys),
-    so the oracle is the shared mh CTE restricted to mixed pairs.
+    Scale shape: batch signatures are row-local (_band_keys); the
+    probe is an equi-join on (band, bucket) between the BATCH-sized
+    bucket relation and the base index — signature bytes, never text;
+    the verify join ships shingle arrays for candidate docs only
+    (_jaccard_verify).  Candidates batch-vs-base agree bit-for-bit
+    with the full-corpus banding (same bucket keys), so the oracle is
+    the shared mh CTE restricted to mixed pairs.
     """
-    d = _docs(spark, sf_dir)
-    base = d.filter(F.col("doc_id") % 10 != 0)
-    batch = d.filter(F.col("doc_id") % 10 == 0)
-    bb_base = _band_buckets_of(base)
-    bb_new = _band_buckets_of(batch)
-    cand = (bb_new.select(F.col("doc_id").alias("doc_new"),
-                          "band", "bucket")
-            .join(bb_base.select(F.col("doc_id").alias("doc_base"),
-                                 "band", "bucket"),
-                  ["band", "bucket"])
-            .select("doc_new", "doc_base").distinct())
-    sh = _shingles(spark, sf_dir)
-    va = sh.select(F.col("doc_id").alias("doc_new"),
-                   F.col("shingles").alias("sh_a"))
-    vb = sh.select(F.col("doc_id").alias("doc_base"),
-                   F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (cand.hint("shuffle_hash").join(va, "doc_new")
-            .hint("shuffle_hash").join(vb, "doc_base")
-            .withColumn("jaccard", F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6))
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .select("doc_new", "doc_base", "jaccard"))
+    sh = _doc_shingles(spark, sf_dir)
+    bands = _band_keys(sh)
+    new = (bands.filter(F.col("doc_id") % 10 == 0)
+                .withColumnRenamed("doc_id", "doc_new"))
+    base = (bands.filter(F.col("doc_id") % 10 != 0)
+                 .withColumnRenamed("doc_id", "doc_base"))
+    cand = (new.join(base, ["band", "bucket"])
+               .select("doc_new", "doc_base").distinct())
+    return _jaccard_verify(cand, sh, "doc_new", "doc_base")
 
 
 def q_dedup_cluster_weights(spark, sf_dir):
@@ -943,7 +888,11 @@ def q_dedup_family_overlap(spark, sf_dir):
     jp = q_dedup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     mh = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     sh = q_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
-    fams = {"jaccard": jp.cache(), "minhash": mh.cache(),
+    # mh is cut with a lazy local checkpoint: its plan holds the
+    # MinHash query's own checkpoint, so a cache entry would never be
+    # hit again and every call would add one
+    fams = {"jaccard": jp.cache(),
+            "minhash": mh.localCheckpoint(eager=False),
             "simhash": sh.cache()}
 
     def row(na, nb):
@@ -1431,31 +1380,22 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     not just verbatim ones.  doc_id % 10 == 0 stands in for the eval
     benchmark (the incremental-dedup split convention).
 
-    Reuses the dedup family's row-local Carter-Wegman signatures
-    (_minhash_bands); the only new shuffle is the CROSS-set band-bucket
-    join, whose probe side (eval bands) is tiny by construction — at
-    100 TB the eval set is a benchmark suite, so Spark broadcasts it
-    and the training corpus never shuffles at all for candidacy; the
-    verify join then touches only candidate docs' shingle sets.
+    Reuses the dedup family's row-local band keys (_band_keys); the
+    only new shuffle is the CROSS-set band-bucket join, whose probe
+    side (eval bands) is tiny by construction — at 100 TB the eval set
+    is a benchmark suite, so Spark broadcasts it and the training
+    corpus never shuffles at all for candidacy; the verify join
+    (_jaccard_verify) then touches only candidate docs' shingle sets.
     """
-    sh, bands = _minhash_bands(spark, sf_dir)
+    sh = _doc_shingles(spark, sf_dir)
+    bands = _band_keys(sh)
     trn = (bands.filter(F.col("doc_id") % DECON_EVAL_MOD != 0)
-                .select(F.col("doc_id").alias("train_doc_id"), "bb"))
+                .withColumnRenamed("doc_id", "train_doc_id"))
     ev = (bands.filter(F.col("doc_id") % DECON_EVAL_MOD == 0)
-               .select(F.col("doc_id").alias("eval_doc_id"), "bb"))
-    cand = (trn.join(F.broadcast(ev), "bb")
+               .withColumnRenamed("doc_id", "eval_doc_id"))
+    cand = (trn.join(F.broadcast(ev), ["band", "bucket"])
                .select("train_doc_id", "eval_doc_id").distinct())
-    va = sh.select(F.col("doc_id").alias("train_doc_id"),
-                   F.col("shingles").alias("sh_a"))
-    vb = sh.select(F.col("doc_id").alias("eval_doc_id"),
-                   F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (cand.hint("shuffle_hash").join(va, "train_doc_id")
-            .hint("shuffle_hash").join(vb, "eval_doc_id")
-            .withColumn("jaccard", F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6))
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .select("train_doc_id", "eval_doc_id", "jaccard"))
+    return _jaccard_verify(cand, sh, "train_doc_id", "eval_doc_id")
 
 
 def q_dedup_cluster_sizes(spark, sf_dir):
@@ -1486,22 +1426,16 @@ def q_dedup_lsh_report(spark, sf_dir):
     collapsing means the bucket shuffle is doing quadratic work for
     nothing; candidates exploding means a hot band).
 
-    Same band pipeline as dedup_minhash_lsh (shared _minhash_bands);
-    the report is two counts and one fixed-point division over the
-    candidate relation, so its cost is the candidacy shuffle alone.
+    Same band pipeline and verify as dedup_minhash_lsh (_band_keys,
+    _bucket_pairs, _jaccard_verify); the report is two counts and one
+    fixed-point division over the candidate relation, which a lazy
+    local checkpoint computes once for both counts without a cache
+    entry that outlives the query.
     """
-    sh, bands = _minhash_bands(spark, sf_dir)
-    cand = _bucket_pairs(bands).cache()
-    va = sh.select(F.col("doc_id").alias("doc_a"),
-                   F.col("shingles").alias("sh_a"))
-    vb = sh.select(F.col("doc_id").alias("doc_b"),
-                   F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.round(inter / (F.size("sh_a") + F.size("sh_b") - inter), 6)
-    ver = (cand.hint("shuffle_hash").join(va, "doc_a")
-            .hint("shuffle_hash").join(vb, "doc_b")
-               .filter(jac >= JACCARD_T)
-               .agg(F.count(F.lit(1)).alias("n_verified")))
+    sh = _doc_shingles(spark, sf_dir)
+    cand = _bucket_pairs(_band_keys(sh)).localCheckpoint(eager=False)
+    ver = (_jaccard_verify(cand, sh, "doc_a", "doc_b")
+           .agg(F.count(F.lit(1)).alias("n_verified")))
     tot = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
     prec = F.floor(F.col("n_verified").cast("double") * 1e6
                    / F.col("n_candidates").cast("double")).cast("long")
@@ -1561,9 +1495,7 @@ def q_lsh_banding_advisor(spark, sf_dir):
             "lsh_banding_advisor: no (b, r) config clears "
             f"LSH_ADV_RECALL_FLOOR_E6={LSH_ADV_RECALL_FLOOR_E6} — "
             "lower the floor or widen LSH_ADV_CONFIGS")
-    # cache-free signature build: the advisor reads sig exactly once,
-    # so _minhash_sig's pinned sh/hs caches would be pure waste here
-    sig = _sig_agg_of(_docs(spark, sf_dir))
+    sig = _signatures(_shingles(_docs(spark, sf_dir)))
     entries = []
     for b, r in LSH_ADV_CONFIGS:
         for band in range(b):
@@ -1643,21 +1575,16 @@ _ALL_STOP = ("['the','a','of','and','to','in','is','it','that','for',"
              "'le','la','les','et','est','un','une','pas','pour','dans',"
              "'el','los','las','es','una','no','por','para']")
 
-def _minhash_pair_ctes() -> str:
-    """Shared DuckDB CTE chain mirroring q_dedup_minhash_lsh: identical
-    md5-derived shingle hashes, the same Carter-Wegman signature family
-    (pure BIGINT arithmetic — overflow-free by construction), the same
-    (band, bucket) keys, and the same true-Jaccard verify.  Ends with
-    relation ``mh(doc_a, doc_b, jaccard)``."""
-    r = MINHASH_K // LSH_BANDS
+def _minhash_sig_ctes() -> str:
+    """DuckDB mirror of _shingles -> _signatures: identical
+    md5-derived shingle hashes and the same Carter-Wegman family (pure
+    BIGINT arithmetic — overflow-free by construction); NULL text has
+    no shingles.  CTEs ``d`` (every document), ``sh`` and a
+    MATERIALIZED ``sig(doc_id, h0..)`` for the MinHash oracles."""
     sig_exprs = ", ".join(
         f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P}))"
         f" AS h{k}"
         for k, (a, b) in enumerate(MH_AB))
-    band_exprs = ", ".join(
-        f"'{b}:' || md5(concat_ws(',', "
-        + ", ".join(f"h{b * r + j}" for j in range(r)) + "))"
-        for b in range(LSH_BANDS))
     return f"""
         d AS (SELECT doc_id, string_split(text, ' ') AS w, text
               FROM documents),
@@ -1667,12 +1594,25 @@ def _minhash_pair_ctes() -> str:
                                generate_series(1, len(w) - 2),
                                i -> concat_ws(' ', w[i], w[i+1], w[i+2])))
                            ELSE [text] END AS shingles
-               FROM d),
+               FROM d WHERE text IS NOT NULL),
         hs AS (SELECT doc_id,
                       list_transform(shingles,
                           s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS hs
                FROM sh),
-        sig AS (SELECT doc_id, {sig_exprs} FROM hs),
+        sig AS MATERIALIZED (SELECT doc_id, {sig_exprs} FROM hs)"""
+
+
+def _minhash_pair_ctes() -> str:
+    """Shared DuckDB CTE chain mirroring q_dedup_minhash_lsh: the
+    _minhash_sig_ctes signatures, the same (band, bucket) keys, and the
+    same true-Jaccard verify.  Ends with relation
+    ``mh(doc_a, doc_b, jaccard)``."""
+    r = MINHASH_K // LSH_BANDS
+    band_exprs = ", ".join(
+        f"'{b}:' || md5(concat_ws(',', "
+        + ", ".join(f"h{b * r + j}" for j in range(r)) + "))"
+        for b in range(LSH_BANDS))
+    return _minhash_sig_ctes() + f""",
         bands AS (SELECT doc_id, unnest([{band_exprs}]) AS bb FROM sig),
         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
                  FROM bands a JOIN bands b2
@@ -1690,15 +1630,11 @@ def _minhash_pair_ctes() -> str:
 
 
 def _lsh_advisor_oracle() -> str:
-    """DuckDB mirror of q_lsh_banding_advisor: same shingle/signature
-    CTEs as _minhash_pair_ctes, the per-config band keys as a UNION ALL
-    over the MATERIALIZED signature (struct-free — the struct_pack-in-
-    lambda / unnest-struct paths are the known DuckDB segfault
-    surface), and the same literal recall columns."""
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P}))"
-        f" AS h{k}"
-        for k, (a, b) in enumerate(MH_AB))
+    """DuckDB mirror of q_lsh_banding_advisor: the _minhash_sig_ctes
+    signatures, the per-config band keys as a UNION ALL over the
+    MATERIALIZED signature (struct-free — the struct_pack-in-lambda /
+    unnest-struct paths are the known DuckDB segfault surface), and
+    the same literal recall columns."""
     branches = []
     for b, r in LSH_ADV_CONFIGS:
         for band in range(b):
@@ -1710,22 +1646,7 @@ def _lsh_advisor_oracle() -> str:
         f"({b}, {r}, {_lsh_recall_e6(0.5, b, r)},"
         f" {_lsh_recall_e6(0.9, b, r)})"
         for b, r in LSH_ADV_CONFIGS)
-    return f"""
-        WITH d AS (SELECT doc_id, string_split(text, ' ') AS w, text
-                   FROM documents),
-        sh AS (SELECT doc_id,
-                      CASE WHEN len(w) >= {SHINGLE_N}
-                           THEN list_distinct(list_transform(
-                               generate_series(1, len(w) - 2),
-                               i -> concat_ws(' ', w[i], w[i+1], w[i+2])))
-                           ELSE [text] END AS shingles
-               FROM d),
-        hs AS (SELECT doc_id,
-                      list_transform(shingles,
-                          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT)
-                          AS hs
-               FROM sh),
-        sig AS MATERIALIZED (SELECT doc_id, {sig_exprs} FROM hs),
+    return "WITH " + _minhash_sig_ctes() + f""",
         bands AS ({' UNION ALL '.join(branches)}),
         occ AS (SELECT b, r, band, bucket, COUNT(*) AS m
                 FROM bands GROUP BY 1, 2, 3, 4),

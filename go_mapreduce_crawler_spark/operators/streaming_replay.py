@@ -712,38 +712,17 @@ def _span_oracle() -> str:
 
 def _minhash_window_oracle() -> str:
     """Batch twin of the windowed MinHash candidate flagging: the
-    dedup family's shingle/signature CTEs (same constants), band keys
-    as a UNION ALL over the materialized signature, and the
-    trailing-window EXISTS."""
-    from ..operators.dedup import (LSH_BANDS, MH_AB, MH_P, MINHASH_K,
-                                   SHINGLE_N)
+    dedup family's signature CTEs (_minhash_sig_ctes), band keys as a
+    UNION ALL over the materialized signature, and the trailing-window
+    EXISTS."""
+    from ..operators.dedup import LSH_BANDS, MINHASH_K, _minhash_sig_ctes
     r = MINHASH_K // LSH_BANDS
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MH_P}))"
-        f" AS h{k}"
-        for k, (a, b) in enumerate(MH_AB))
     band_branches = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, md5(concat_ws(',', "
         + ", ".join(f"h{b * r + j}" for j in range(r))
         + ")) AS bucket FROM sig"
         for b in range(LSH_BANDS))
-    return f"""
-        WITH d AS (SELECT doc_id, string_split(text, ' ') AS w, text
-                   FROM documents),
-        sh AS (SELECT doc_id,
-                      CASE WHEN len(w) >= {SHINGLE_N}
-                           THEN list_distinct(list_transform(
-                               generate_series(1, len(w) - 2),
-                               i -> concat_ws(' ', w[i], w[i+1],
-                                              w[i+2])))
-                           ELSE [text] END AS shingles
-               FROM d),
-        hs AS (SELECT doc_id,
-                      list_transform(shingles,
-                          s -> ('0x' || substr(md5(s), 1, 8))::BIGINT)
-                          AS hs
-               FROM sh),
-        sig AS MATERIALIZED (SELECT doc_id, {sig_exprs} FROM hs),
+    return "WITH " + _minhash_sig_ctes() + f""",
         bands AS MATERIALIZED ({band_branches}),
         hits AS (SELECT o.doc_id,
                         COUNT(DISTINCT o.band)::BIGINT AS n_hit_bands

@@ -987,18 +987,19 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
 
     Same state layout as the span form (``_window_step``), with the
     (doc, band, bucket) relation as the postings (safe under the
-    ordered-replay / ingest-watermark contract).  Signatures come from
-    _band_buckets_of — bit-identical to the batch family's
-    Carter-Wegman construction, so the batch-twin oracle is a full
-    value proof.
+    ordered-replay / ingest-watermark contract).  Band keys come from
+    the batch family's own _shingles -> _band_keys pipeline — the same
+    row-local Carter-Wegman construction, so the batch-twin oracle is
+    a full value proof (a NULL-text doc has no band keys and is never
+    flagged).
 
-    Scale: per batch one signature pass over the batch (md5 once per
-    shingle — see _band_buckets_of), one semi-join of the batch's 8N
+    Scale: per batch one row-local signature pass over the batch (md5
+    once per shingle, no shuffle), one semi-join of the batch's 8N
     band keys against the W-doc posting state, one batch-sized
     verdict write; per-batch state I/O is bounded by the trailing
     window plus the batch, never stream length.
     """
-    from ..operators.dedup import _band_buckets_of
+    from ..operators.dedup import _band_keys, _shingles
     from ..sources.tables import spread
 
     spark = docs.sparkSession
@@ -1011,8 +1012,8 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
         # the unfilled cache; spread() first because a 1-file
         # micro-batch is one scan partition and the Carter-Wegman
         # signature pass ran serially (guide §2.5; span-merge lesson).
-        bands = _band_buckets_of(
-            spread(batch_df.select("doc_id", "text"))).cache()
+        bands = _band_keys(
+            _shingles(spread(batch_df.select("doc_id", "text")))).cache()
         bands.count()
 
         def verdicts(hist):

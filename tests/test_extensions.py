@@ -21,7 +21,7 @@ def test_minhash_lsh_vs_exact_jaccard(spark, sf_medium):
     by construction; recall vs the exhaustive shingle-Jaccard pairs must
     clear 0.9 at tau=0.5 with (b=8, r=4)."""
     got = _pairs(dedup.q_dedup_minhash_lsh(spark, sf_medium))
-    sh = dedup._shingles(spark, sf_medium)
+    sh = dedup._shingles(dedup._docs(spark, sf_medium))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
     inter = F.size(F.array_intersect("sa", "sb"))
@@ -39,7 +39,7 @@ def test_simhash_pairs_are_near_duplicates(spark, sf_medium):
     """Every Hamming<=3 simhash pair must share most of its shingle set
     (sanity: simhash approximates feature-set similarity)."""
     pairs = dedup.q_dedup_simhash(spark, sf_medium)
-    sh = dedup._shingles(spark, sf_medium)
+    sh = dedup._shingles(dedup._docs(spark, sf_medium))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("wa"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("wb"))
     joined = (pairs.join(a, "doc_a").join(b, "doc_b")
@@ -547,7 +547,7 @@ def test_simhash_bands_equal_bruteforce_hamming3(spark, sf_medium):
     one of the 4 15-bit bands)."""
     fps = sorted(
         (r["doc_id"], r["fp"])
-        for r in dedup._shingles(spark, sf_medium)
+        for r in dedup._shingles(dedup._docs(spark, sf_medium))
         .select("doc_id", F.expr(dedup.SIMHASH_FP_EXPR).alias("fp"))
         .collect())
     brute = set()

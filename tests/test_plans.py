@@ -23,8 +23,9 @@ from go_mapreduce_crawler_spark.plans import (
 def _fresh_cache(spark):
     """Plan pins assert the UNCACHED plan shape.  CacheManager matches
     by logical-plan equality, so any earlier test that executed a query
-    with an internal .cache() (the minhash family's candidate relation)
-    would otherwise splice an InMemoryRelation — with its own internal
+    with an internal .cache() (the simhash fingerprints, the family
+    overlap's pair sets) would otherwise splice an InMemoryRelation —
+    with its own internal
     exchanges — into a later query's plan and flake the exchange-count
     pins depending on test order."""
     spark.catalog.clearCache()
@@ -91,6 +92,22 @@ def test_minhash_signature_is_row_local(spark, sf_small):
     # no broadcast anywhere in the verify pipeline — the shingle
     # relation must never be a build side
     assert "BroadcastHashJoin" not in plan, plan[:2000]
+
+
+def test_minhash_band_keys_are_row_local(spark, sf_small):
+    """The band keys of a documents DataFrame (the streaming kernel's
+    per-batch form) plan NO exchange — no explode+groupBy signature
+    shuffle — and the optimized plan holds 1 + LSH_BANDS md5 calls:
+    one shingle-hash transform that every minhash fold reads, plus one
+    per band key.  A collapsed projection would re-hash the shingles
+    once per fold."""
+    from go_mapreduce_crawler_spark.sources.tables import load_table
+
+    bands = dedup._band_keys(
+        dedup._shingles(load_table(spark, sf_small, "documents")))
+    assert n_shuffle_exchanges(bands) == 0, physical_plan(bands)[:2000]
+    opt = bands._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("md5(") == 1 + dedup.LSH_BANDS, opt[:3000]
 
 
 def test_semi_anti_join_operators(spark, sf_small):

@@ -1275,6 +1275,67 @@ def test_substring_len_profile_leaves_no_cache_entries(spark, sf_small):
     assert cache.isEmpty()
 
 
+def test_minhash_family_leaves_no_cache_entries(spark, sf_small):
+    """The batch MinHash queries cut their shared shingles (and the
+    precision report its candidates) with lazy local checkpoints, not
+    .cache(): collecting each leaves the CacheManager empty."""
+    from go_mapreduce_crawler_spark.operators import dedup
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    for q in (dedup.q_dedup_minhash_lsh, dedup.q_decontaminate_fuzzy,
+              dedup.q_dedup_lsh_report, dedup.q_dedup_incremental_lsh,
+              dedup.q_lsh_banding_advisor):
+        assert q(spark, sf_small).collect(), q.__name__
+        assert cache.isEmpty(), q.__name__
+
+
+def test_minhash_null_text_has_no_shingles(spark, sf_small, tmp_path):
+    """NULL-text contract: a document with NULL text has no shingles,
+    signature or band keys, so it is never a near-duplicate — not of
+    another NULL doc either.  Batch dedup_minhash_lsh and
+    decontaminate_fuzzy_minhash (900010 is an eval doc) match their
+    DuckDB oracles on a corpus with two NULL-text rows, and the
+    streaming band keys have no rows for them."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_mapreduce_crawler_spark.operators import dedup
+    from tests.oracle_utils import compare
+
+    nulls = (900001, 900010)
+    src = pq.read_table(f"{sf_small}/documents.parquet")
+    extra = pa.table({f.name: pa.array(
+        list(nulls) if f.name == "doc_id"
+        else [None] * len(nulls) if f.name == "text"
+        else src.column(f.name).to_pylist()[:len(nulls)],
+        type=f.type) for f in src.schema})
+    d = str(tmp_path)
+    pq.write_table(pa.concat_tables([src, extra]),
+                   f"{d}/documents.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{d}/documents.parquet')")
+
+    for name, q, a, b in (
+            ("dedup_minhash_lsh", dedup.q_dedup_minhash_lsh,
+             "doc_a", "doc_b"),
+            ("decontaminate_fuzzy_minhash", dedup.q_decontaminate_fuzzy,
+             "train_doc_id", "eval_doc_id")):
+        df = q(spark, d)
+        rows = df.collect()
+        assert rows, name
+        assert not {x for r in rows for x in (r[a], r[b])} & set(nulls)
+        assert compare(df, con, dedup.ORACLE[name], name) == []
+
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    bands = dedup._band_keys(dedup._shingles(docs))
+    assert bands.filter(F.col("doc_id").isin(*nulls)).count() == 0
+    assert bands.count() == dedup.LSH_BANDS * src.num_rows
+
+
 def test_cosine_sim_zero_vector_is_null(spark):
     """functions.vectors.cosine_sim: a zero vector has no direction, so
     its cosine is NULL instead of DIVIDE_BY_ZERO under ANSI; a non-zero

@@ -208,8 +208,8 @@ def test_lsh_banding_advisor_recall_and_budget(spark):
     from collections import Counter
 
     from go_mapreduce_crawler_spark.operators.dedup import (
-        LSH_ADV_CONFIGS, LSH_ADV_RECALL_FLOOR_E6, _minhash_sig,
-        q_lsh_banding_advisor)
+        LSH_ADV_CONFIGS, LSH_ADV_RECALL_FLOOR_E6, _docs, _shingles,
+        _signatures, q_lsh_banding_advisor)
 
     sf = "/root/testdata/sf0.001"
     rows = q_lsh_banding_advisor(spark, sf).collect()
@@ -221,7 +221,7 @@ def test_lsh_banding_advisor_recall_and_budget(spark):
                 (1.0 - (1.0 - s ** r.r) ** r.b) * 1e6), (r.b, r.r, s)
 
     # ground-truth candidate mass from the raw signatures
-    _, sig = _minhash_sig(spark, sf)
+    sig = _signatures(_shingles(_docs(spark, sf)))
     sigs = sig.toPandas().set_index("doc_id")
     by_cfg = {}
     for b, rr in LSH_ADV_CONFIGS:

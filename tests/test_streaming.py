@@ -930,7 +930,7 @@ def test_windowed_span_dedup_replay_matches_batch_twin_and_prunes(spark):
 
 def test_windowed_minhash_replay_matches_batch_twin_and_family(spark):
     """stream_minhash_dedup_replay: (a) the finalized view equals an
-    independent Spark batch computation over _band_buckets_of (join
+    independent Spark batch computation over _band_keys (join
     construction, not streaming state); (b) family consistency — for
     every VERIFIED batch near-dup pair (dedup_minhash_lsh) whose ids
     are within the trailing window, the later doc must be flagged
@@ -939,7 +939,7 @@ def test_windowed_minhash_replay_matches_batch_twin_and_family(spark):
     from pyspark.sql import functions as F
 
     from go_mapreduce_crawler_spark.operators.dedup import (
-        _band_buckets_of, q_dedup_minhash_lsh)
+        _band_keys, _shingles, q_dedup_minhash_lsh)
     from go_mapreduce_crawler_spark.operators.streaming_replay import (
         _replay_ordered_docs)
     from go_mapreduce_crawler_spark.streaming.stateful import (
@@ -955,7 +955,7 @@ def test_windowed_minhash_replay_matches_batch_twin_and_family(spark):
                spark, state).collect()}
 
     d = spark.read.parquet(f"{sf}/documents.parquet")
-    bands = _band_buckets_of(d)
+    bands = _band_keys(_shingles(d))
     o, h = bands.alias("o"), bands.alias("h")
     hits = (o.join(h, (F.col("o.band") == F.col("h.band"))
                    & (F.col("o.bucket") == F.col("h.bucket"))

@@ -30,13 +30,26 @@ timeout 600 python tools/plan_audit.py 2>/dev/null | head -5
 
 echo "== 6/6 bench (sf0.1, one JSON line) + 2x-per-query regression guard =="
 BENCH_OUT=$(mktemp)
-timeout 900 python3 bench.py 2>/dev/null | tail -1 | tee "$BENCH_OUT"
+# bench.py's own exit status decides: a pipe into tail would drop
+# timeout's 124 and leave bench_guard an empty file to choke on
+run_bench() {
+    local rc=0
+    timeout 900 python3 bench.py 2>/dev/null >"$BENCH_OUT" || rc=$?
+    if [ "$rc" -eq 124 ]; then
+        echo "bench.py did not finish within 900 s"; exit 1
+    elif [ "$rc" -ne 0 ]; then
+        echo "bench.py failed with exit code $rc"; exit 1
+    fi
+    tail -1 "$BENCH_OUT" | tee "$BENCH_OUT.line"
+    mv "$BENCH_OUT.line" "$BENCH_OUT"
+}
+run_bench
 # One retry on guard failure: sub-second queries can catch a 1-2s
 # scheduler/GC stall on a shared machine (observed: different queries
 # flagged on consecutive runs); a REAL regression fails both runs.
 python tools/bench_guard.py "$BENCH_OUT" || {
     echo "guard failed - one retry to rule out a transient stall"
-    timeout 900 python3 bench.py 2>/dev/null | tail -1 | tee "$BENCH_OUT"
+    run_bench
     python tools/bench_guard.py "$BENCH_OUT"
 }
 rm -f "$BENCH_OUT"
