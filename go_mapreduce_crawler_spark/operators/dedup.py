@@ -339,16 +339,19 @@ def _shingles(docs: DataFrame) -> DataFrame:
     lambdas are interpreted (no codegen), and an `element_at(split(text),
     i)` inside a transform re-evaluates the split per element — measured
     10x slower.  Slices reference the split result three times total.
+    Generated SQL (one parse), like _signatures: as Column algebra the
+    zip_with lambdas cost 0.1-0.2 s of py4j calls per call, once per
+    micro-batch in the streaming kernel.
     """
-    w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    pair = F.zip_with(F.slice(w, 1, n - 2), F.slice(w, 2, n - 2),
-                      lambda a, b: F.concat_ws(" ", a, b))
-    tri = F.zip_with(pair, F.slice(w, 3, n - 2),
-                     lambda ab, c_: F.concat_ws(" ", ab, c_))
-    sh = F.when(n >= SHINGLE_N, tri).otherwise(F.array(F.col("text")))
-    return (docs.filter(F.col("text").isNotNull())
-                .select("doc_id", F.array_distinct(sh).alias("shingles")))
+    w = "split(text, ' ')"
+    n = f"size({w})"
+    tri = (f"zip_with(zip_with(slice({w}, 1, {n} - 2), slice({w}, 2, {n} - 2),"
+           f" (a, b) -> concat_ws(' ', a, b)), slice({w}, 3, {n} - 2),"
+           f" (ab, c) -> concat_ws(' ', ab, c))")
+    return (docs.filter("text IS NOT NULL")
+                .selectExpr("doc_id", f"array_distinct(CASE WHEN {n} >= "
+                            f"{SHINGLE_N} THEN {tri} ELSE array(text) END)"
+                            " AS shingles"))
 
 
 def _signatures(sh: DataFrame) -> DataFrame:
@@ -378,20 +381,31 @@ def _signatures(sh: DataFrame) -> DataFrame:
         for k, (a, b) in enumerate(MH_AB)])
 
 
+# the LSH_BANDS (band, bucket) structs of a _signatures row: bands of
+# MINHASH_K / LSH_BANDS signature rows, bucket = md5 of the band's
+# minhashes
+_BANDS = "array(" + ",".join(
+    f"struct({b} AS band, md5(concat_ws(',',"
+    + ",".join(f"h{b * (MINHASH_K // LSH_BANDS) + j}"
+               for j in range(MINHASH_K // LSH_BANDS))
+    + ")) AS bucket)"
+    for b in range(LSH_BANDS)) + ")"
+
+
+def _band_array(sh: DataFrame) -> DataFrame:
+    """(doc_id, bands) LSH keys of a _shingles relation, one row per
+    document: ``bands`` holds the LSH_BANDS (band, bucket) structs."""
+    return _signatures(sh).selectExpr("doc_id", f"{_BANDS} AS bands")
+
+
 def _band_keys(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH keys of a _shingles relation:
-    LSH_BANDS bands of MINHASH_K / LSH_BANDS signature rows, bucket =
-    md5 of the band's minhashes.  Row-local like the signature, so
-    the batch operators, the ingest screen and the streaming kernel
-    agree bit-for-bit."""
-    r = MINHASH_K // LSH_BANDS
-    return (_signatures(sh).selectExpr(
-                "doc_id",
-                "explode(array(" + ",".join(
-                    f"struct({b} AS band, md5(concat_ws(',',"
-                    + ",".join(f"h{b * r + j}" for j in range(r))
-                    + ")) AS bucket)"
-                    for b in range(LSH_BANDS)) + ")) AS bb")
+    """(doc_id, band, bucket) LSH keys of a _shingles relation, one row
+    per band.  Row-local like the signature, so the batch operators,
+    the ingest screen and the streaming kernel (_band_array) agree
+    bit-for-bit.  The array literal is exploded in place: Spark infers
+    no non-empty filter for it, which over a projected array column
+    would compute every band hash twice."""
+    return (_signatures(sh).selectExpr("doc_id", f"explode({_BANDS}) AS bb")
             .select("doc_id", "bb.band", "bb.bucket"))
 
 

@@ -260,6 +260,12 @@ def q_knn_pandas(spark, sf_dir):
     Survivors re-score with the SAME JVM fold as q_knn_bruteforce —
     bit-identical to DuckDB's list_reduce — and the final window ranks
     only exact values.
+
+    Zero vectors follow cosine_sim's contract: their cos is NULL
+    (try_divide), ranked after every finite score.  A zero query makes
+    every row of a batch a candidate (its neighbours rank by id), and
+    a zero corpus vector scores -inf in the kernel, so it is a
+    candidate only where a batch has fewer than k finite scores.
     """
     import numpy as np
     import pandas as pd
@@ -270,7 +276,9 @@ def q_knn_pandas(spark, sf_dir):
               .select("vec_id", "embedding").collect())   # gated query set
     q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
     Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    q_nrm = np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = np.divide(Q, q_nrm, out=np.zeros_like(Q), where=q_nrm > 0)
+    zero_q = q_nrm[:, 0] == 0
 
     def kernel(batches):
         for pdf in batches:
@@ -278,12 +286,19 @@ def q_knn_pandas(spark, sf_dir):
                 continue
             ids = pdf["vec_id"].to_numpy()
             M = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            S = Mn @ Qn.T                                   # (batch, |Q|)
-            S[ids[:, None] == q_ids[None, :]] = -np.inf     # self-match
+            nrm = np.linalg.norm(M, axis=1, keepdims=True)
+            S = np.divide(M, nrm, out=np.zeros_like(M),
+                          where=nrm > 0) @ Qn.T             # (batch, |Q|)
+            # A zero vector's cos is NULL, which ranks below every
+            # finite score: -inf, never NaN, so it cannot hide them.
+            S[nrm[:, 0] == 0] = -np.inf
+            other = ids[:, None] != q_ids[None, :]          # no self-match
+            S[~other] = -np.inf
             k = min(TOP_K, len(pdf))
             kth = -np.partition(-S, k - 1, axis=0)[k - 1]   # per-query k-th
-            bi, qi = np.nonzero(S >= kth[None, :] - 2e-6)
+            # a zero query ranks every neighbour at NULL cos, by id
+            bi, qi = np.nonzero(other & ((S >= kth[None, :] - 2e-6)
+                                         | zero_q[None, :]))
             yield pd.DataFrame({"q_id": q_ids[qi], "neighbor_id": ids[bi]})
 
     cand = e.select("vec_id", "embedding").mapInPandas(
@@ -296,9 +311,9 @@ def q_knn_pandas(spark, sf_dir):
                   F.col("nrm").alias("q_nrm")))
     scored = (en.join(F.broadcast(cand), en.vec_id == cand.neighbor_id)
                 .join(qb, "q_id")
-                .withColumn("cos", F.round(
-                    dot("q_vec", "embedding")
-                    / (F.col("q_nrm") * F.col("nrm")), 6)))
+                .withColumn("cos", F.round(F.try_divide(
+                    dot("q_vec", "embedding"),
+                    F.col("q_nrm") * F.col("nrm")), 6)))
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (scored.withColumn("rk", F.row_number().over(w))
                   .filter(F.col("rk") <= TOP_K)

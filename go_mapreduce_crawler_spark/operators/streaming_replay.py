@@ -351,12 +351,24 @@ def q_stream_inverted_index_replay(spark, sf_dir):
 _MEM_SINK_SEQ = itertools.count(1)
 
 
-def _drain_to_memory(df, label: str, mode: str):
+def _drain_to_memory(df, label: str, mode: str, start_conf=None):
     """Run the streaming ``df`` to completion into a fresh memory-sink
-    table (availableNow) and return that table."""
+    table (availableNow) and return that table.
+
+    ``start_conf`` holds session confs the query needs: a query copies
+    the session conf when it starts, so they are set around ``start()``
+    only and restored before the query runs."""
     name = f"sgraft_{label}_replay_{next(_MEM_SINK_SEQ)}"
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode(mode).trigger(availableNow=True).start())
+    conf = df.sparkSession.conf
+    prev = {k: conf.get(k) for k in start_conf or {}}
+    for k, v in (start_conf or {}).items():
+        conf.set(k, v)
+    try:
+        q = (df.writeStream.format("memory").queryName(name)
+             .outputMode(mode).trigger(availableNow=True).start())
+    finally:
+        for k, v in prev.items():
+            conf.set(k, v)
     _await_drained(q, label)
     return df.sparkSession.sql(f"SELECT * FROM {name}")
 
@@ -571,16 +583,12 @@ def q_stream_stream_join_replay(spark, sf_dir):
     # while ~10k rows/batch insert), so the finalized result is
     # byte-identical (1455 rows at sf0.1 in both configs); the query
     # terminates right after the drain, so the skipped eviction freed
-    # no memory anyone uses.  Scoped to this query and restored — an
+    # no memory anyone uses.  Set for this query's start only — an
     # OUTER stream-stream join (or any watermark-completed emission)
     # must keep no-data batches on.
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        return _drain_to_memory(out, "stream_stream_join", "append")
-    finally:
-        spark.conf.set(key, prev)
+    return _drain_to_memory(
+        out, "stream_stream_join", "append",
+        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"})
 
 
 def q_stream_psi_drift_replay(spark, sf_dir):

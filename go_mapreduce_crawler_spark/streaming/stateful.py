@@ -39,7 +39,7 @@ Most kernels combine with ``_keyed_merge``: a full-outer join of the
 predecessor and the partial on the key columns, a NULL key matching a
 NULL key as the batch twin's ``groupBy`` groups them, each value
 column folded with its own zero and combine (sum, ``bit_or``, postings
-concat).  The two windowed dedup kernels share ``_window_step``, which
+concat).  The two windowed dedup kernels share ``_window_stream``, which
 keeps an append-only verdict log next to a postings snapshot pruned to
 the trailing window.  State is bounded by key cardinality or window
 size, never by stream length.
@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 from ..functions.exact import ts_day, ts_hour
 
@@ -354,15 +355,14 @@ def stream_gdpr_forget(requests: DataFrame, orders: DataFrame,
     keys| — the view never re-derives from raw orders.
     """
     spark = requests.sparkSession
+    seed = orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s"))
 
     def step(batch_df: DataFrame, batch_id: int, prev):
-        if prev is not None:
-            view = spark.read.parquet(f"{state_dir}/state_v{prev}")
-        else:
-            view = orders.groupBy("o_custkey").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                 .alias("s"))
+        view = seed if prev is None else (
+            spark.read.schema(seed.schema)
+            .parquet(f"{state_dir}/state_v{prev}"))
         keys = batch_df.select("fk").distinct()
         return view.join(keys, view["o_custkey"] == keys["fk"],
                          "left_anti")
@@ -448,7 +448,8 @@ def stream_cdc_merge(changes: DataFrame, state_dir: str,
                          .alias("w")))
         if prev is None:
             return partial
-        return (spark.read.parquet(f"{state_dir}/state_v{prev}")
+        return (spark.read.schema(partial.schema)
+                .parquet(f"{state_dir}/state_v{prev}")
                 .select("k", "w").unionByName(partial)
                 .groupBy("k").agg(F.max("w").alias("w")))
 
@@ -719,10 +720,16 @@ def _keyed_merge(spark, state_dir: str, prev, partial: DataFrame,
     ``groupBy`` keeps one.  A key the partial cannot hold NULL in
     (so neither can the state folded from partials) matches on plain
     ``=`` — the same rows, and the join keeps the partial's hash
-    partitioning on the key instead of shuffling it again."""
+    partitioning on the key instead of shuffling it again.
+
+    The predecessor is read with ``partial``'s schema — every fold
+    keeps its column's type, so it is the snapshot's — which spares
+    the schema-inference job a bare read runs on every batch after
+    the first."""
     if prev is None:
         return partial
-    p = spark.read.parquet(f"{state_dir}/state_v{prev}").alias("p")
+    p = (spark.read.schema(partial.schema)
+         .parquet(f"{state_dir}/state_v{prev}").alias("p"))
     d = partial.alias("d")
     nullable = {f.name: f.nullable for f in partial.schema.fields}
     on = reduce(operator.and_, [
@@ -735,33 +742,36 @@ def _keyed_merge(spark, state_dir: str, prev, partial: DataFrame,
           for c, (zero, combine) in fold.items()])
 
 
-def _write_meta(state_dir: str, batch_id: int, mx) -> None:
-    """Write the 1-row running-max ``meta`` sidecar DIRECTLY with
-    pyarrow: it is a scalar of bookkeeping metadata, and routing it
-    through ``spark.createDataFrame(...).write`` cost one full Spark
-    job submission per micro-batch (measured ~0.2-0.4 s each on the
-    replay rows — pure scheduling, zero data work).  Same bytes, same
-    path, same overwrite-idempotence; ``spark.read.parquet`` on the
-    directory remains valid for any external reader."""
+def _write_table(directory: str, table) -> None:
+    """Write a small Arrow ``table`` as ``directory/part-00000.parquet``
+    with pyarrow.  A Spark parquet write of a few rows costs 0.1-0.2 s
+    of job and commit-protocol overhead (measured on 4 vCPUs); this
+    costs milliseconds, and ``spark.read.parquet`` reads the directory
+    the same way.
+
+    Overwrite-idempotent, also across writer formats: a retried batch
+    landing on a directory an earlier attempt wrote, in this format or
+    Spark's (part-00000-<uuid>-*.parquet, which sorts first), leaves
+    only its own file.  The file appears by an atomic rename."""
     import glob as _glob
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = f"{state_dir}/state_v{batch_id}/meta"
-    os.makedirs(d, exist_ok=True)
-    # Overwrite-idempotence across FORMAT transitions (r11 advice item
-    # 2): a retried batch landing on a meta dir written by the previous
-    # Spark-write format (part-00000-<uuid>-*.parquet) must not leave
-    # the stale file behind — it sorts before 'part-00000.parquet'
-    # ('-' < '.'), so _read_meta would return the stale max and
-    # spark.read.parquet would see 2 rows.  mode('overwrite') wiped the
-    # dir; replicate that here.
-    for stale in _glob.glob(f"{d}/*.parquet"):
+    os.makedirs(directory, exist_ok=True)
+    for stale in _glob.glob(f"{directory}/*.parquet"):
         os.remove(stale)
-    pq.write_table(pa.table({"mx": pa.array([mx], type=pa.int64())}),
-                   f"{d}/part-00000.parquet")
+    tmp = f"{directory}/.part-00000.parquet.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, f"{directory}/part-00000.parquet")
+
+
+def _write_meta(state_dir: str, batch_id: int, mx) -> None:
+    """Write the 1-row running-max ``meta`` sidecar (_write_table)."""
+    import pyarrow as pa
+
+    _write_table(f"{state_dir}/state_v{batch_id}/meta",
+                 pa.table({"mx": pa.array([mx], type=pa.int64())}))
 
 
 def _read_meta(state_dir: str, version: int):
@@ -774,75 +784,92 @@ def _read_meta(state_dir: str, version: int):
     return pq.read_table(files[0])["mx"][0].as_py()
 
 
-def _parquet_col_max(directory: str, col: str):
-    """Exact max of an int64 column from parquet FOOTER statistics —
-    no Spark job.  The windowed-dedup merges just WROTE the batch's
-    verdict relation (one row per batch doc), so its doc_id max IS the
-    batch max; reading it back from the row-group stats replaces one
-    whole-batch aggregation job per micro-batch.  Returns None when
-    any populated row group lacks min/max stats (caller must fall back
-    to a Spark aggregate) or when the relation is empty."""
-    import glob as _glob
+def _window_stream(docs: DataFrame, state_dir: str, checkpoint: str,
+                   post_schema: str, keys_of, doc_cols: list,
+                   verdict_cols: list):
+    """Start a windowed dedup stream: the trailing-window step both
+    windowed kernels share, under the versioned-snapshot protocol.
 
-    import pyarrow.parquet as pq
+    Per micro-batch, ``keys_of(batch)`` gives one row per keyed batch
+    document: ``doc_id`` and ``keys``, an array of structs whose fields
+    are the posting key columns of ``post_schema``.  Each element is
+    judged once per occurrence and posted once.  ``doc_cols`` (doc_id
+    first) project one row per batch document: its row-local verdict
+    inputs.  ``verdict_cols`` project the per-doc aggregate — the
+    ``doc_cols`` plus ``n_hits``, the doc's key occurrences found in
+    the window — to the verdict, written as ``verdicts_b<batch_id>``.
 
-    mx = None
-    for f in _glob.glob(f"{directory}/part-*.parquet"):
-        pf = pq.ParquetFile(f)
-        if pf.metadata.num_row_groups == 0:
-            continue
-        leaf = None
-        g0 = pf.metadata.row_group(0)
-        for i in range(g0.num_columns):
-            if g0.column(i).path_in_schema == col:
-                leaf = i
-                break
-        for rg in range(pf.metadata.num_row_groups):
-            g = pf.metadata.row_group(rg)
-            if g.num_rows == 0:
-                continue
-            if leaf is None:
-                return None
-            st = g.column(leaf).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mx = st.max if mx is None else max(mx, st.max)
-    return mx
+    The key arrays are built once per batch: a lazy ``localCheckpoint``
+    keeps them for the two writes and is released before the step
+    returns.  The history is the predecessor's postings (read with
+    their known schema) plus the batch's own postings.  It is bounded
+    by SPAN_WIN_DOCS documents plus the batch, so it is broadcast; a
+    key occurrence is a hit when the history holds it for a strictly
+    earlier doc_id inside the window.  The verdict (one small row per
+    batch doc) is collected and written with pyarrow (_write_table);
+    its doc_id max is the batch max.  The running max then advances
+    and is written as ``meta``, and the history pruned to doc_id >
+    max_seen - SPAN_WIN_DOCS is written by Spark as ``postings``, both
+    under ``state_v<batch_id>``.
 
+    Every Column is built once per stream, not once per batch: Python
+    plan building was 0.1-0.2 s of each micro-batch.  Measured on
+    500-doc batches (4 vCPUs): 5 Spark jobs per micro-batch — the
+    spread exchange, the history broadcast, the per-doc aggregation
+    exchange, the verdict collect and the postings write.
+    """
+    import pyarrow.compute as pc
 
-def _window_step(spark, state_dir: str, batch_id: int, prev,
-                 schema: str, history, verdicts, batch_df: DataFrame):
-    """The trailing-window step both windowed dedup kernels share.
+    spark = docs.sparkSession
+    schema = StructType.fromDDL(post_schema)
+    new_cols = ["doc_id", F.inline(F.array_distinct("keys"))]
+    probe_cols = ["doc_id", F.inline("keys")]
+    hit = reduce(operator.and_, [
+        F.col(f"o.{c}") == F.col(f"h.{c}")
+        for c in schema.fieldNames() if c != "doc_id"]) \
+        & (F.col("h.doc_id") < F.col("o.doc_id")) \
+        & (F.col("h.doc_id") >= F.col("o.doc_id") - SPAN_WIN_DOCS)
+    hit_cols = ["doc_id", F.lit(1).alias("n_hits")]
+    doc_cols = [*doc_cols, F.lit(0).alias("n_hits")]
+    names = [c for c in docs.select(*doc_cols).columns
+             if c not in ("doc_id", "n_hits")]
+    aggs = [*[F.max(c).alias(c) for c in names],
+            F.sum("n_hits").alias("n_hits")]
 
-    Loads the predecessor's postings and running max (empty and None on
-    the first batch); ``history(postings)`` adds the batch's own
-    postings, ``verdicts(hist)`` judges the batch against them and is
-    written as ``verdicts_b<batch_id>``.  The running max then advances
-    to the batch max and is written as ``meta``, and the postings
-    pruned to doc_id > max_seen - SPAN_WIN_DOCS are written as
-    ``postings`` — both under ``state_v<batch_id>``.  ``batch_df``
-    supplies the batch max when the verdict footers carry no stats."""
-    if prev is None:
-        post0, prev_mx = spark.createDataFrame([], schema), None
-    else:
-        post0 = spark.read.parquet(f"{state_dir}/state_v{prev}/postings")
-        prev_mx = _read_meta(state_dir, prev)
-    hist = history(post0)
-    verdicts(hist).write.mode("overwrite").parquet(
-        f"{state_dir}/verdicts_b{batch_id}")
-    # batch max from the verdict footers just written (one row per
-    # batch doc) — replaces a whole-batch aggregation job; falls back
-    # to the Spark agg only if footer stats are absent
-    bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}", "doc_id")
-    if bmx is None:
-        bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-    mx = max((x for x in (prev_mx, bmx) if x is not None), default=None)
-    _write_meta(state_dir, batch_id, mx)
-    kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
-            if mx is not None else hist)
-    kept.write.mode("overwrite").parquet(
-        f"{state_dir}/state_v{batch_id}/postings")
-    hist.unpersist()   # a no-op unless history() cached it
+    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
+        k = keys_of(batch_df).localCheckpoint(eager=False)
+        try:
+            new = k.select(*new_cols)
+            if prev is None:
+                hist, prev_mx = new, None
+            else:
+                hist = (spark.read.schema(schema)
+                        .parquet(f"{state_dir}/state_v{prev}/postings")
+                        .unionByName(new))
+                prev_mx = _read_meta(state_dir, prev)
+            hits = (k.select(*probe_cols).alias("o")
+                    .join(F.broadcast(hist).alias("h"), hit, "left_semi")
+                    .select(*hit_cols))
+            # one row per batch doc: collected and written with
+            # pyarrow, and its doc_id max is the batch max
+            verdict = (batch_df.select(*doc_cols)
+                       .unionByName(hits, allowMissingColumns=True)
+                       .groupBy("doc_id").agg(*aggs).select(*verdict_cols)
+                       .toArrow())
+            _write_table(f"{state_dir}/verdicts_b{batch_id}", verdict)
+            mx = max((x for x in (prev_mx, pc.max(verdict["doc_id"]).as_py())
+                      if x is not None), default=None)
+            _write_meta(state_dir, batch_id, mx)
+            kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
+                    if mx is not None else hist)
+            kept.write.mode("overwrite").parquet(
+                f"{state_dir}/state_v{batch_id}/postings")
+        finally:
+            # the checkpointed RDD's blocks would otherwise stay until
+            # the JVM collects the RDD object
+            k._jdf.queryExecution().logical().rdd().unpersist(True)
+
+    return _snapshot_stream(docs, state_dir, checkpoint, step)
 
 
 def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
@@ -858,7 +885,7 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     micro-batch boundaries: a gram position in doc d is a duplicate
     iff SOME document d' with d - W <= d' < d contains the same gram
     (strictly-earlier doc_id, trailing window W).  The state is two
-    relations (``_window_step``): ``verdicts_b<batch>`` — a LITERALLY
+    relations (``_window_stream``): ``verdicts_b<batch>`` — a LITERALLY
     append-only per-doc report (each doc's verdict is finalized in
     the batch that delivers it and written ONCE to that batch's own
     directory — never rewritten, so total verdict I/O is linear in
@@ -876,81 +903,42 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     every future doc has id > max_seen, so it can only need postings
     with doc_id > max_seen - W.
 
-    Scale: per batch the work is one gram explode of the batch, one
-    semi-join of batch positions against the W-doc posting state
-    (equi on the 32-hex gram digest + a doc_id range filter), and ONE
-    batch-sized verdict write; per-batch state I/O is bounded by the
-    trailing window's gram count plus the batch size, never stream
-    length.
+    Scale: per batch the work is one md5 gram pass over the batch, one
+    broadcast semi-join of the batch's gram positions against the
+    W-doc posting window (equi on the 32-hex gram digest + a doc_id
+    range filter), one per-doc aggregation, the batch's verdict rows
+    through the driver and one window-sized postings write; per-batch
+    state I/O is bounded by the trailing window's gram count plus the
+    batch size, never stream length.  ``n_grams`` is counted from the
+    token count, so it costs no second gram pass.
     """
     from ..operators.dedup import SPAN_N
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
+    w = F.split("text", " ")
+    grams = F.when(
+        F.size(w) >= SPAN_N,
+        F.transform(
+            F.sequence(F.lit(0), F.size(w) - SPAN_N),
+            lambda i: F.struct(F.md5(F.encode(
+                F.array_join(F.slice(w, i + 1, SPAN_N), " "),
+                "UTF-8")).alias("gm")))
+    ).otherwise(F.array().cast("array<struct<gm:string>>")).alias("keys")
 
-    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
+    def keys_of(batch_df: DataFrame) -> DataFrame:
         # A maxFilesPerTrigger=1 micro-batch is ONE scan partition, so
-        # the interpreted md5 gram explode ran in a single task (guide
-        # §2.5 input skew: measured 2 x ~1.3s one-task jobs per batch —
-        # the two consumers' AQE stages raced the unfilled cache).
-        # spread() fans the batch across the engine's cores (gated:
-        # no-op once a production batch already has enough splits);
-        # project to the two consumed columns FIRST so the serial scan
-        # task decodes and the exchange ships only them (guide §2.3).
-        batch_df = spread(batch_df.select("doc_id", "text"))
-        w = F.split("text", " ")
-        grams = F.when(
-            F.size(w) >= SPAN_N,
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - SPAN_N),
-                lambda i: F.md5(F.encode(
-                    F.array_join(F.slice(w, i + 1, SPAN_N), " "),
-                    "UTF-8")))
-        ).otherwise(F.array().cast("array<string>"))
-        g = batch_df.select("doc_id", grams.alias("grams"))
-        # batch-scoped cache: the gram explode feeds BOTH the verdict
-        # job and the postings write job — without it the interpreted
-        # md5 HOF runs twice per batch (measured ~30% of batch wall
-        # at the sf1 probe); eagerly filled (count) so the consumers'
-        # concurrently-materialized AQE stages cannot race the fill
-        # and each recompute the explode; unpersisted before return.
-        # explode_OUTER + null-filter, not explode: the inner form's
-        # inferred non-empty filter (size(grams)>0) pushes below the
-        # spread exchange and re-evaluates the whole md5 transform in
-        # the serial scan task (measured 1.10s -> 0.17s noop; rows
-        # identical — gm is never null, so the filter only drops the
-        # outer form's empty-doc null row exactly like inner explode).
-        occ = (g.select("doc_id", F.explode_outer("grams").alias("gm"))
-                .filter(F.col("gm").isNotNull())
-                .cache())
-        occ.count()
-        base = g.select("doc_id",
-                        F.size("grams").cast("long").alias("n_grams"))
+        # the interpreted md5 gram pass would run in a single task
+        # (guide §2.5); spread() fans it across the engine's cores
+        # (gated: a no-op once a batch already has enough splits).
+        return spread(batch_df.select("doc_id", "text"), "doc_id") \
+            .select("doc_id", grams)
 
-        def verdicts(hist):
-            o, h = occ.alias("o"), hist.alias("h")
-            dup = (o.join(h, (F.col("o.gm") == F.col("h.gm"))
-                          & (F.col("h.doc_id") < F.col("o.doc_id"))
-                          & (F.col("h.doc_id")
-                             >= F.col("o.doc_id") - SPAN_WIN_DOCS),
-                          "left_semi")
-                    .groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).alias("n_dup_grams")))
-            return (base.join(dup, "doc_id", "left")
-                        .select("doc_id", "n_grams",
-                                F.coalesce("n_dup_grams", F.lit(0))
-                                 .cast("long").alias("n_dup_grams")))
-
-        # hist feeds BOTH the duplicate probe (the verdict job) and the
-        # pruned postings write (the next job) — cached so the batch's
-        # distinct shuffle runs once per batch, not once per consumer
-        _window_step(spark, state_dir, batch_id, prev,
-                     "doc_id long, gm string",
-                     lambda post0: post0.unionByName(occ.distinct()).cache(),
-                     verdicts, batch_df)
-        occ.unpersist()
-
-    return _snapshot_stream(docs, state_dir, checkpoint, step)
+    return _window_stream(
+        docs, state_dir, checkpoint, "doc_id long, gm string", keys_of,
+        ["doc_id", F.greatest(F.size(w) - SPAN_N + 1, F.lit(0))
+         .cast("long").alias("n_grams")],
+        ["doc_id", "n_grams",
+         F.col("n_hits").cast("long").alias("n_dup_grams")])
 
 
 def _read_verdict_log(spark, state_dir: str) -> DataFrame:
@@ -985,63 +973,39 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
     (dedup_minhash_lsh) offline, exactly the two-tier split the batch
     family documents.
 
-    Same state layout as the span form (``_window_step``), with the
+    Same state layout as the span form (``_window_stream``), with the
     (doc, band, bucket) relation as the postings (safe under the
     ordered-replay / ingest-watermark contract).  Band keys come from
-    the batch family's own _shingles -> _band_keys pipeline — the same
-    row-local Carter-Wegman construction, so the batch-twin oracle is
-    a full value proof (a NULL-text doc has no band keys and is never
-    flagged).
+    the batch family's own _shingles -> _band_array pipeline (the
+    array form of _band_keys) — the same row-local Carter-Wegman
+    construction, so the batch-twin oracle is a full value proof (a
+    NULL-text doc has no band keys and is never flagged).
 
     Scale: per batch one row-local signature pass over the batch (md5
-    once per shingle, no shuffle), one semi-join of the batch's 8N
-    band keys against the W-doc posting state, one batch-sized
-    verdict write; per-batch state I/O is bounded by the trailing
-    window plus the batch, never stream length.
+    once per shingle, no shuffle), one broadcast semi-join of the
+    batch's 8N band keys against the W-doc posting window, one per-doc
+    aggregation, the batch's verdict rows through the driver and one
+    window-sized postings write; per-batch state I/O is bounded by the
+    trailing window plus the batch, never stream length.
     """
-    from ..operators.dedup import _band_keys, _shingles
+    from ..operators.dedup import _band_array, _shingles
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
+    def keys_of(batch_df: DataFrame) -> DataFrame:
+        # spread() first: a 1-file micro-batch is one scan partition and
+        # the Carter-Wegman signature pass would run serially (guide
+        # §2.5).  A NULL-text doc has no band keys; its verdict row
+        # comes from the doc columns alone.
+        return _band_array(_shingles(spread(
+            batch_df.select("doc_id", "text"), "doc_id"))) \
+            .select("doc_id", F.col("bands").alias("keys"))
 
-    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
-        # batch-scoped cache: the signature build feeds the probe,
-        # the history union, AND the postings write — one md5 pass
-        # per batch instead of three; EAGER fill (count) so the
-        # consumers' concurrently-materialized AQE stages cannot race
-        # the unfilled cache; spread() first because a 1-file
-        # micro-batch is one scan partition and the Carter-Wegman
-        # signature pass ran serially (guide §2.5; span-merge lesson).
-        bands = _band_keys(
-            _shingles(spread(batch_df.select("doc_id", "text")))).cache()
-        bands.count()
-
-        def verdicts(hist):
-            o, h = bands.alias("o"), hist.alias("h")
-            hits = (o.join(h, (F.col("o.band") == F.col("h.band"))
-                           & (F.col("o.bucket") == F.col("h.bucket"))
-                           & (F.col("h.doc_id") < F.col("o.doc_id"))
-                           & (F.col("h.doc_id")
-                              >= F.col("o.doc_id") - SPAN_WIN_DOCS),
-                           "left_semi")
-                     .groupBy("doc_id")
-                     .agg(F.countDistinct("band").alias("n_hit_bands")))
-            return (batch_df.select("doc_id")
-                    .join(hits, "doc_id", "left")
-                    .select("doc_id",
-                            F.when(F.col("n_hit_bands").isNotNull(),
-                                   F.lit(1)).otherwise(F.lit(0))
-                             .cast("int").alias("is_near_dup_candidate"),
-                            F.coalesce("n_hit_bands", F.lit(0))
-                             .cast("long").alias("n_hit_bands")))
-
-        _window_step(spark, state_dir, batch_id, prev,
-                     "doc_id long, band int, bucket string",
-                     lambda post0: post0.unionByName(bands),
-                     verdicts, batch_df)
-        bands.unpersist()
-
-    return _snapshot_stream(docs, state_dir, checkpoint, step)
+    return _window_stream(
+        docs, state_dir, checkpoint, "doc_id long, band int, bucket string",
+        keys_of, ["doc_id"],
+        ["doc_id", (F.col("n_hits") > 0).cast("int")
+         .alias("is_near_dup_candidate"),
+         F.col("n_hits").cast("long").alias("n_hit_bands")])
 
 
 def windowed_minhash_dedup_finalize(spark, state_dir: str) -> DataFrame:

@@ -274,3 +274,24 @@ def test_zero_vector_cosine_is_null_and_ranks_last(spark, corpus):
     rows = QUERIES["knn_bruteforce_cosine"](spark, corpus).collect()
     assert all(r.cos is None for r in rows if r.q_id == 0)
     assert not any(r.neighbor_id == 0 for r in rows if r.q_id != 0)
+
+
+def test_knn_pandas_zero_query_and_corpus_vectors(spark, corpus):
+    """knn_pandas_vectorized with vec_id 0 (a query) and vec_id 1 (a
+    corpus vector) set to all zeros: the zero query still gets its
+    top-k, ranked at NULL cos by neighbour id, the zero corpus vector
+    ranks last, and the result matches the oracle."""
+    emb = os.path.join(corpus, "embeddings.parquet")
+    t = pq.read_table(emb)
+    ids = t.column("vec_id").to_pylist()
+    vecs = [[0.0] * len(v) if i in (0, 1) else v
+            for i, v in zip(ids, t.column("embedding").to_pylist())]
+    _rewrite(emb, t.set_column(t.schema.get_field_index("embedding"),
+                               t.schema.field("embedding"),
+                               pa.array(vecs, t.schema.field("embedding").type)))
+    assert not _match(spark, corpus, "knn_pandas_vectorized")
+    rows = QUERIES["knn_pandas_vectorized"](spark, corpus).collect()
+    zero = sorted((r.rk, r.neighbor_id, r.cos) for r in rows if r.q_id == 0)
+    assert [n for _, n, _ in zero] == sorted(i for i in ids if i != 0)[:len(zero)]
+    assert zero and all(c is None for _, _, c in zero)
+    assert not any(r.neighbor_id == 1 for r in rows if r.q_id != 0)

@@ -1023,3 +1023,134 @@ def test_decontam_bloom_replay_matches_batch_twin(spark):
     batch_bloom = {(r.slot, r.word) for r in bloom_partial(
         d.filter(F.col("doc_id") % EVAL_MOD == 0)).collect()}
     assert streamed == batch_bloom and len(batch_bloom) > 100
+
+
+# ---- corpus_incremental kernels: Spark jobs per micro-batch, release
+
+_KERNEL_RUNS: dict = {}
+
+
+def _kernel_run(spark, sf, kernel):
+    """Run one corpus_incremental kernel over the ordered sf replay once
+    per session: (jobs, data batches, CacheManager empty, RDD ids that
+    gained cached blocks during the run)."""
+    from go_mapreduce_crawler_spark.operators.streaming_replay import (
+        REPLAY_SPLITS, _await_drained, _replay_ordered_docs)
+    from go_mapreduce_crawler_spark.streaming import stateful as st
+
+    if kernel not in _KERNEL_RUNS:
+        start = {"span": st.stream_windowed_span_dedup,
+                 "minhash": st.stream_windowed_minhash_dedup,
+                 "invidx": st.stream_inverted_index}[kernel]
+        sc = spark.sparkContext
+        spark.catalog.clearCache()
+        blocks0 = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        stream, state, ckpt = _replay_ordered_docs(spark, sf, f"jobs_{kernel}")
+        q = start(stream, state, ckpt)
+        _await_drained(q, f"jobs_{kernel}")
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) == REPLAY_SPLITS
+        _KERNEL_RUNS[kernel] = (
+            len(sc.statusTracker().getJobIdsForGroup(str(q.runId))),
+            len(batches),
+            spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+            {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - blocks0)
+    return _KERNEL_RUNS[kernel]
+
+
+@pytest.mark.parametrize("kernel,first,later", [
+    ("span", 6, 6), ("minhash", 6, 6), ("invidx", 4, 5)])
+def test_corpus_incremental_jobs_per_micro_batch(spark, sf_small, kernel,
+                                                 first, later):
+    """Spark tags a stream's jobs with its runId as the job group.  A
+    windowed dedup micro-batch runs at most 6 jobs: the spread, the
+    window broadcast, the per-doc aggregation and the two writes.  The
+    inverted index runs 4 on its first batch and 5 on each later one
+    (the predecessor is read with its known schema, so no
+    schema-inference job)."""
+    jobs, n, _, _ = _kernel_run(spark, sf_small, kernel)
+    assert jobs <= first + later * (n - 1), (kernel, jobs, n)
+
+
+@pytest.mark.parametrize("kernel", ["span", "minhash"])
+def test_windowed_dedup_releases_cache_and_blocks(spark, sf_small, kernel):
+    """Nothing a windowed dedup micro-batch materializes outlives it:
+    no CacheManager entry and no RDD with cached blocks."""
+    _, _, cache_empty, new_blocks = _kernel_run(spark, sf_small, kernel)
+    assert cache_empty
+    assert not new_blocks, new_blocks
+
+
+def test_windowed_dedup_null_and_empty_text_docs(spark, sf_small, tmp_path):
+    """A NULL-text doc and an empty-text doc in a replay batch: no grams
+    (n_grams = 0), the NULL doc has no band keys, neither is flagged by
+    either windowed kernel, and both replays match their oracles."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_mapreduce_crawler_spark.operators import dedup
+    from go_mapreduce_crawler_spark.operators.streaming_replay import (
+        ORACLE, q_stream_windowed_minhash_dedup_replay,
+        q_stream_windowed_span_dedup_replay)
+    from tests.oracle_utils import compare
+
+    t = pq.read_table(os.path.join(sf_small, "documents.parquet"))
+    ids = t.column("doc_id").to_pylist()
+    null_id, empty_id = sorted(ids)[3], sorted(ids)[4]
+    text = [None if i == null_id else "" if i == empty_id else x
+            for i, x in zip(ids, t.column("text").to_pylist())]
+    t = t.set_column(t.schema.get_field_index("text"), "text",
+                     pa.array(text, pa.string()))
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    pq.write_table(t, os.path.join(sf, "documents.parquet"))
+
+    span = q_stream_windowed_span_dedup_replay(spark, sf)
+    mh = q_stream_windowed_minhash_dedup_replay(spark, sf)
+    by_id = {r.doc_id: r for r in span.collect()}
+    assert {(by_id[i].n_grams, by_id[i].n_dup_grams)
+            for i in (null_id, empty_id)} == {(0, 0)}
+    flagged = {r.doc_id for r in mh.collect() if r.is_near_dup_candidate}
+    assert not flagged & {null_id, empty_id}
+    assert flagged    # the fixture's near-dups are still found
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    keyed = {r.doc_id for r in dedup._band_keys(dedup._shingles(docs))
+             .select("doc_id").distinct().collect()}
+    assert null_id not in keyed and empty_id in keyed
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{sf}/documents.parquet')")
+    try:
+        assert not compare(span, con, ORACLE[
+            "stream_windowed_span_dedup_replay"], "span")
+        assert not compare(mh, con, ORACLE[
+            "stream_minhash_dedup_replay"], "minhash")
+    finally:
+        con.close()
+
+
+def test_stream_stream_join_conf_is_set_for_start_only(spark, sf_small,
+                                                       monkeypatch):
+    """The stream-stream join replay disables no-data micro-batches for
+    its own query only: the session conf is unchanged while the query
+    runs, and the query still skips its trailing no-data batch."""
+    from go_mapreduce_crawler_spark.operators import streaming_replay as sr
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+    seen = {}
+    orig = sr._await_drained
+
+    def spy(q, name):
+        seen["conf"] = spark.conf.get(key)
+        orig(q, name)
+        seen["rows"] = [p["numInputRows"] for p in q.recentProgress]
+
+    monkeypatch.setattr(sr, "_await_drained", spy)
+    sr.q_stream_stream_join_replay(spark, sf_small).collect()
+    assert seen["conf"] == before
+    assert seen["rows"] and all(n > 0 for n in seen["rows"]), seen["rows"]
+    assert spark.conf.get(key) == before
