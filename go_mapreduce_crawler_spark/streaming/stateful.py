@@ -800,36 +800,42 @@ def _window_stream(docs: DataFrame, state_dir: str, checkpoint: str,
     the window — to the verdict, written as ``verdicts_b<batch_id>``.
 
     The key arrays are built once per batch: a lazy ``localCheckpoint``
-    keeps them for the two writes and is released before the step
-    returns.  The history is the predecessor's postings (read with
-    their known schema) plus the batch's own postings.  It is bounded
-    by SPAN_WIN_DOCS documents plus the batch, so it is broadcast; a
-    key occurrence is a hit when the history holds it for a strictly
-    earlier doc_id inside the window.  The verdict (one small row per
-    batch doc) is collected and written with pyarrow (_write_table);
-    its doc_id max is the batch max.  The running max then advances
-    and is written as ``meta``, and the history pruned to doc_id >
-    max_seen - SPAN_WIN_DOCS is written by Spark as ``postings``, both
-    under ``state_v<batch_id>``.
+    keeps them for the two actions and is released before the step
+    returns.  A key occurrence is a hit when the same key is posted by
+    a strictly earlier doc_id inside the window, in the predecessor's
+    postings (read with their known schema) or in the batch itself.
+    One pass finds both: the batch's occurrences and the predecessor's
+    postings are shuffled together by key, and an occurrence hits when
+    the largest doc_id before it in its key group is within
+    SPAN_WIN_DOCS.  Nothing is broadcast: the shuffle holds the batch's
+    key occurrences plus at most SPAN_WIN_DOCS documents' postings,
+    split by key across tasks.  The verdict — one row of a few longs
+    per batch doc — is collected and written with pyarrow
+    (_write_table); its doc_id max is the batch max.  The running max
+    then advances and is written as ``meta``, and the predecessor's
+    postings plus the batch's distinct keys, pruned to doc_id >
+    max_seen - SPAN_WIN_DOCS, are written by Spark as ``postings``,
+    both under ``state_v<batch_id>``.
 
     Every Column is built once per stream, not once per batch: Python
     plan building was 0.1-0.2 s of each micro-batch.  Measured on
     500-doc batches (4 vCPUs): 5 Spark jobs per micro-batch — the
-    spread exchange, the history broadcast, the per-doc aggregation
+    spread exchange, the key exchange, the per-doc aggregation
     exchange, the verdict collect and the postings write.
     """
     import pyarrow.compute as pc
+    from pyspark.sql import Window
 
     spark = docs.sparkSession
     schema = StructType.fromDDL(post_schema)
+    key_cols = [c for c in schema.fieldNames() if c != "doc_id"]
     new_cols = ["doc_id", F.inline(F.array_distinct("keys"))]
-    probe_cols = ["doc_id", F.inline("keys")]
-    hit = reduce(operator.and_, [
-        F.col(f"o.{c}") == F.col(f"h.{c}")
-        for c in schema.fieldNames() if c != "doc_id"]) \
-        & (F.col("h.doc_id") < F.col("o.doc_id")) \
-        & (F.col("h.doc_id") >= F.col("o.doc_id") - SPAN_WIN_DOCS)
-    hit_cols = ["doc_id", F.lit(1).alias("n_hits")]
+    probe_cols = ["doc_id", F.inline("keys"), F.lit(True).alias("probe")]
+    post_cols = ["doc_id", *key_cols, F.lit(False).alias("probe")]
+    before = F.max("doc_id").over(
+        Window.partitionBy(*key_cols).orderBy("doc_id")
+        .rangeBetween(Window.unboundedPreceding, -1))
+    hit = F.col("probe") & (before >= F.col("doc_id") - SPAN_WIN_DOCS)
     doc_cols = [*doc_cols, F.lit(0).alias("n_hits")]
     names = [c for c in docs.select(*doc_cols).columns
              if c not in ("doc_id", "n_hits")]
@@ -840,16 +846,17 @@ def _window_stream(docs: DataFrame, state_dir: str, checkpoint: str,
         k = keys_of(batch_df).localCheckpoint(eager=False)
         try:
             new = k.select(*new_cols)
+            occ = k.select(*probe_cols)
             if prev is None:
                 hist, prev_mx = new, None
             else:
-                hist = (spark.read.schema(schema)
-                        .parquet(f"{state_dir}/state_v{prev}/postings")
-                        .unionByName(new))
+                post = (spark.read.schema(schema)
+                        .parquet(f"{state_dir}/state_v{prev}/postings"))
+                hist = post.unionByName(new)
+                occ = occ.unionByName(post.select(*post_cols))
                 prev_mx = _read_meta(state_dir, prev)
-            hits = (k.select(*probe_cols).alias("o")
-                    .join(F.broadcast(hist).alias("h"), hit, "left_semi")
-                    .select(*hit_cols))
+            hits = (occ.select("doc_id", hit.alias("hit"))
+                    .where("hit").select("doc_id", F.lit(1).alias("n_hits")))
             # one row per batch doc: collected and written with
             # pyarrow, and its doc_id max is the batch max
             verdict = (batch_df.select(*doc_cols)
@@ -904,12 +911,13 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     with doc_id > max_seen - W.
 
     Scale: per batch the work is one md5 gram pass over the batch, one
-    broadcast semi-join of the batch's gram positions against the
-    W-doc posting window (equi on the 32-hex gram digest + a doc_id
-    range filter), one per-doc aggregation, the batch's verdict rows
-    through the driver and one window-sized postings write; per-batch
-    state I/O is bounded by the trailing window's gram count plus the
-    batch size, never stream length.  ``n_grams`` is counted from the
+    shuffle by gram digest of the batch's gram positions and the W-doc
+    posting window (a position is a duplicate when the latest earlier
+    doc_id in its gram group is within W), one per-doc aggregation,
+    the batch's verdict rows (three longs per doc) through the driver
+    and one window-sized postings write; per-batch state I/O is
+    bounded by the trailing window's gram count plus the batch size,
+    never stream length.  ``n_grams`` is counted from the
     token count, so it costs no second gram pass.
     """
     from ..operators.dedup import SPAN_N
@@ -982,8 +990,8 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
     NULL-text doc has no band keys and is never flagged).
 
     Scale: per batch one row-local signature pass over the batch (md5
-    once per shingle, no shuffle), one broadcast semi-join of the
-    batch's 8N band keys against the W-doc posting window, one per-doc
+    once per shingle, no shuffle), one shuffle by (band, bucket) of
+    the batch's 8N band keys and the W-doc posting window, one per-doc
     aggregation, the batch's verdict rows through the driver and one
     window-sized postings write; per-batch state I/O is bounded by the
     trailing window plus the batch, never stream length.

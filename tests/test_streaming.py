@@ -1064,7 +1064,7 @@ def test_corpus_incremental_jobs_per_micro_batch(spark, sf_small, kernel,
                                                  first, later):
     """Spark tags a stream's jobs with its runId as the job group.  A
     windowed dedup micro-batch runs at most 6 jobs: the spread, the
-    window broadcast, the per-doc aggregation and the two writes.  The
+    key exchange, the per-doc aggregation and the two writes.  The
     inverted index runs 4 on its first batch and 5 on each later one
     (the predecessor is read with its known schema, so no
     schema-inference job)."""
