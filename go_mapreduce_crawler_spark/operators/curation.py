@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import words
 from ..sources.tables import load_table, spread
+from .retrieval_index import index_for
 
 
 # ------------------------------------------------------------------
@@ -48,11 +50,11 @@ def q_quality_classifier(spark, sf_dir):
     scan at full codegen speed.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
+    toks = words()
     score = F.aggregate(
-        words, F.lit(0).cast("long"),
+        toks, F.lit(0).cast("long"),
         lambda acc, t: acc + _tok_weight_spark(t))
-    n = F.size(words)
+    n = F.size(toks)
     return d.select(
         "doc_id", "lang",
         n.alias("n_tokens"),
@@ -74,12 +76,12 @@ def blocklist_verdict(d):
     row-local, so it applies unchanged to a STREAMING DataFrame (the
     streaming-ingest curation form; parity pinned in
     tests/test_streaming.py)."""
-    words = F.split(F.col("text"), " ")
-    n = F.size(words)
+    toks = words()
+    n = F.size(toks)
     has_block = F.size(F.array_intersect(
-        F.array_distinct(words),
+        F.array_distinct(toks),
         F.array(*[F.lit(w) for w in BLOCKLIST]))) > 0
-    too_long_word = F.array_max(F.transform(words, F.length)) > MAX_WORD_LEN
+    too_long_word = F.array_max(F.transform(toks, F.length)) > MAX_WORD_LEN
     reasons = F.concat_ws(
         ",",
         F.when(has_block, "blocklist"),
@@ -136,7 +138,7 @@ def q_sample_token_budget(spark, sf_dir):
     window — without any source's docs ever sorting in one task.
     """
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.col("text"), " "))
+    n_tok = F.size(words())
     h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
     base = d.select("doc_id", "source", n_tok.alias("n_tokens"),
                     h.alias("h"), F.substring(h, 1, 2).alias("bkt"))
@@ -220,9 +222,9 @@ def q_skyline_pareto_docs(spark, sf_dir):
     integers and dominance is tie-exact.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
+    toks = words()
     score = F.aggregate(
-        words, F.lit(0).cast("long"),
+        toks, F.lit(0).cast("long"),
         lambda acc, t: acc + _tok_weight_spark(t))
     base = d.select("doc_id", score.alias("score_milli"),
                     F.col("n_chars").cast("long").alias("n_chars"))
@@ -741,25 +743,26 @@ UNIG_CHUNK_W = UNIG_MAXW   # chunk width == the oracle unroll bound
 
 
 def _unigram_words(spark, sf_dir, chunked: bool = False):
-    """Distinct-word relation (w, c).  chunked=True re-segments each
+    """Distinct-word relation (w, c): unchunked, the corpus word counts
+    of the bag of words (retrieval_index).  chunked=True re-segments each
     document into fixed {w}-char chunks of the space-joined text
     (spaces -> '_', chunks cross word boundaries) — a DETERMINISTIC
     richer word stream (~9.8k distinct words / ~1.5k multi-char
     candidate pieces at every SF vs the raw corpus's 31/204), the
     workload that makes a production-sized candidate cap actually
     bind.  Both engines derive it with the same expressions."""
-    d = load_table(spark, sf_dir, "documents")
     if not chunked:
-        words = d.select(F.explode(F.split("text", " ")).alias("w"))
-    else:
-        W = UNIG_CHUNK_W
-        words = (d.filter(F.length("text") > 0)
-                  .selectExpr("replace(text, ' ', '_') AS b")
-                  .selectExpr(
-                      f"explode(transform(sequence(1,"
-                      f" CAST((length(b) + {W - 1}) DIV {W} AS INT)),"
-                      f" i -> substring(b, (i-1)*{W} + 1, {W}))) AS w"))
-    return words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+        return (index_for(spark, sf_dir).bag.df
+                .select(F.col("word").alias("w"), F.col("cf").alias("c")))
+    W = UNIG_CHUNK_W
+    return (load_table(spark, sf_dir, "documents")
+            .filter(F.length("text") > 0)
+            .selectExpr("replace(text, ' ', '_') AS b")
+            .selectExpr(
+                f"explode(transform(sequence(1,"
+                f" CAST((length(b) + {W - 1}) DIV {W} AS INT)),"
+                f" i -> substring(b, (i-1)*{W} + 1, {W}))) AS w")
+            .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
 
 
 _unigram_words.__doc__ = _unigram_words.__doc__.replace(
@@ -771,19 +774,21 @@ def _unigram_train(spark, sf_dir, v: int = UNIG_V,
     """The trainer loop (seed + hard-EM rounds); returns
     (distinct-word DataFrame, final vocab list).
 
-    The compacted distinct-word relation is persisted across the EM
+    The chunked distinct-word relation is persisted across the EM
     rounds (r10 verdict item 7): it feeds the unroll guard, the
     candidate seeding, and every round's Viterbi pass — without the
     cache each pass re-runs the chunk-explode + distinct agg against
     the corpus scan (rounds+2 redundant corpus passes; the relation
     itself is Heaps-sublinear and fits executor storage by
     construction).  Unpersisted before return — downstream consumers
-    re-derive it lazily."""
+    re-derive it lazily.  (Unchunked, it is the bag of words' held df.)"""
     # (r12: spread()ing this relation to engine parallelism was A/B'd
     # and REGRESSED — 31-9.8k distinct words over 32 round-robin
     # partitions is pure task overhead per EM round; kept at the
     # data-sized shuffle partitioning.)
-    words = _unigram_words(spark, sf_dir, chunked).persist()
+    words = _unigram_words(spark, sf_dir, chunked)
+    if chunked:
+        words = words.persist()
     # Loud unroll-bound guard (r07 ADVICE item 1): UNIG_MAXW bounds the
     # ORACLE's unrolled DP only — the Spark kernels are unbounded — so
     # a corpus word longer than the bound would silently vanish from
@@ -825,7 +830,8 @@ def _unigram_train(spark, sf_dir, v: int = UNIG_V,
                   if len(p) > 1 and usage.get(p, 0) > 0]
                  + [(p, max(usage.get(p, 0), 1)) for (p, _) in vocab
                     if len(p) == 1])
-    words.unpersist()
+    if chunked:
+        words.unpersist()
     return words, vocab
 
 
@@ -834,7 +840,8 @@ def _viterbi_len_kernel(costs):
     total min COST (micro-nats) of its segmentation under the final
     costs (same DP and smallest-split tie order as training, so both
     follow the same argmin chain the oracle's carried columns
-    reproduce)."""
+    reproduce).  The empty word (the token of empty text) has no
+    segmentation, as in the oracle's DP, so it gets no row."""
     import pandas as pd
 
     def kernel(batches):
@@ -842,6 +849,8 @@ def _viterbi_len_kernel(costs):
             ws, ns, cs = [], [], []
             for w in pdf["w"]:
                 n = len(w)
+                if not n:
+                    continue
                 inf = 1 << 62
                 dp = [0] + [inf] * n
                 bj = [0] * (n + 1)
@@ -874,22 +883,23 @@ def q_unigram_lm_apply(spark, sf_dir):
     words, pieces, and pieces-per-word in exact integer ppm.
 
     Scale: the expensive part (the DP) runs once per DISTINCT word
-    (Heaps-compacted), not per occurrence; documents then join the
-    tiny word -> piece-count relation and aggregate — one explode +
-    one keyed join + one doc agg, no payload ever reaches the DP.
+    (Heaps-compacted), not per occurrence; the bag of words' (doc,
+    word, tf) counts then join the tiny word -> piece-count relation
+    — one keyed join + one doc agg, no payload ever reaches the DP.
     """
-    words, vocab = _unigram_train(spark, sf_dir)
+    dw, vocab = _unigram_train(spark, sf_dir)
     costs = _unig_costs(vocab)
-    wp = (words.select("w")
+    wp = (dw.select("w")
                .mapInPandas(_viterbi_len_kernel(costs),
                             "w string, n_pieces int, cost_un long")
                .select("w", "n_pieces"))
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    toks = (index_for(spark, sf_dir).bag.tf
+            .select("doc_id", F.col("word").alias("w"), "tf"))
     return (toks.join(wp, "w")
                 .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_words"),
-                     F.sum("n_pieces").alias("n_pieces"))
+                .agg(F.sum("tf").alias("n_words"),
+                     F.sum(F.col("tf") * F.col("n_pieces"))
+                      .alias("n_pieces"))
                 .selectExpr("doc_id", "n_words",
                             "CAST(n_pieces AS BIGINT) AS n_pieces",
                             "CAST(n_pieces * 1000000 DIV n_words"
@@ -915,24 +925,22 @@ def q_corpus_domain_mixture(spark, sf_dir):
     one explode + one keyed join; domains are a ~|sources|-row
     relation, so the mixture math is metadata-sized.
     """
-    words, vocab = _unigram_train(spark, sf_dir)
+    dw, vocab = _unigram_train(spark, sf_dir)
     costs = _unig_costs(vocab)
-    wp = (words.select("w")
+    wp = (dw.select("w")
                .mapInPandas(_viterbi_len_kernel(costs),
                             "w string, n_pieces int, cost_un long")
                .select("w", "cost_un"))
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("source",
-                    F.explode(F.split("text", " ")).alias("w"))
+    toks = d.select("source", F.explode(words()).alias("w"))
+    # the total and the final projection share this aggregate's exchange
     per = (toks.join(wp, "w")
                .groupBy("source")
                .agg(F.count(F.lit(1)).alias("n_words"),
                     F.sum("cost_un").alias("sum_cost_un"))
                .selectExpr("source", "n_words", "sum_cost_un",
                            "CAST(sum_cost_un DIV n_words AS BIGINT)"
-                           " AS difficulty_ppw")
-               .cache())   # |sources| rows, corpus-sized to compute;
-    #                        feeds the total AND the final projection
+                           " AS difficulty_ppw"))
     tot = per.agg(F.sum("difficulty_ppw").alias("t"))
     return (per.crossJoin(F.broadcast(tot))
                .selectExpr("source", "n_words", "sum_cost_un",
@@ -1019,7 +1027,7 @@ def q_domain_mixture_mw(spark, sf_dir):
     trajectory is bit-reproducible and fully value-oracled.
 
     Scale: the two LM cost relations are the operators' own shapes
-    (one word shuffle + one bigram shuffle, models broadcast); after
+    (corpus counts from the bag of words, models broadcast); after
     the per-source agg everything is a |sources|-row relation, so the
     {t} unrolled rounds are metadata-sized plan stages (a production
     DoReMi swaps the proxy pair for real model losses; the mixture
@@ -1028,50 +1036,37 @@ def q_domain_mixture_mw(spark, sf_dir):
     Output: the full trajectory (round 0..{t}) of
     (round, source, excess_ppw, weight_ppm).
     """.format(t=DOREMI_ROUNDS, e=DOREMI_ETA_PPM)
-    from .text import _lit_spark, _ln_det
+    from .text import _bigrams, _lit_spark, _ln_det
 
     d = load_table(spark, sf_dir, "documents")
-    # words_all feeds the total, the unigram model, the unigram margins
-    # AND the N scalar — four plan references, each re-running the
-    # corpus explode without a cache
-    words_all = (d.select(F.explode(F.split("text", " ")).alias("word"))
-                 .cache())
-    total = words_all.agg(F.count(F.lit(1)).alias("total"))
-    logp_u = (f"CAST(round(({_ln_det('cnt', _lit_spark)}"
-              f" - {_ln_det('total', _lit_spark)}) * 1e6, 0) AS BIGINT)")
-    umodel = (words_all.groupBy("word")
-              .agg(F.count(F.lit(1)).alias("cnt"))
-              .crossJoin(F.broadcast(total))
+    bag = index_for(spark, sf_dir).bag
+    logp_u = (f"CAST(round(({_ln_det('cf', _lit_spark)}"
+              f" - {_ln_det('total_words', _lit_spark)}) * 1e6, 0)"
+              f" AS BIGINT)")
+    umodel = (bag.df.select("word", "cf", *bag.scalars())
               .selectExpr("word", f"{logp_u} AS logp_u"))
-    stok = d.select("source",
-                    F.explode(F.split("text", " ")).alias("word"))
+    stok = d.select("source", F.explode(words()).alias("word"))
     uper = (stok.join(F.broadcast(umodel), "word")
                 .groupBy("source")
                 .agg(F.count(F.lit(1)).alias("n_tokens"),
                      F.sum("logp_u").alias("sum_u")))
-    w = F.split("text", " ")
-    n = F.size(w)
-    bg = (d.select("source", F.explode(F.zip_with(
-              F.slice(w, 1, n - 1), F.slice(w, 2, n - 1),
-              lambda a, b: F.struct(a.alias("prev"), b.alias("word"))))
-           .alias("p"))
-           .select("source", "p.prev", "p.word").cache())  # model + scoring
-    uni = (words_all.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-           .cache())   # joined twice (c_a and c_b margins)
-    bi = bg.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("c_ab"))
+    # the model and the scoring share this aggregate's exchange
+    bg = (_bigrams(d, "source").groupBy("source", "prev", "word")
+          .agg(F.count(F.lit(1)).alias("n")))
+    uni = bag.df.select("word", F.col("cf").alias("c"))
+    bi = bg.groupBy("prev", "word").agg(F.sum("n").alias("c_ab"))
     logp_bi = (f"CAST(round(({_ln_det('(c_ab * N + c_a * c_b)', _lit_spark)}"
                f" - {_ln_det('(2 * c_a * N)', _lit_spark)}) * 1e6, 0)"
                f" AS BIGINT)")
     bmodel = (bi.join(uni.select(F.col("word").alias("prev"),
                                  F.col("c").alias("c_a")), "prev")
                 .join(uni.select("word", F.col("c").alias("c_b")), "word")
-                .crossJoin(F.broadcast(
-                    words_all.agg(F.count(F.lit(1)).alias("N"))))
+                .withColumn("N", F.lit(bag.total_words).cast("long"))
                 .selectExpr("prev", "word", f"{logp_bi} AS logp_bi"))
     bper = (bg.join(F.broadcast(bmodel), ["prev", "word"])
               .groupBy("source")
-              .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                   F.sum("logp_bi").alias("sum_b")))
+              .agg(F.sum("n").alias("n_bigrams"),
+                   F.sum(F.col("n") * F.col("logp_bi")).alias("sum_b")))
     per = (uper.join(bper, "source")
                .selectExpr("source",
                            "(-sum_u) DIV n_tokens AS unig_cost_ppw",
@@ -1524,14 +1519,14 @@ def q_pipeline_pretraining(spark, sf_dir):
     corpus card a data recipe reports.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    n = F.size(words)
+    toks = words()
+    n = F.size(toks)
     has_block = F.size(F.array_intersect(
-        F.array_distinct(words),
+        F.array_distinct(toks),
         F.array(*[F.lit(w) for w in BLOCKLIST]))) > 0
     policy_ok = (~has_block) & (n >= MIN_WORDS) & (n <= MAX_WORDS)
     score = F.aggregate(
-        words, F.lit(0).cast("long"),
+        toks, F.lit(0).cast("long"),
         lambda acc, t: acc + _tok_weight_spark(t))
     norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     stage1 = (d.filter(policy_ok)
@@ -1579,30 +1574,24 @@ def q_dsir_weights(spark, sf_dir):
     once per bucket to integer micro-nats, so per-document sums are
     associative integer adds (the LM-score determinism recipe).
 
-    Scale: the token stream compacts ONCE to (doc_id, bucket, cnt) —
-    at most 1024 rows per document, cached so the explode runs a
-    single time — and both the global bucket counts (a second, tiny
-    agg over the compacted relation) and the per-document scores
-    (broadcast model join + sum(cnt * logw)) derive from it.  Products
-    stay under 2^63 for any corpus with N_t * c_r < 9e18.
+    Scale: the raw bucket counts aggregate the bag of words' word
+    counts and the per-document scores its (doc, word, tf) counts
+    (broadcast model join + sum(tf * logw)); only the target slice is
+    exploded here.  Products stay under 2^63 for any corpus with
+    N_t * c_r < 9e18.
     """
     from .text import _ln_det, _lit_spark
 
-    d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        (F.col("lang") == DSIR_TARGET_LANG).alias("is_t"),
-        F.explode(F.split("text", " ")).alias("word"))
-    dbc = (words.select(
-               "doc_id", "is_t",
-               (F.conv(F.substring(F.md5(F.encode("word", "UTF-8")), 1, 8),
-                       16, 10).cast("long") % DSIR_BUCKETS).alias("b"))
-           .groupBy("doc_id", "is_t", "b")
-           .agg(F.count(F.lit(1)).alias("cnt"))
-           .cache())
-    bc = dbc.groupBy("b").agg(
-        F.sum("cnt").alias("c_r"),
-        F.sum(F.when(F.col("is_t"), F.col("cnt")).otherwise(0)).alias("c_t"))
+    bag = index_for(spark, sf_dir).bag
+    b = (F.conv(F.substring(F.md5(F.encode("word", "UTF-8")), 1, 8),
+                16, 10).cast("long") % DSIR_BUCKETS).alias("b")
+    c_t = (load_table(spark, sf_dir, "documents")
+           .filter(F.col("lang") == DSIR_TARGET_LANG)
+           .select(F.explode(words()).alias("word"))
+           .groupBy(b).agg(F.count(F.lit(1)).alias("c_t")))
+    bc = (bag.df.groupBy(b).agg(F.sum("cf").alias("c_r"))
+          .join(c_t, "b", "left")
+          .select("b", "c_r", F.coalesce("c_t", F.lit(0)).alias("c_t")))
     tot = bc.agg(F.sum("c_r").alias("n_r"), F.sum("c_t").alias("n_t"))
     num = f"((c_t + 1) * (n_r + {DSIR_BUCKETS}))"
     den = f"((c_r + 1) * (n_t + {DSIR_BUCKETS}))"
@@ -1610,10 +1599,11 @@ def q_dsir_weights(spark, sf_dir):
             f" - {_ln_det(den, _lit_spark)}) * 1e6, 0) AS BIGINT)")
     model = (bc.crossJoin(F.broadcast(tot))
                .selectExpr("b", f"{logw} AS logw_u"))
-    return (dbc.join(F.broadcast(model), "b")
+    return (bag.tf.select("doc_id", "tf", b)
+               .join(F.broadcast(model), "b")
                .groupBy("doc_id")
-               .agg(F.sum("cnt").alias("n_tokens"),
-                    F.sum(F.col("cnt") * F.col("logw_u")).alias("sum_logw_u"))
+               .agg(F.sum("tf").alias("n_tokens"),
+                    F.sum(F.col("tf") * F.col("logw_u")).alias("sum_logw_u"))
                .select("doc_id", "n_tokens", "sum_logw_u",
                        # floor of micro-nats-per-token: ROUND(x, 6) hit a
                        # genuine half-tie at sf0.1 (sum/n = -997.5) where

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import dec, ts_day, ts_hour
+from ..functions.text import words
 from ..sources.tables import load_table
 
 MONEY = "decimal(12,2)"
@@ -2718,7 +2719,7 @@ def q_eval_conformal_coverage(spark, sf_dir):
     base = d.select(
         "doc_id", "lang",
         F.col("n_chars").cast("long").alias("x"),
-        F.size(F.split("text", " ")).cast("long").alias("y"),
+        F.size(words()).cast("long").alias("y"),
         sp.alias("sp"))
 
     tr = base.filter(F.col("sp").isin(0, 1))

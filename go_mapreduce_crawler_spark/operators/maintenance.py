@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.exact import dec
+from ..functions.text import words
 from ..sources.tables import load_table
 
 MONEY = "decimal(12,2)"
@@ -472,7 +473,7 @@ def q_inverted_index_delta(spark, sf_dir):
 
     def index(docs):
         g = docs.select("doc_id", F.explode(
-            _token_ngrams(F.split("text", " "), 3)).alias("t"))
+            _token_ngrams(words(), 3)).alias("t"))
         pd_ = (g.groupBy("t", "doc_id")
                 .agg(F.count(F.lit(1)).alias("tf")))
         return (pd_.groupBy("t")
@@ -518,7 +519,7 @@ def q_index_compression_report(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     g = (d.select("doc_id", F.explode(
-            _token_ngrams(F.split("text", " "), 3)).alias("t"))
+            _token_ngrams(words(), 3)).alias("t"))
          .distinct())
     post = g.groupBy("t").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ds"))

@@ -1,5 +1,6 @@
 """Retrieval index: the corpus side of every kNN / ANN / BM25 / hybrid
-request, built once per corpus version and shared by all requests.
+request and of every word-count operator, built once per corpus version
+and shared by all of them.
 
 A retrieval request has two sides.  The corpus side — vector norms, IVF
 cell assignments, LSH sketches, BM25 posting statistics — depends only
@@ -9,16 +10,23 @@ the request.  ``RetrievalIndex`` holds the corpus side and nothing else:
 it never holds a query result, and every query-side relation is rebuilt
 per request.
 
-The index has three parts; each is built on first use, once, under its
+The index has these parts; each is built on first use, once, under its
 own lock (concurrent first requests wait for one build):
 
+* ``seed_count()`` and ``doc_count()``: row counts probed once per
+  version (the query-set and exact-pair guards compare them with their
+  bounds on every call);
 * ``vectors``: ``vec(vec_id, embedding, nrm, cell)`` — the embeddings
   spread to engine parallelism, each row's L2 norm and its IVF cell —
   plus the IVF centroids and their norms on the driver;
 * ``sketches``: the LSH sketches ``(vec_id, bb)``, one row per band;
-* ``text``: the BM25 relations — postings ``tf(doc_id, word, tf, df,
-  dl, bm25_e6)``, ``df(word, df, cf)``, ``dl(doc_id, dl)`` and the
-  one-row ``scal(total_words, n_docs)`` (also held as driver scalars).
+* ``bag``: the bag of words (``functions.text.words``) every word-count
+  operator reads — counts ``tf(doc_id, word, tf)``, ``df(word, df,
+  cf)``, ``dl(doc_id, dl)`` and the one-row ``scal(total_words,
+  n_docs)`` (also held as driver scalars).  A NULL-text document has no
+  token, so no row, and is not in ``n_docs``;
+* ``text``: the bag with ``tf`` replaced by the BM25 postings
+  ``(doc_id, word, tf, df, dl, bm25_e6)``; only BM25 readers build it.
 
 Each relation is materialized with ``localCheckpoint(eager=True)``: its
 blocks live in executor storage outside the SQL cache, so
@@ -54,6 +62,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import words
 from ..functions.vectors import l2_norm
 from ..sources.tables import load_table, spread
 from .text import _bm25_e6_expr, _lit_spark
@@ -219,7 +228,7 @@ class Vectors(NamedTuple):
 
 
 class Text(NamedTuple):
-    tf: DataFrame          # (doc_id, word, tf, df, dl, bm25_e6) postings
+    tf: DataFrame          # bag: (doc_id, word, tf); text: + df, dl, bm25_e6
     df: DataFrame          # (word, df, cf)
     dl: DataFrame          # (doc_id, dl)
     scal: DataFrame        # one row (total_words, n_docs)
@@ -249,7 +258,8 @@ class RetrievalIndex:
         self.released = False
         self._parts: dict = {}
         self._locks = {p: threading.Lock()
-                       for p in ("seeds", "vectors", "sketches", "text")}
+                       for p in ("seeds", "docs", "vectors", "sketches",
+                                 "bag", "text")}
         self._held: list = []   # (rdd id, partitions, JVM RDD) per checkpoint
 
     # ---- parts
@@ -346,38 +356,45 @@ class RetrievalIndex:
                               .mapInPandas(kernel, "vec_id long, bb long"))
         return self._part("sketches", build)
 
+    def doc_count(self) -> int:
+        """Rows of ``documents``, NULL-text ones included, probed once
+        per version (the exact-pair guard compares it with its bound)."""
+        return self._part("docs", lambda: load_table(
+            self.spark, self.sf_dir, "documents").count())
+
     @property
-    def text(self) -> Text:
+    def bag(self) -> Text:
         def build():
             d = spread(load_table(self.spark, self.sf_dir, "documents")
                        .select("doc_id", "text"))
-            words = d.select("doc_id",
-                             F.explode(F.split("text", " ")).alias("word"))
-            # the bare (doc_id, word, tf) counts feed df, dl and the
-            # postings, then are dropped: the postings carry tf
-            counts = (words.groupBy("doc_id", "word")
-                      .agg(F.count(F.lit(1)).alias("tf"))
-                      .localCheckpoint(eager=True))
-            try:
-                df = self._hold(counts.groupBy("word").agg(
-                    F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")))
-                dl = self._hold(counts.groupBy("doc_id")
-                                .agg(F.sum("tf").alias("dl")))
-                scal = self._hold(dl.agg(F.sum("dl").alias("total_words"),
-                                         F.count(F.lit(1)).alias("n_docs")))
-                s = scal.first()
-                t = Text(None, df, dl, scal, s.total_words, s.n_docs)
-                tf = self._hold(
-                    counts.join(df.select("word", "df"), "word")
-                          .join(dl, "doc_id")
-                          .select("doc_id", "word", "tf", "df", "dl",
-                                  *t.scalars())
-                          .selectExpr("doc_id", "word", "tf", "df", "dl",
-                                      _bm25_e6_expr(_lit_spark)
-                                      + " AS bm25_e6"))
-            finally:
-                _checkpoint_rdd(counts).unpersist(False)
-            return t._replace(tf=tf)
+            counts = self._hold(
+                d.select("doc_id", F.explode(words()).alias("word"))
+                 .groupBy("doc_id", "word")
+                 .agg(F.count(F.lit(1)).alias("tf")))
+            df = self._hold(counts.groupBy("word").agg(
+                F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")))
+            dl = self._hold(counts.groupBy("doc_id")
+                            .agg(F.sum("tf").alias("dl")))
+            scal = self._hold(dl.agg(F.sum("dl").alias("total_words"),
+                                     F.count(F.lit(1)).alias("n_docs")))
+            s = scal.first()
+            return Text(counts, df, dl, scal, s.total_words, s.n_docs)
+        return self._part("bag", build)
+
+    @property
+    def text(self) -> Text:
+        # the bag first, outside the text lock (see sketches)
+        bag = self.bag
+
+        def build():
+            return bag._replace(tf=self._hold(
+                bag.tf.join(bag.df.select("word", "df"), "word")
+                      .join(bag.dl, "doc_id")
+                      .select("doc_id", "word", "tf", "df", "dl",
+                              *bag.scalars())
+                      .selectExpr("doc_id", "word", "tf", "df", "dl",
+                                  _bm25_e6_expr(_lit_spark)
+                                  + " AS bm25_e6")))
         return self._part("text", build)
 
     def probes(self, col: str, n: int) -> Column:

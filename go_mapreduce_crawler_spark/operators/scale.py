@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dec
 from ..sources.tables import load_table
+from .retrieval_index import index_for
 
 MONEY = "decimal(12,2)"
 SALT = 16
@@ -427,14 +428,13 @@ def q_heavy_hitters_cms(spark, sf_dir):
     whose estimate exceeds 0.1% of total tokens (the exact operator's
     threshold: every true heavy hitter is guaranteed present).
     """
-    d = load_table(spark, sf_dir, "documents")
-    inst = d.select(F.explode(F.split("text", " ")).alias("word"))
-    # Pre-aggregate to word counts FIRST: the 4-row hash explode then
-    # runs over the VOCABULARY, not the token stream (a cell's count is
-    # the sum of its words' counts — identical values, so the oracle is
-    # unchanged).  At 100 TB this is the difference between exploding
-    # 4x the corpus and 4x the vocab.
-    wc = inst.groupBy("word").agg(F.count(F.lit(1)).alias("wcnt"))
+    # The word counts of the bag of words (retrieval_index): the 4-row
+    # hash explode runs over the VOCABULARY, not the token stream (a
+    # cell's count is the sum of its words' counts — identical values,
+    # so the oracle is unchanged).  At 100 TB this is the difference
+    # between exploding 4x the corpus and 4x the vocab.
+    bag = index_for(spark, sf_dir).bag
+    wc = bag.df.select("word", F.col("cf").alias("wcnt"))
     rows = F.array(*[F.lit(i) for i in range(CMS_D)])
     slot = (F.conv(F.substring(F.md5(F.encode(
                 F.concat(F.lit("r"), F.col("row").cast("string"),
@@ -443,11 +443,10 @@ def q_heavy_hitters_cms(spark, sf_dir):
     keyed = (wc.withColumn("row", F.explode(rows))
                .withColumn("slot", slot))
     sketch = keyed.groupBy("row", "slot").agg(F.sum("wcnt").alias("cnt"))
-    total = wc.agg(F.sum("wcnt").alias("total"))
     est = (keyed.join(F.broadcast(sketch), ["row", "slot"])
                 .groupBy("word").agg(F.min("cnt").alias("est_cnt")))
-    return (est.crossJoin(F.broadcast(total))
-               .filter(F.col("est_cnt") * 1000 > F.col("total"))
+    return (est.filter(F.col("est_cnt") * 1000
+                       > F.lit(bag.total_words).cast("long"))
                .select("word", "est_cnt"))
 
 

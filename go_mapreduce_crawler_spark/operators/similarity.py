@@ -35,7 +35,8 @@ import numpy as np
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.vectors import dot, l2_norm
+from ..functions.text import words
+from ..functions.vectors import cosine_sim, dot, l2_norm
 from ..sources.tables import load_table, spread
 from .retrieval_index import (DIM, IVF_CELLS, LSH_BANDS_ANN,
                               N_PLANES, cell_scores_sql, cosine,
@@ -388,7 +389,8 @@ def q_ann_int8(spark, sf_dir):
     re-rank.  At 100 TB the quantized corpus would be a materialized
     column (write-once), making the first stage a pure int8 scan.
     """
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
+    ix = _gate(spark, sf_dir, "ann_int8_rerank")
+    e = ix.vectors.vec.select("vec_id", "embedding", "nrm")
     ex = e.select(F.posexplode("embedding").alias("dim", "xf")) \
           .select("dim", F.abs(F.col("xf").cast("double")).alias("ax"))
     sc_arr = (ex.groupBy("dim").agg(F.max("ax").alias("mx"))
@@ -400,7 +402,6 @@ def q_ann_int8(spark, sf_dir):
                     lambda x, s: F.round(x.cast("double") * s, 0).cast("long"))
     eq = (e.crossJoin(F.broadcast(sc_arr))
            .select("vec_id", "embedding", "nrm", qz.alias("qv")))
-    _gate(spark, sf_dir, "ann_int8_rerank")
     q = F.broadcast(
         eq.filter(F.col("vec_id") % 100 == 0)
         .select(F.col("vec_id").alias("q_id"),
@@ -414,8 +415,8 @@ def q_ann_int8(spark, sf_dir):
              .withColumn("s", s_int)
              .withColumn("crk", F.row_number().over(wc))
              .filter(F.col("crk") <= INT8_CAND))
-    rer = cand.withColumn("cos", F.round(
-        dot("q_vec", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6))
+    rer = cand.withColumn("cos", F.round(F.try_divide(
+        dot("q_vec", "embedding"), F.col("q_nrm") * F.col("nrm")), 6))
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (rer.withColumn("rk", F.row_number().over(w))
                .filter(F.col("rk") <= TOP_K)
@@ -488,8 +489,9 @@ def q_hard_negatives(spark, sf_dir):
                 F.col("nrm").alias("q_nrm")))
     scored = (q.join(e, (F.col("vec_id") != F.col("q_id"))
                      & (F.col("label") != F.col("q_label")))
-               .withColumn("cos", F.round(
-                   dot("q_vec", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6)))
+               .withColumn("cos", F.round(F.try_divide(
+                   dot("q_vec", "embedding"),
+                   F.col("q_nrm") * F.col("nrm")), 6)))
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (scored.withColumn("rk", F.row_number().over(w))
                   .filter(F.col("rk") <= TOP_K)
@@ -1203,7 +1205,7 @@ def q_embedding_dim_budget(spark, sf_dir):
     cols = ["q_id", "vec_id"]
     for d in DIM_BUDGETS:
         qs, es = F.slice("q_vec", 1, d), F.slice("embedding", 1, d)
-        cos = F.round(dot(qs, es) / (l2_norm(qs) * l2_norm(es)), 6)
+        cos = F.round(cosine_sim(qs, es), 6)
         cols.append(cos.alias(f"cos_{d}"))
     scored = pairs.select(*cols)
     for d in DIM_BUDGETS:
@@ -1341,7 +1343,7 @@ def _rag_chunk_vecs(spark, sf_dir):
     # transform runs once per row.
     staged = chunks.select(
         "doc_id", "chunk_idx",
-        F.transform(_token_ngrams(F.split(F.col("sub"), " "), 3),
+        F.transform(_token_ngrams(words("sub"), 3),
                     tok).alias("gs"))
 
     def dim_sum(j):
@@ -1495,17 +1497,17 @@ def q_retrieval_mmr(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    e = _emb(spark, sf_dir).withColumn("nrm", l2_norm("embedding"))
-    _gate(spark, sf_dir, "retrieval_mmr_diversify")
+    e = (_gate(spark, sf_dir, "retrieval_mmr_diversify").vectors.vec
+         .select("vec_id", "embedding", "nrm"))
     q = F.broadcast(
         e.filter(F.col("vec_id") % 100 == 0)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("embedding").alias("q_vec"),
                 F.col("nrm").alias("q_nrm")))
     rel = (q.join(e, F.col("vec_id") != F.col("q_id"))
-            .withColumn("rel_e6", F.floor(
-                dot("q_vec", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")) * 1e6).cast("long")))
+            .withColumn("rel_e6", F.floor(F.try_divide(
+                dot("q_vec", "embedding"), F.col("q_nrm") * F.col("nrm"))
+                * 1e6).cast("long")))
     w = W.partitionBy("q_id").orderBy(F.desc("rel_e6"), F.asc("vec_id"))
     cand = (rel.withColumn("crk", F.row_number().over(w))
                .filter(F.col("crk") <= MMR_C)
@@ -1523,28 +1525,31 @@ def q_retrieval_mmr(spark, sf_dir):
         acc = np.zeros((n, n))
         for d_ in range(m.shape[1]):
             acc += m[:, d_:d_ + 1] * m[None, :, d_]
-        sim_e6 = np.floor(acc / (nrm[:, None] * nrm[None, :]) * 1e6)
-        sim_e6 = sim_e6.astype(np.int64)
-        rel_e6 = pdf["rel_e6"].to_numpy(dtype=np.int64)
+        # a zero vector's similarities are NaN here and NULL in the
+        # oracle (and so is a zero query's rel_e6): MAX skips them, a
+        # NULL score ranks last
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sim_e6 = np.floor(acc / (nrm[:, None] * nrm[None, :]) * 1e6)
+        rel_e6 = [None if pd.isna(r) else int(r) for r in pdf["rel_e6"]]
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         selected: list[int] = []
         out = []
         remaining = list(range(n))
         while remaining and len(selected) < MMR_K:
-            best_i, best_score = None, None
+            score = {}
             for i in remaining:
-                mx = max((int(sim_e6[i, j]) for j in selected),
-                         default=0)
-                score = lam * int(rel_e6[i]) - ilam * mx
-                if (best_score is None or score > best_score
-                        or (score == best_score
-                            and ids[i] < ids[best_i])):
-                    best_i, best_score = i, score
+                sims = [int(sim_e6[i, j]) for j in selected
+                        if not np.isnan(sim_e6[i, j])]
+                mx = max(sims) if sims else None if selected else 0
+                score[i] = (None if rel_e6[i] is None or mx is None
+                            else lam * rel_e6[i] - ilam * mx)
+            # mmr_score DESC NULLS LAST, then vec_id
+            best_i = min(remaining, key=lambda i: (
+                score[i] is None, -(score[i] or 0), ids[i]))
             selected.append(best_i)
             remaining.remove(best_i)
             out.append((int(pdf["q_id"].iloc[0]), int(ids[best_i]),
-                        int(rel_e6[best_i]), int(best_score),
-                        len(selected)))
+                        rel_e6[best_i], score[best_i], len(selected)))
         return pd.DataFrame(out, columns=["q_id", "vec_id", "rel_e6",
                                           "mmr_score", "rk"])
 

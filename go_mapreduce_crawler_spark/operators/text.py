@@ -5,12 +5,11 @@ Python UDFs, so these run at whole-stage-codegen speed and scale linearly
 with document count (narrow transformations, zero shuffles except the
 final stats aggregations).
 
-The BM25 statistics (postings with tf, df, dl and each posting's BM25
-score; per-word df; per-document length; the corpus scalars) are built
-in one place, the retrieval index (``retrieval_index``), once per corpus
-version: q_text_bm25 ranks its postings per document, and
-q_text_bm25_retrieval derives its query terms per request and calls the
-index's bm25 search.
+Text is tokenized by ``functions.text.words``.  The word-count
+operators read the corpus bag of words (tf, df, dl and the scalars) and
+the BM25 postings built once per corpus version in ``retrieval_index``:
+q_text_bm25 ranks the postings per document, and q_text_bm25_retrieval
+derives its query terms per request and calls the index's bm25 search.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import words, words_sql
 from ..sources.tables import load_table
 
 _LN2 = math.log(2)
@@ -100,15 +100,20 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
+def _index(spark, sf_dir):
+    from .retrieval_index import index_for   # it imports this module
+    return index_for(spark, sf_dir)
+
+
 def q_text_stats(spark, sf_dir):
     """Per-document token/char statistics + whitespace token count."""
     d = _docs(spark, sf_dir)
-    words = F.split(F.col("text"), " ")
+    toks = words()
     return d.select(
         "doc_id",
         F.length("text").alias("n_chars_computed"),
-        F.size(words).alias("n_tokens_ws"),
-        F.size(F.array_distinct(words)).alias("n_unique_tokens"),
+        F.size(toks).alias("n_tokens_ws"),
+        F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0)).alias("n_tokens_re"),
     )
 
@@ -121,11 +126,11 @@ def q_text_quality(spark, sf_dir):
     rounded to 6 dp.
     """
     d = _docs(spark, sf_dir)
-    words = F.split(F.col("text"), " ")
-    n = F.size(words)
-    uniq = F.size(F.array_distinct(words))
+    toks = words()
+    n = F.size(toks)
+    uniq = F.size(F.array_distinct(toks))
     sw = F.size(F.array_intersect(
-        F.array_distinct(words),
+        F.array_distinct(toks),
         F.array(*[F.lit(w) for w in STOPWORDS["en"]])))
     mean_wlen = (F.length("text") - (n - 1)) / n     # chars minus spaces
     return d.select(
@@ -145,10 +150,10 @@ def q_text_langid(spark, sf_dir):
     language stopword set|; argmax with fixed preference order.
     """
     d = _docs(spark, sf_dir)
-    words = F.array_distinct(F.split(F.col("text"), " "))
+    toks = F.array_distinct(words())
     hits = {
         lang: F.size(F.array_intersect(
-            words, F.array(*[F.lit(w) for w in sws])))
+            toks, F.array(*[F.lit(w) for w in sws])))
         for lang, sws in STOPWORDS.items()
     }
     best = F.greatest(*hits.values())
@@ -214,7 +219,7 @@ def q_text_ngram_freq(spark, sf_dir):
     shape — map-side partial counts absorb the heavy hitters.
     """
     d = _docs(spark, sf_dir)
-    w = F.split(F.col("text"), " ")
+    w = words()
     n = F.size(w)
     # sliced zip_with, not element_at-in-transform: see dedup._shingles
     bigrams = F.when(n >= 2, F.zip_with(
@@ -230,28 +235,18 @@ def q_text_ngram_freq(spark, sf_dir):
 def q_text_tfidf(spark, sf_dir):
     """Top-3 TF-IDF terms per document (tf * ln((N+1)/(df+1))).
 
-    The classic keyword-extraction / relevance-weighting pass: explode
-    words -> per-(doc, word) tf -> per-word df -> score -> window top-3.
-    Two shuffles (word-count and doc-partitioned top-k); the corpus size
-    N is an aggregated scalar broadcast-joined in (a broadcast of ONE
-    row — never a driver collect).  Heavy-hitter words (stopwords) skew
-    the df aggregation's key distribution, but partial aggregation
-    absorbs them map-side; the per-doc window partitions on doc_id,
-    which is uniform by construction.  Ties broken by (score desc, word
-    asc) for a total order, so the oracle matches exactly.
+    The classic keyword-extraction / relevance-weighting pass over the
+    bag of words' tf and df: one df join and a top-3 window per doc_id
+    (uniform by construction).  Ties broken by (score desc, word asc)
+    for a total order, so the oracle matches exactly.
     """
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    # tf is already distinct on (doc_id, word), so df is a plain count
-    # over it — no COUNT(DISTINCT) Expand shuffle, no second explode of
-    # the corpus.  Cached because both the df branch and the final join
-    # consume it (bounded: one row per (doc, distinct word)).
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")).cache()
-    df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (tf.join(df, "word").crossJoin(F.broadcast(n))
+    ix = _index(spark, sf_dir)
+    bag = ix.bag
+    # N counts NULL-text rows too (the oracle's COUNT(*)); bag.n_docs not
+    n_docs = F.lit(ix.doc_count()).cast("long")
+    scored = (bag.tf.join(bag.df.select("word", "df"), "word")
               .withColumn("tfidf", F.round(
-                  F.col("tf") * F.log((F.col("n_docs") + 1) / (F.col("df") + 1)), 6)))
+                  F.col("tf") * F.log((n_docs + 1) / (F.col("df") + 1)), 6)))
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf"), F.asc("word"))
     return (scored.withColumn("rk", F.row_number().over(w))
@@ -263,24 +258,21 @@ def q_text_inverted_index(spark, sf_dir):
     """Inverted index: word -> sorted posting list of doc_ids (df >= 2).
 
     The retrieval-side core of a dedup/search stack.  One shuffle keyed
-    by word; ``collect_set`` + ``sort_array`` makes the posting list
-    deterministic regardless of task arrival order.  At 100 TB the
+    by word over the bag's distinct (doc, word) pairs; ``sort_array``
+    makes the posting list deterministic regardless of task arrival order.  At 100 TB the
     posting list for a head word is the classic reducer-OOM: real
     systems shard hot words by (word, doc_id range) — same salting
     shape as scale.q_agg_salted — and delta-encode the sorted ids;
     df-band filtering (drop stopword-frequency words) bounds state
     before the heavy groupBy when the downstream consumer allows it.
     """
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id", F.explode(
-        F.array_distinct(F.split("text", " "))).alias("word"))
     # Posting list rides as a comma-joined string — the driver's oracle
     # canonicalizer can't hash list cells, and int→string renders
     # identically in both engines.
-    return (words.groupBy("word")
+    return (_index(spark, sf_dir).bag.tf.groupBy("word")
             .agg(F.count(F.lit(1)).alias("df"),
                  F.concat_ws(",", F.transform(
-                     F.sort_array(F.collect_set("doc_id")),
+                     F.sort_array(F.collect_list("doc_id")),
                      lambda x: x.cast("string"))).alias("postings"))
             .filter(F.col("df") >= 2))
 
@@ -315,21 +307,18 @@ def q_heavy_hitters(spark, sf_dir):
     """Corpus heavy hitters: words above 0.1% relative frequency.
 
     The frequent-items pass every curation pipeline runs (stopword
-    discovery, boilerplate detection): one word-count shuffle whose
-    skewed keys — the heavy hitters themselves — are absorbed map-side
-    by partial aggregation, plus a 1-row total broadcast.  The
+    discovery, boilerplate detection) over the bag's word counts, with
+    the one-row token total broadcast.  The
     threshold is cross-multiplied (cnt·1000 > total) so selection stays
     in exact integer arithmetic at any scale; only the reported
     rel_freq divides.
     """
-    d = _docs(spark, sf_dir)
-    words = d.select(F.explode(F.split("text", " ")).alias("word"))
-    counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-    total = words.agg(F.count(F.lit(1)).alias("total"))
-    return (counts.crossJoin(F.broadcast(total))
-            .filter(F.col("cnt") * 1000 > F.col("total"))
-            .select("word", "cnt",
-                    F.round(F.col("cnt") / F.col("total"), 6).alias("rel_freq")))
+    bag = _index(spark, sf_dir).bag
+    return (bag.df.crossJoin(F.broadcast(bag.scal.select("total_words")))
+            .filter(F.col("cf") * 1000 > F.col("total_words"))
+            .select("word", F.col("cf").alias("cnt"),
+                    F.round(F.col("cf") / F.col("total_words"), 6)
+                     .alias("rel_freq")))
 
 
 def _token_ngrams(w, n: int):
@@ -342,6 +331,17 @@ def _token_ngrams(w, n: int):
         g = F.zip_with(g, F.slice(w, i + 1, F.greatest(ln, F.lit(0))),
                        lambda a, b: F.concat_ws(" ", a, b))
     return F.when(F.size(w) >= n, g).otherwise(F.array().cast("array<string>"))
+
+
+def _bigrams(d, key: str = "doc_id"):
+    """(key, prev, word): every adjacent token pair of each document."""
+    w = words()
+    n = F.size(w)
+    return (d.select(key, F.explode(F.zip_with(
+                F.slice(w, 1, n - 1), F.slice(w, 2, n - 1),
+                lambda a, b: F.struct(a.alias("prev"), b.alias("word"))))
+             .alias("p"))
+             .select(key, "p.prev", "p.word"))
 
 
 def q_text_repetition(spark, sf_dir):
@@ -358,7 +358,7 @@ def q_text_repetition(spark, sf_dir):
     are integer-ratio -> one double division, rounded 6 dp.
     """
     d = _docs(spark, sf_dir)
-    w = F.split(F.col("text"), " ")
+    w = words()
     base = d.select("doc_id", F.size(w).alias("n_tokens"),
                     F.concat(
                         F.transform(_token_ngrams(w, 2),
@@ -409,7 +409,7 @@ def q_text_contamination(spark, sf_dir):
     (shared > 0) — the action list, not the full corpus.
     """
     d = _docs(spark, sf_dir)
-    w = F.split(F.col("text"), " ")
+    w = words()
     grams = d.select("doc_id", F.explode(_token_ngrams(w, CONTAM_N)).alias("g"))
     eval_grams = (grams.filter(F.col("doc_id") % EVAL_MOD == 0)
                   .select("g").distinct())
@@ -440,7 +440,7 @@ def _contam_grams(docs):
     non-empty filter re-evaluates the zip_with gram chain in a Filter
     below the Generate (and below a spread exchange in the streaming
     merge); g is never null, so rows match the inner explode."""
-    w = F.split(F.col("text"), " ")
+    w = words()
     return (docs.select("doc_id",
                         F.explode_outer(_token_ngrams(w, CONTAM_N))
                         .alias("g"))
@@ -563,23 +563,20 @@ def q_text_lm_score(spark, sf_dir):
     bit-identical across engines BY CONSTRUCTION, not by hoping two
     libms round the last ulp the same way near a *1e6 boundary.
 
-    Scale shape: vocab counts are one word-count shuffle; the model
-    joins back by word — broadcast here (bounded vocab), a plain
-    shuffle join when the vocabulary outgrows broadcast.  Doc totals
-    partition on doc_id (uniform).
+    Scale shape: the model is the bag's word counts and token total;
+    it joins back onto the bag's (doc, word, tf) counts by word —
+    broadcast here (bounded vocab), a plain shuffle join when the
+    vocabulary outgrows broadcast.  Doc totals partition on doc_id.
     """
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    total = words.agg(F.count(F.lit(1)).alias("total"))
-    logp = (f"CAST(round(({_ln_det('cnt', _lit_spark)}"
-            f" - {_ln_det('total', _lit_spark)}) * 1e6, 0) AS BIGINT)")
-    model = (words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-             .crossJoin(F.broadcast(total))
+    bag = _index(spark, sf_dir).bag
+    logp = (f"CAST(round(({_ln_det('cf', _lit_spark)}"
+            f" - {_ln_det('total_words', _lit_spark)}) * 1e6, 0) AS BIGINT)")
+    model = (bag.df.select("word", "cf", *bag.scalars())
              .selectExpr("word", f"{logp} AS logp_u"))
-    return (words.join(F.broadcast(model), "word")
+    return (bag.tf.join(F.broadcast(model), "word")
             .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_tokens"),
-                 F.sum("logp_u").alias("sum_logp_u"))
+            .agg(F.sum("tf").alias("n_tokens"),
+                 F.sum(F.col("tf") * F.col("logp_u")).alias("sum_logp_u"))
             .select("doc_id", "n_tokens", "sum_logp_u",
                     F.round(F.col("sum_logp_u") / F.col("n_tokens") / 1e6, 6)
                      .alias("mean_logp")))
@@ -601,22 +598,16 @@ def q_text_bigram_lm_score(spark, sf_dir):
     any corpus where N² < 9.2e18 (N < 3e9 tokens — beyond that, shift
     to DECIMAL ratios).
 
-    Scale shape: bigram counts are one word-bigram-shaped shuffle; the
-    model (distinct bigrams) joins back by (prev, word) — broadcast at
-    test SF, a plain co-partitioned shuffle join at vocabulary scale.
+    Scale shape: bigram counts are one word-bigram-shaped shuffle (the
+    unigram counts and N are the bag's); the model (distinct bigrams)
+    joins back by (prev, word) — broadcast at test SF, a plain
+    co-partitioned shuffle join at vocabulary scale.
     Documents with a single token have no bigram and are excluded (the
     oracle mirrors).
     """
-    d = _docs(spark, sf_dir)
-    w = F.split("text", " ")
-    n = F.size(w)
-    bg = d.select("doc_id", F.explode(F.zip_with(
-        F.slice(w, 1, n - 1), F.slice(w, 2, n - 1),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("word")))).alias("p")) \
-          .select("doc_id", "p.prev", "p.word")
-    words = d.select(F.explode(F.split("text", " ")).alias("word"))
-    uni = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    total = words.agg(F.count(F.lit(1)).alias("N"))
+    bg = _bigrams(_docs(spark, sf_dir))
+    bag = _index(spark, sf_dir).bag
+    uni = bag.df.select("word", F.col("cf").alias("c"))
     bi = bg.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("c_ab"))
     num = "(c_ab * N + c_a * c_b)"
     den = "(2 * c_a * N)"
@@ -625,7 +616,7 @@ def q_text_bigram_lm_score(spark, sf_dir):
     model = (bi.join(uni.select(F.col("word").alias("prev"),
                                 F.col("c").alias("c_a")), "prev")
                .join(uni.select("word", F.col("c").alias("c_b")), "word")
-               .crossJoin(F.broadcast(total))
+               .withColumn("N", F.lit(bag.total_words).cast("long"))
                .selectExpr("prev", "word", f"{logp} AS logp_bi"))
     return (bg.join(F.broadcast(model), ["prev", "word"])
               .groupBy("doc_id")
@@ -657,20 +648,15 @@ def q_text_kneser_ney_score(spark, sf_dir):
     Products stay under 2^63 while N·B < 9.2e18.
 
     Scale shape identical to the JM operator: one bigram-shaped
-    shuffle for counts, model joins back on (prev, word) — broadcast
-    at test SF, co-partitioned at vocabulary scale; the two context-
+    shuffle for counts (unigram counts from the bag of words), model
+    joins back on (prev, word) — broadcast at test SF, co-partitioned
+    at vocabulary scale; the two context-
     diversity relations are vocabulary-sized aggregates of the bigram
     relation.
     """
-    d = _docs(spark, sf_dir)
-    w = F.split("text", " ")
-    n = F.size(w)
-    bg = d.select("doc_id", F.explode(F.zip_with(
-        F.slice(w, 1, n - 1), F.slice(w, 2, n - 1),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("word")))).alias("p")) \
-          .select("doc_id", "p.prev", "p.word")
-    words = d.select(F.explode(F.split("text", " ")).alias("word"))
-    uni = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
+    bg = _bigrams(_docs(spark, sf_dir))
+    uni = (_index(spark, sf_dir).bag.df
+           .select("word", F.col("cf").alias("c")))
     bi = bg.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("c_ab"))
     n1p = bi.groupBy("prev").agg(F.count(F.lit(1)).alias("n1p_a"))
     n1l = bi.groupBy("word").agg(F.count(F.lit(1)).alias("n1l_w"))
@@ -717,7 +703,7 @@ def q_seq_packing(spark, sf_dir):
     d = _docs(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.size(F.split("text", " ")).alias("n_tokens"),
+        F.size(words()).alias("n_tokens"),
         (F.col("doc_id") - F.col("doc_id") % PACK_BUCKET).alias("bkt"))
     bsum = toks.groupBy("bkt").agg(F.sum("n_tokens").alias("s"))
     w_off = (Window.orderBy("bkt")
@@ -815,7 +801,7 @@ def q_tfidf_doc_pairs(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     grams = d.select("doc_id",
-                     F.explode(_token_ngrams(F.split("text", " "), 3))
+                     F.explode(_token_ngrams(words(), 3))
                       .alias("t"))
     tf = grams.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     dfc = (tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
@@ -864,18 +850,17 @@ def q_text_pmi_pairs(spark, sf_dir):
     a raw count, so nothing overflows at any corpus size (the rational
     form N * c_ab would pass 2^63 around N ~ 10^10).
 
-    Scale: doc-distinct words are row-local; the vocabulary floor
-    (df >= 5 — production uses a top-K vocab) bounds the per-doc pair
+    Scale: doc-distinct words and df are the bag's; the vocabulary
+    floor (df >= 5 — production uses a top-K vocab) bounds the per-doc pair
     fan-out to |V ∩ doc|^2; pair counts are one (word_a, word_b)
     shuffle with map-side combine.  c_a/c_b ride the pair rows as
     functional attributes — no second join against the vocabulary.
     """
-    d = _docs(spark, sf_dir)
-    dw = d.select("doc_id", F.explode(
-        F.array_distinct(F.split("text", " "))).alias("word"))
-    dfc = (dw.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-             .filter(F.col("c") >= PMI_DF_MIN))
-    dwf = dw.join(dfc, "word")
+    ix = _index(spark, sf_dir)
+    bag = ix.bag
+    dfc = (bag.df.filter(F.col("df") >= PMI_DF_MIN)
+                 .select("word", F.col("df").alias("c")))
+    dwf = bag.tf.select("doc_id", "word").join(dfc, "word")
     a = dwf.select("doc_id", F.col("word").alias("word_a"),
                    F.col("c").alias("c_a"))
     b = dwf.select("doc_id", F.col("word").alias("word_b"),
@@ -885,12 +870,12 @@ def q_text_pmi_pairs(spark, sf_dir):
               .groupBy("word_a", "word_b", "c_a", "c_b")
               .agg(F.count(F.lit(1)).alias("c_ab"))
               .filter(F.col("c_ab") >= PMI_MIN_COOC))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     pmi = (f"CAST(round(({_ln_det('n_docs', _lit_spark)}"
            f" + {_ln_det('c_ab', _lit_spark)}"
            f" - {_ln_det('c_a', _lit_spark)}"
            f" - {_ln_det('c_b', _lit_spark)}) * 1e6, 0) AS BIGINT)")
-    return (pairs.crossJoin(F.broadcast(n))
+    # N counts every documents row (the oracle's COUNT(*))
+    return (pairs.withColumn("n_docs", F.lit(ix.doc_count()).cast("long"))
                  .selectExpr("word_a", "word_b", "c_a", "c_b", "c_ab",
                              f"{pmi} AS pmi_u"))
 
@@ -921,8 +906,8 @@ def q_remove_boilerplate(spark, sf_dir):
     # anti-join — three plan references, each re-running the segment
     # explode + md5 without a cache
     segs = (d.select("doc_id", F.posexplode(F.expr(
-                f"transform(sequence(0, (size(split(text, ' ')) - 1) div {SEG_WORDS}),"
-                f" i -> array_join(slice(split(text, ' '), i * {SEG_WORDS} + 1,"
+                f"transform(sequence(0, (size({words_sql()}) - 1) div {SEG_WORDS}),"
+                f" i -> array_join(slice({words_sql()}, i * {SEG_WORDS} + 1,"
                 f" {SEG_WORDS}), ' '))")).alias("seg_idx", "seg"))
              .withColumn("dg", F.md5(F.encode("seg", "UTF-8")))
              .cache())
@@ -964,8 +949,8 @@ def q_corpus_line_dedup(spark, sf_dir):
     d = _docs(spark, sf_dir)
     # same 3-reference fanout as q_remove_boilerplate — cache once
     segs = (d.select("doc_id", F.posexplode(F.expr(
-                f"transform(sequence(0, (size(split(text, ' ')) - 1) div {SEG_WORDS}),"
-                f" i -> array_join(slice(split(text, ' '), i * {SEG_WORDS} + 1,"
+                f"transform(sequence(0, (size({words_sql()}) - 1) div {SEG_WORDS}),"
+                f" i -> array_join(slice({words_sql()}, i * {SEG_WORDS} + 1,"
                 f" {SEG_WORDS}), ' '))")).alias("seg_idx", "seg"))
              .withColumn("dg", F.md5(F.encode("seg", "UTF-8")))
              .cache())
@@ -1109,7 +1094,7 @@ def q_text_textrank_keywords(spark, sf_dir):
     Output: (rk, word, rank_e9) — the top-{k} keywords.
     """.format(v=TR_V, it=TR_ITER, d=TR_D, k=TR_TOP)
     d = _docs(spark, sf_dir)
-    w = F.split("text", " ")
+    w = words()
     n = F.size(w)
 
     def offs(k):
@@ -1125,10 +1110,8 @@ def q_text_textrank_keywords(spark, sf_dir):
     pairs = (d.select(F.explode(F.concat(offs(1), offs(2))).alias("p"))
               .select("p.wa", "p.wb")
               .filter(F.col("wa") != F.col("wb")))
-    words = d.select(F.explode(w).alias("word"))
-    vocab = (words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-                  .orderBy(F.desc("cnt"), "word").limit(TR_V)
-                  .select("word"))
+    vocab = (_index(spark, sf_dir).bag.df
+             .orderBy(F.desc("cf"), "word").limit(TR_V).select("word"))
     wedges = (pairs.join(F.broadcast(vocab.select(
                   F.col("word").alias("wa"))), "wa")
                    .join(F.broadcast(vocab.select(
@@ -1242,23 +1225,21 @@ def q_text_oov_rate(spark, sf_dir):
     usually non-target-language or binary junk, and predicts token
     inflation after BPE).
 
-    The vocabulary ranking is sort+limit over the COMPACTED word-count
-    relation — Spark compiles it to TakeOrderedAndProject (per-partition
+    The vocabulary ranking is sort+limit over the bag's word counts —
+    Spark compiles it to TakeOrderedAndProject (per-partition
     top-k, then a k-row merge on the driver — never a global sort), and
     the (cnt DESC, word ASC) total order makes the boundary
     deterministic under count ties.  The k-row vocabulary broadcasts
-    back onto the token stream; per-doc aggregation partitions on
-    doc_id.
+    back onto the bag's (doc, word) counts; per-doc aggregation
+    partitions on doc_id.
     """.format(k=VOCAB_K)
-    d = _docs(spark, sf_dir)
-    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    vocab = (words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-                  .orderBy(F.desc("cnt"), F.asc("word")).limit(VOCAB_K)
+    bag = _index(spark, sf_dir).bag
+    vocab = (bag.df.orderBy(F.desc("cf"), F.asc("word")).limit(VOCAB_K)
                   .select("word", F.lit(1).alias("in_vocab")))
-    return (words.join(F.broadcast(vocab), "word", "left")
+    return (bag.tf.join(F.broadcast(vocab), "word", "left")
                  .groupBy("doc_id")
-                 .agg(F.count(F.lit(1)).alias("n_tokens"),
-                      F.sum(F.when(F.col("in_vocab").isNull(), 1)
+                 .agg(F.sum("tf").alias("n_tokens"),
+                      F.sum(F.when(F.col("in_vocab").isNull(), F.col("tf"))
                              .otherwise(0)).alias("n_oov"))
                  .select("doc_id", "n_tokens", "n_oov",
                          F.round(F.col("n_oov") / F.col("n_tokens"), 6)
@@ -1328,7 +1309,7 @@ def q_text_ngram_novelty(spark, sf_dir):
     d = _docs(spark, sf_dir)
     grams = (d.select("doc_id",
                       F.explode(F.array_distinct(
-                          _token_ngrams(F.split("text", " "), 3)))
+                          _token_ngrams(words(), 3)))
                        .alias("g"))
               .select("doc_id", F.md5("g").alias("h"))
               .cache())   # feeds the first-owner agg AND the join back
@@ -1355,7 +1336,7 @@ def q_doc_length_histogram(spark, sf_dir):
     |sources| x |buckets| rows.
     """
     d = _docs(spark, sf_dir)
-    n = F.size(F.split("text", " "))
+    n = F.size(words())
     return (d.select("source", n.alias("n_tokens"))
              .selectExpr("source", "n_tokens",
                          "length(bin(n_tokens)) - 1 AS log2_bucket")
@@ -1376,10 +1357,10 @@ def q_text_zipf_slope(spark, sf_dir):
     quality_perplexity_buckets: it audits the DISTRIBUTION, not the
     documents.
 
-    Scale + determinism: term counts are one partial+final agg; the
-    head is pre-pruned with an orderBy().limit() — a
-    TakeOrderedAndProject, a per-partition top-100 merged on the
-    driver side of the exchange, never a full sort — so the
+    Scale + determinism: term counts are the bag's; the head is
+    pre-pruned with an orderBy().limit() — a TakeOrderedAndProject, a
+    per-partition top-100 merged on the driver side of the exchange,
+    never a full sort — so the
     row_number window (which has no partitionBy) ranks a 100-row
     relation, not the whole vocabulary (r06 advice fix).  Both
     ln's go through _ln_det on INTEGER rank/count and quantize to e6
@@ -1389,9 +1370,8 @@ def q_text_zipf_slope(spark, sf_dir):
     floored at 1e-6 (the regr_multiple_ols recipe applied to a
     log-log fit).
     """
-    d = _docs(spark, sf_dir)
-    counts = (d.select(F.explode(F.split("text", " ")).alias("w"))
-               .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
+    counts = (_index(spark, sf_dir).bag.df
+              .select(F.col("word").alias("w"), F.col("cf").alias("cnt")))
     top = counts.orderBy(F.desc("cnt"), "w").limit(ZIPF_TOP)
     rk = F.row_number().over(W.orderBy(F.desc("cnt"), "w"))
     head = top.withColumn("rank", rk)
@@ -1432,7 +1412,7 @@ def q_corpus_heaps_curve(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     toks = d.select((F.col("doc_id") % HEAPS_SHARDS).alias("shard"),
-                    F.explode(F.split("text", " ")).alias("w"))
+                    F.explode(words()).alias("w"))
     per_shard = toks.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_tokens"))
     firsts = (toks.groupBy("w").agg(F.min("shard").alias("fs"))
@@ -1466,7 +1446,7 @@ def q_eval_auc_stopword(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     hits = F.size(F.array_intersect(
-        F.array_distinct(F.split("text", " ")),
+        F.array_distinct(words()),
         F.array(*[F.lit(w) for w in STOPWORDS["en"]])))
     per = (d.select(hits.alias("s"),
                     (F.col("lang") == "en").cast("long").alias("y"))
@@ -1504,7 +1484,7 @@ def q_eval_calibration_bins(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     hits = F.size(F.array_intersect(
-        F.array_distinct(F.split("text", " ")),
+        F.array_distinct(words()),
         F.array(*[F.lit(w) for w in STOPWORDS["en"]])))
     return (d.select(hits.alias("score_bin"),
                      (F.col("lang") == "en").cast("long").alias("y"))
@@ -1540,7 +1520,7 @@ def q_chunk_content_defined(spark, sf_dir):
     """.format(m=CDC_MOD, k=CDC_TOP)
     d = _docs(spark, sf_dir)
     w = d.select("doc_id",
-                 F.posexplode(F.split("text", " ")).alias("pos", "w"))
+                 F.posexplode(words()).alias("pos", "w"))
     is_b = (F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10)
             .cast("long") % CDC_MOD == 0).cast("int")
     win = (W.partitionBy("doc_id").orderBy("pos")
@@ -1632,7 +1612,7 @@ def q_text_collocations_llr(spark, sf_dir):
     # 2.04 -> 2.35s — the added exchange outweighs parallelizing the
     # one ~0.4s serial explode at this SF; left as the scan's splits.)
     d = _docs(spark, sf_dir)
-    w = F.split("text", " ")
+    w = words()
     n = F.size(w)
     bg = d.select(F.explode(F.zip_with(
         F.slice(w, 1, n - 1), F.slice(w, 2, n - 1),
@@ -1704,8 +1684,8 @@ def q_quality_adaptive_threshold(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     score = F.expr(
-        "CAST((size(array_distinct(split(text, ' '))) * 1000)"
-        " DIV size(split(text, ' ')) AS BIGINT)")
+        f"CAST((size(array_distinct({words_sql()})) * 1000)"
+        f" DIV size({words_sql()}) AS BIGINT)")
     hist = (d.select("source", score.alias("score"))
             .groupBy("source", "score")
             .agg(F.count(F.lit(1)).alias("cnt")))
@@ -2664,7 +2644,7 @@ def q_text_keyphrase_rake(spark, sf_dir):
     d = _docs(spark, sf_dir)
     sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     toks = (d.select("doc_id",
-                     F.posexplode(F.split(F.lower("text"), " "))
+                     F.posexplode(words(F.lower("text")))
                      .alias("pos", "w"))
              .withColumn("is_stop", F.array_contains(sw, F.col("w"))))
     grp = F.sum(F.col("is_stop").cast("int")).over(
@@ -2678,13 +2658,13 @@ def q_text_keyphrase_rake(spark, sf_dir):
                        lambda s: s["w"]), " ").alias("phrase"),
                    F.count(F.lit(1)).alias("plen"))
               .filter(F.col("plen") <= RAKE_MAX_PHRASE))
-    pw = ph.select("plen", F.explode(F.split("phrase", " ")).alias("w"))
+    pw = ph.select("plen", F.explode(words("phrase")).alias("w"))
     ws = (pw.groupBy("w")
             .agg(F.expr("CAST(CAST(SUM(plen) AS DECIMAL(38,0)) * 1000000"
                         " DIV COUNT(*) AS BIGINT)").alias("wscore_e6")))
     pu = ph.groupBy("phrase").agg(F.count(F.lit(1)).alias("n_occurrences"))
     psc = (pu.select("phrase", "n_occurrences",
-                     F.explode(F.split("phrase", " ")).alias("w"))
+                     F.explode(words("phrase")).alias("w"))
              .join(ws, "w")
              .groupBy("phrase", "n_occurrences")
              .agg(F.sum("wscore_e6").cast("long").alias("score_e6")))
@@ -2754,7 +2734,7 @@ def q_text_word_burstiness(spark, sf_dir):
     """.format(k=BURST_TOP)
     d = _docs(spark, sf_dir)
     tf = (d.select("doc_id",
-                   F.explode(F.split(F.lower("text"), " ")).alias("w"))
+                   F.explode(words(F.lower("text"))).alias("w"))
            .groupBy("doc_id", "w")
            .agg(F.count(F.lit(1)).alias("c")))
     stats = (tf.groupBy("w")

@@ -60,6 +60,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from ..functions.exact import ts_day, ts_hour
+from ..functions.text import words
 
 
 def stream_running_totals(events: DataFrame) -> DataFrame:
@@ -492,7 +493,7 @@ def stream_inverted_index(docs: DataFrame, state_dir: str,
         # partitioning (_keyed_merge).
         g = (spread(batch.select("doc_id", "text"))
              .select("doc_id", F.explode_outer(
-                 _token_ngrams(F.split("text", " "), 3)).alias("t"))
+                 _token_ngrams(words(), 3)).alias("t"))
              .filter(F.col("t").isNotNull())
              .select("doc_id", F.coalesce("t", F.lit("")).alias("t")))
         return (g.groupBy("t", "doc_id")
@@ -923,7 +924,7 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     from ..operators.dedup import SPAN_N
     from ..sources.tables import spread
 
-    w = F.split("text", " ")
+    w = words()
     grams = F.when(
         F.size(w) >= SPAN_N,
         F.transform(

@@ -23,11 +23,13 @@ def test_exact_jaccard_guard_fires_on_oversized_corpus(spark):
         _enforce_exact_pair_bound)
 
     small = spark.range(10).withColumnRenamed("id", "doc_id")
-    _enforce_exact_pair_bound(small, "dedup_jaccard_pairs", max_docs=10)
+    _enforce_exact_pair_bound(small.count(), "dedup_jaccard_pairs",
+                              max_docs=10)
 
     big = spark.range(11).withColumnRenamed("id", "doc_id")
     with pytest.raises(ValueError, match="sample bound"):
-        _enforce_exact_pair_bound(big, "dedup_jaccard_pairs", max_docs=10)
+        _enforce_exact_pair_bound(big.count(), "dedup_jaccard_pairs",
+                                  max_docs=10)
 
 
 def test_exact_jaccard_ops_still_run_and_guard_is_wired(spark):

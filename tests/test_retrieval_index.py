@@ -214,7 +214,7 @@ def test_concurrent_first_requests_build_once(spark, corpus, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert calls == Counter({"seeds": 1, "vectors": 1, "sketches": 1,
-                             "text": 1})
+                             "bag": 1, "text": 1})
     with _con(corpus) as con:
         for i, kind in enumerate(kinds):
             assert not isinstance(results[i], Exception), results[i]
@@ -295,3 +295,21 @@ def test_knn_pandas_zero_query_and_corpus_vectors(spark, corpus):
     assert [n for _, n, _ in zero] == sorted(i for i in ids if i != 0)[:len(zero)]
     assert zero and all(c is None for _, _, c in zero)
     assert not any(r.neighbor_id == 1 for r in rows if r.q_id != 0)
+
+
+@pytest.mark.parametrize("kind", ("hard_negative_mining", "ann_int8_rerank",
+                                  "retrieval_mmr_diversify",
+                                  "embedding_dim_budget_eval"))
+def test_scorers_zero_query_and_corpus_vectors(spark, corpus, kind):
+    """vec_id 0 (a query) and vec_id 1 (a corpus vector) set to all
+    zeros: no DIVIDE_BY_ZERO under ANSI, and each scorer matches its
+    oracle (a zero vector's cosine is NULL and ranks last)."""
+    emb = os.path.join(corpus, "embeddings.parquet")
+    t = pq.read_table(emb)
+    ids = t.column("vec_id").to_pylist()
+    vecs = [[0.0] * len(v) if i in (0, 1) else v
+            for i, v in zip(ids, t.column("embedding").to_pylist())]
+    _rewrite(emb, t.set_column(t.schema.get_field_index("embedding"),
+                               t.schema.field("embedding"),
+                               pa.array(vecs, t.schema.field("embedding").type)))
+    assert not _match(spark, corpus, kind)
