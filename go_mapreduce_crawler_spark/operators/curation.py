@@ -786,22 +786,22 @@ def _unigram_train(spark, sf_dir, v: int = UNIG_V,
     # and REGRESSED — 31-9.8k distinct words over 32 round-robin
     # partitions is pure task overhead per EM round; kept at the
     # data-sized shuffle partitioning.)
-    words = _unigram_words(spark, sf_dir, chunked)
+    dw = _unigram_words(spark, sf_dir, chunked)
     if chunked:
-        words = words.persist()
+        dw = dw.persist()
     # Loud unroll-bound guard (r07 ADVICE item 1): UNIG_MAXW bounds the
     # ORACLE's unrolled DP only — the Spark kernels are unbounded — so
     # a corpus word longer than the bound would silently vanish from
     # the oracle's usage counts and the apply/mixture inner joins.
     # Fail the query explicitly instead (one cheap agg; the driver
     # records an honest `err`, never a silent divergence).
-    maxw = words.agg(F.max(F.length("w"))).collect()[0][0] or 0
+    maxw = dw.agg(F.max(F.length("w"))).collect()[0][0] or 0
     if maxw > UNIG_MAXW:
         raise ValueError(
             f"corpus max word length {maxw} exceeds UNIG_MAXW="
             f"{UNIG_MAXW}; raise the oracle unroll bound before "
             "training on this corpus")
-    cand = (words
+    cand = (dw
             .select("w", "c",
                     F.explode(F.sequence(F.lit(1), F.length("w")))
                      .alias("s"))
@@ -821,7 +821,7 @@ def _unigram_train(spark, sf_dir, v: int = UNIG_V,
     for _ in range(rounds):
         costs = _unig_costs(vocab)
         usage = {r.piece: r.usage for r in
-                 (words.select("w", "c")
+                 (dw.select("w", "c")
                        .mapInPandas(_viterbi_kernel(costs),
                                     "piece string, usage long")
                        .groupBy("piece")
@@ -831,8 +831,8 @@ def _unigram_train(spark, sf_dir, v: int = UNIG_V,
                  + [(p, max(usage.get(p, 0), 1)) for (p, _) in vocab
                     if len(p) == 1])
     if chunked:
-        words.unpersist()
-    return words, vocab
+        dw.unpersist()
+    return dw, vocab
 
 
 def _viterbi_len_kernel(costs):

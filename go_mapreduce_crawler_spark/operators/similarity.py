@@ -1540,7 +1540,7 @@ def q_retrieval_mmr(spark, sf_dir):
             for i in remaining:
                 sims = [int(sim_e6[i, j]) for j in selected
                         if not np.isnan(sim_e6[i, j])]
-                mx = max(sims) if sims else None if selected else 0
+                mx = max(sims) if sims else (None if selected else 0)
                 score[i] = (None if rel_e6[i] is None or mx is None
                             else lam * rel_e6[i] - ilam * mx)
             # mmr_score DESC NULLS LAST, then vec_id

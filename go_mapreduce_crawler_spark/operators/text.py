@@ -259,8 +259,9 @@ def q_text_inverted_index(spark, sf_dir):
 
     The retrieval-side core of a dedup/search stack.  One shuffle keyed
     by word over the bag's distinct (doc, word) pairs; ``sort_array``
-    makes the posting list deterministic regardless of task arrival order.  At 100 TB the
-    posting list for a head word is the classic reducer-OOM: real
+    makes the posting list deterministic regardless of task arrival
+    order.  At 100 TB the posting list for a head word is the classic
+    reducer-OOM: real
     systems shard hot words by (word, doc_id range) — same salting
     shape as scale.q_agg_salted — and delta-encode the sorted ids;
     df-band filtering (drop stopword-frequency words) bounds state
@@ -650,9 +651,8 @@ def q_text_kneser_ney_score(spark, sf_dir):
     Scale shape identical to the JM operator: one bigram-shaped
     shuffle for counts (unigram counts from the bag of words), model
     joins back on (prev, word) — broadcast at test SF, co-partitioned
-    at vocabulary scale; the two context-
-    diversity relations are vocabulary-sized aggregates of the bigram
-    relation.
+    at vocabulary scale; the two context-diversity relations are
+    vocabulary-sized aggregates of the bigram relation.
     """
     bg = _bigrams(_docs(spark, sf_dir))
     uni = (_index(spark, sf_dir).bag.df
@@ -1360,9 +1360,9 @@ def q_text_zipf_slope(spark, sf_dir):
     Scale + determinism: term counts are the bag's; the head is
     pre-pruned with an orderBy().limit() — a TakeOrderedAndProject, a
     per-partition top-100 merged on the driver side of the exchange,
-    never a full sort — so the
-    row_number window (which has no partitionBy) ranks a 100-row
-    relation, not the whole vocabulary (r06 advice fix).  Both
+    never a full sort — so the row_number window (which has no
+    partitionBy) ranks a 100-row relation, not the whole vocabulary
+    (r06 advice fix).  Both
     ln's go through _ln_det on INTEGER rank/count and quantize to e6
     ints ONCE per row, so all OLS moments are exact integer sums in
     DECIMAL(38,0) — order-independent — and the slope/intercept are
